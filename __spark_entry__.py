@@ -14553,866 +14553,368 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_behavioral_features(spark, SF0001)
 
 
+# The query registry: one row per entry, (name, query function, DuckDB
+# oracle SQL or None, timed by bench.py). Row order is ``queries()`` order,
+# and it is deliberate: the external driver hash-checks the FIRST 50 rows
+# against their oracles, so the head holds oracle-backed entries from many
+# operator families. Entries without an oracle (approximate, env-seeded or sketch
+# outputs) are executed but not hash-checked; attest.py reports them as
+# ROWS-ONLY. Adding an entry means adding one row here.
+REGISTRY = (
+    # -- the external driver's hash-check window: the first 50 rows --
+    ("mann_kendall", q_mann_kendall, _MANN_KENDALL_SQL, True),
+    ("char_entropy", q_char_entropy, _CHAR_ENTROPY_SQL, True),
+    ("qini_curve", q_qini_curve, _QINI_SQL, True),
+    ("gesd_outliers", q_gesd_outliers, _gesd_sql(), True),
+    ("seasonal_esd", q_seasonal_esd, _gesd_sql(r0=_SESD_R0, x_name="residual"), True),
+    ("best_changepoint", q_best_changepoint, _BEST_CHANGEPOINT_SQL, True),
+    ("attribution_position", q_attribution_position, _ATTRIBUTION_POSITION_SQL, True),
+    ("mde_power", q_mde_power, _mde_power_sql(), True),
+    ("ewma", q_ewma, _EWMA_SQL, True),
+    ("winsorize", q_winsorize, _WINSORIZE_SQL, True),
+    ("decontaminate", q_decontaminate, _DECONTAMINATE_SQL, True),
+    ("redact_pii", q_redact_pii, _REDACT_PII_SQL, True),
+    ("token_pmi", q_token_pmi, _TOKEN_PMI_SQL, True),
+    ("pagerank", q_pagerank, _PAGERANK_SQL, True),
+    ("kcore", q_kcore, _KCORE_SQL, True),
+    ("survival_curve", q_survival_curve, _SURVIVAL_SQL, True),
+    ("holt_winters", q_holt_winters, _HW_SQL, True),
+    ("pit_join", q_pit_join, _PIT_JOIN_SQL, True),
+    ("benford_mad", q_benford_mad, _BENFORD_MAD_SQL, True),
+    ("k_anonymity", q_k_anonymity, _K_ANONYMITY_SQL, True),
+    ("scd2_history", q_scd2_history, _SCD2_SQL, True),
+    ("time_decay_sum", q_time_decay_sum, _TIME_DECAY_SQL, True),
+    ("bloom_semi_join", q_bloom_semi_join, _BLOOM_SEMI_SQL, True),
+    ("mutual_information", q_mutual_information, _MUTUAL_INFO_SQL, True),
+    ("best_threshold_recall", q_best_threshold_recall, _BEST_THRESHOLD_RECALL_SQL, False),
+    ("session_agg", q_session_agg, _SESSION_AGG_SQL, True),
+    ("time_bucket_rollup", q_time_bucket_rollup, _TIME_BUCKET_SQL, True),
+    ("dedup_keep_first", q_dedup_keep_first, _DEDUP_KEEP_FIRST_SQL, True),
+    ("full_outer_join", q_full_outer_join, _FULL_OUTER_SQL, False),
+    ("ntile_deciles", q_ntile_deciles, _NTILE_SQL, False),
+    ("ks_drift", q_ks_drift, _KS_DRIFT_SQL, True),
+    ("benford_profile", q_benford_profile, _BENFORD_SQL, True),
+    ("dedup_keep_best", q_dedup_keep_best, _DEDUP_KEEP_BEST_SQL, False),
+    ("lift_table", q_lift_table, _LIFT_TABLE_SQL, False),
+    ("asof_join_forward", q_asof_join_forward, _ASOF_FWD_SQL, False),
+    ("chi2_drift", q_chi2_drift, _CHI2_DRIFT_SQL, False),
+    ("drift_report", q_drift_report, _DRIFT_REPORT_SQL, True),
+    ("calibration_table", q_calibration_table, _CALIBRATION_SQL, False),
+    ("seasonal_adjust", q_seasonal_adjust, _SEASONAL_SQL, True),
+    ("target_encode_expanding", q_target_encode_expanding, _TE_EXPANDING_SQL, True),
+    ("quality_filter", q_quality_filter, _QUALITY_FILTER_SQL, True),
+    ("unigram_logprob", q_unigram_logprob, _UNIGRAM_LP_SQL, True),
+    ("rolling_quantiles", q_rolling_quantiles, _ROLLING_Q_SQL, True),
+    ("stratified_sample", q_stratified_sample, _STRATIFIED_SQL, True),
+    ("rfm_segment", q_rfm_segment, _RFM_SQL, True),
+    ("behavior_mart", q_behavior_mart, _BEHAVIOR_MART_SQL, True),
+    ("hodges_lehmann", q_hodges_lehmann, _HODGES_LEHMANN_SQL, True),
+    ("mad_control_limits", q_mad_control_limits, _MAD_CONTROL_SQL, True),
+    ("session_merge_late", q_session_merge_late, _SESSION_MERGE_SQL, True),
+    ("windowed_distinct_exact", q_windowed_distinct_exact, _WINDOWED_DISTINCT_SQL, True),
+    # -- the tail, audited by attest.py --
+    ("behavioral_features", q_behavioral_features, _BEHAVIORAL_SQL, True),
+    ("time_bounded_features", q_time_bounded_features, _TIME_BOUNDED_SQL, True),
+    ("sliding_sequence", q_sliding_sequence, _SLIDING_SEQ_SQL, True),
+    ("window_rank_suite", q_window_rank_suite, _WINDOW_RANK_SQL, True),
+    ("chunked_expanding_sum", q_chunked_expanding_sum, _CHUNKED_EXPANDING_SQL, True),
+    ("groupby_agg", q_groupby_agg, _GROUPBY_AGG_SQL, True),
+    ("left_join", q_left_join, _LEFT_JOIN_SQL, True),
+    ("target_encode", q_target_encode, _TARGET_ENCODE_SQL, True),
+    ("time_split", q_time_split, _TIME_SPLIT_SQL, True),
+    ("filter_project", q_filter_project, _FILTER_PROJECT_SQL, False),
+    ("language_census", q_language_census, _language_census_sql(), True),
+    ("winnow_fingerprints", q_winnow_fingerprints, _WINNOW_SQL, True),
+    ("hurst_exponent", q_hurst_exponent, _HURST_SQL, True),
+    ("diff_in_diff", q_diff_in_diff, _DID_SQL, True),
+    ("pq_topk", q_pq_topk, _PQ_TOPK_SQL, True),
+    ("ivf_pq_topk", q_ivf_pq_topk, _IVF_PQ_TOPK_SQL, True),
+    ("sliding_distinct", q_sliding_distinct, _SLIDING_DISTINCT_SQL, True),
+    ("attribution_markov", q_attribution_markov, _ATTRIBUTION_MARKOV_SQL, True),
+    ("dispersion_index", q_dispersion_index, _DISPERSION_SQL, True),
+    ("psi_timeline", q_psi_timeline, _PSI_TIMELINE_SQL, True),
+    ("fraud_feature_pipeline", q_fraud_feature_pipeline, _FRAUD_PIPELINE_SQL, True),
+    ("score_events", q_score_events, _SCORE_EVENTS_SQL, False),
+    ("grouping_sets", q_grouping_sets, _GROUPING_SETS_SQL, False),
+    ("confusion_metrics", q_confusion_metrics, _CONFUSION_SQL, False),
+    ("threshold_sweep", q_threshold_sweep, _SWEEP_SQL, True),
+    ("roc_auc", q_roc_auc, _ROC_AUC_SQL, True),
+    ("pr_auc", q_pr_auc, _PR_AUC_SQL, True),
+    ("best_threshold", q_best_threshold, _BEST_THRESHOLD_SQL, False),
+    ("asof_join", q_asof_join, _ASOF_SQL, True),
+    ("sessionize", q_sessionize, _SESSIONIZE_SQL, True),
+    ("revenue_by_nation", q_revenue_by_nation, _REVENUE_NATION_SQL, True),
+    ("pricing_summary", q_pricing_summary, _PRICING_SUMMARY_SQL, True),
+    ("semi_anti_join", q_semi_anti_join, _SEMI_ANTI_SQL, False),
+    ("resample_ffill", q_resample_ffill, _RESAMPLE_SQL, False),
+    ("exact_dedup", q_exact_dedup, _EXACT_DEDUP_SQL, True),
+    ("text_features", q_text_features, _text_features_sql(), True),
+    ("gini_gain", q_gini_gain, _GINI_GAIN_SQL, True),
+    ("discount_elasticity", q_discount_elasticity, _ELASTICITY_SQL, True),
+    ("cumulative_hazard", q_cumulative_hazard, _CUMHAZ_SQL, True),
+    ("snapshot_diff", q_snapshot_diff, _SNAPSHOT_DIFF_SQL, True),
+    ("price_dispersion", q_price_dispersion, _PRICE_DISPERSION_SQL, True),
+    ("psi_drift", q_psi_drift, _PSI_DRIFT_SQL, True),
+    ("funnel", q_funnel, _FUNNEL_SQL, True),
+    ("gini", q_gini, _GINI_SQL, True),
+    ("best_threshold_cost", q_best_threshold_cost, _BEST_THRESHOLD_COST_SQL, False),
+    ("range_join_count", q_range_join_count, _RANGE_JOIN_SQL, True),
+    ("group_quantiles", q_group_quantiles, _GROUP_QUANTILES_SQL, True),
+    ("robust_zscore", q_robust_zscore, _ROBUST_Z_SQL, True),
+    ("brown_forsythe", q_brown_forsythe, _BROWN_FORSYTHE_SQL, True),
+    ("sharpe_sortino", q_sharpe_sortino, _SHARPE_SQL, True),
+    ("kyle_lambda", q_kyle_lambda, _KYLE_SQL, True),
+    ("garch_variance", q_garch_variance, _GARCH_SQL, True),
+    ("pk_candidates", q_pk_candidates, _PK_CANDIDATES_SQL, True),
+    ("freshness_lag", q_freshness_lag, _FRESHNESS_SQL, True),
+    ("hapax_stats", q_hapax_stats, _HAPAX_SQL, True),
+    ("heaps_law", q_heaps_law, _HEAPS_SQL, True),
+    ("ljung_box", q_ljung_box, _LJUNG_SQL, True),
+    ("runs_test", q_runs_test, _RUNS_SQL, True),
+    ("srm_check", q_srm_check, _SRM_SQL, True),
+    ("cuped", q_cuped, _CUPED_SQL, True),
+    ("assortativity", q_assortativity, _ASSORT_SQL, True),
+    ("benford_second_digit", q_benford_second_digit, _BENFORD2_SQL, True),
+    ("domain_kl", q_domain_kl, _DOMAIN_KL_SQL, True),
+    ("theta_forecast", q_theta_forecast, _THETA_SQL, True),
+    ("window_funnel", q_window_funnel, _WINDOW_FUNNEL_SQL, True),
+    ("wavelet_energy", q_wavelet_energy, _WAVELET_SQL, True),
+    ("quantize_audit", q_quantize_audit, _QUANTIZE_SQL, True),
+    ("rolling_skew_kurt", q_rolling_skew_kurt, _SKEW_KURT_SQL, True),
+    ("record_linkage", q_record_linkage, _LINKAGE_SQL, True),
+    ("record_linkage_fine", q_record_linkage_fine, _LINKAGE_FINE_SQL, True),
+    ("record_linkage_scaled", q_record_linkage_scaled, _LINKAGE_SCALED_SQL, True),
+    ("spearman_corr", q_spearman_corr, _SPEARMAN_SQL, True),
+    ("kruskal_wallis", q_kruskal_wallis, _KRUSKAL_SQL, True),
+    ("welch_ttest", q_welch_ttest, _WELCH_SQL, True),
+    ("vwap_bars", q_vwap_bars, _VWAP_SQL, True),
+    ("rolling_beta", q_rolling_beta, _ROLLING_BETA_SQL, True),
+    ("t_closeness", q_t_closeness, _T_CLOSENESS_SQL, True),
+    ("referential_integrity", q_referential_integrity, _REF_INTEGRITY_SQL, True),
+    ("readability", q_readability, _READABILITY_SQL, True),
+    ("seasonal_decompose", q_seasonal_decompose, _SEASONAL_DECOMP_SQL, True),
+    ("forecast_accuracy", q_forecast_accuracy, _FORECAST_ACC_SQL, True),
+    ("residual_anomaly", q_residual_anomaly, _RESIDUAL_ANOMALY_SQL, True),
+    ("rule_census", q_rule_census, _rule_census_sql(), True),
+    ("decile_migration", q_decile_migration, _DECILE_MIGRATION_SQL, True),
+    ("retrieval_metrics", q_retrieval_metrics, _retrieval_metrics_sql(), True),
+    ("var_es", q_var_es, _VAR_ES_SQL, True),
+    ("twap", q_twap, _TWAP_SQL, True),
+    ("ohlc_bars", q_ohlc_bars, _OHLC_SQL, True),
+    ("match_pattern", q_match_pattern, _MATCH_PATTERN_SQL, True),
+    ("cohort_ltv", q_cohort_ltv, _COHORT_LTV_SQL, True),
+    ("heavy_hitters", q_heavy_hitters, _HEAVY_HITTERS_SQL, True),
+    ("sprt_decision", q_sprt_decision, _sprt_sql(), True),
+    ("transition_entropy", q_transition_entropy, _TRANSITION_ENTROPY_SQL, True),
+    ("embedding_near_dup", q_embedding_near_dup, _EMB_NEAR_DUP_SQL, False),
+    ("kalman_smooth", q_kalman_smooth, _KALMAN_SQL, True),
+    ("croston_forecast", q_croston, _CROSTON_SQL, True),
+    ("page_hinkley", q_page_hinkley, _PAGE_HINKLEY_SQL, True),
+    ("abc_classification", q_abc_classification, _ABC_SQL, True),
+    ("trimmed_mean", q_trimmed_mean, _TRIMMED_MEAN_SQL, True),
+    ("grouped_auc", q_grouped_auc, _GROUPED_AUC_SQL, True),
+    ("supplier_concentration", q_supplier_concentration, _SUPPLIER_CONC_SQL, True),
+    ("order_backlog", q_order_backlog, _ORDER_BACKLOG_SQL, True),
+    ("fulfillment_latency", q_fulfillment_latency, _FULFILLMENT_SQL, True),
+    ("wasserstein_drift", q_wasserstein_drift, _WASSERSTEIN_SQL, True),
+    ("zipf_slope", q_zipf_slope, _ZIPF_SQL, True),
+    ("containment_pairs", q_containment_pairs, _CONTAINMENT_SQL, True),
+    ("woe_encode", q_woe_encode, _WOE_SQL, True),
+    ("asof_join_tolerance", q_asof_join_tolerance, _ASOF_TOL_SQL, False),
+    ("bm25_search", q_bm25_search, _BM25_SQL, True),
+    ("pct_rank_pandas", q_pct_rank_pandas, _PCT_RANK_SQL, True),
+    ("first_flags", q_first_flags, _FIRST_FLAGS_SQL, False),
+    ("padded_sequence", q_padded_sequence, _PADDED_SEQ_SQL, False),
+    ("last_known_value", q_last_known_value, _LAST_KNOWN_SQL, False),
+    ("value_range_window", q_value_range_window, _VALUE_RANGE_SQL, False),
+    ("null_profile", q_null_profile, _null_profile_sql(), False),
+    ("top_k", q_top_k, _TOP_K_SQL, True),
+    ("group_describe", q_group_describe, _GROUP_DESCRIBE_SQL, False),
+    ("numeric_profile", q_numeric_profile, _numeric_profile_sql(), False),
+    ("imputation", q_imputation, _IMPUTATION_SQL, False),
+    ("risk_bucket", q_risk_bucket, _RISK_SQL, False),
+    ("rollup_agg", q_rollup_agg, _ROLLUP_SQL, False),
+    ("set_ops", q_set_ops, _SET_OPS_SQL, False),
+    ("pivot_counts", q_pivot_counts, _PIVOT_SQL, False),
+    ("label_encode", q_label_encode, _LABEL_ENCODE_SQL, False),
+    ("tfidf_top_terms", q_tfidf_top_terms, _TFIDF_SQL, True),
+    ("user_expanding_features", q_user_expanding_features, _EXPANDING_SQL, True),
+    ("velocity_features", q_velocity_features, _VELOCITY_SQL, True),
+    ("cube_agg", q_cube_agg, _CUBE_SQL, False),
+    ("pr_curve", q_pr_curve, _PR_CURVE_SQL, True),
+    ("salted_agg", q_salted_agg, _SALTED_AGG_SQL, True),
+    ("cardinality", q_cardinality, _CARDINALITY_SQL, False),
+    ("dedup_clusters", q_dedup_clusters, _DEDUP_CLUSTERS_SQL, False),
+    ("repetition_stats", q_repetition_stats, _REPETITION_SQL, True),
+    ("expectations", q_expectations, _EXPECTATIONS_SQL, True),
+    ("kfold_assign", q_kfold_assign, _KFOLD_SQL, True),
+    ("shard_assign", q_shard_assign, _SHARD_ASSIGN_SQL, False),
+    ("mixture_sample", q_mixture_sample, _MIXTURE_SAMPLE_SQL, False),
+    ("feature_hash", q_feature_hash, _FEATURE_HASH_SQL, True),
+    ("edit_distance_pairs", q_edit_distance_pairs, _EDIT_DISTANCE_SQL, False),
+    ("sequence_score", q_sequence_score, _SEQUENCE_SCORE_SQL, True),
+    ("token_stats", q_token_stats, _TOKEN_STATS_SQL, True),
+    ("word_ngram_jaccard", q_word_ngram_jaccard, _WORD_NGRAM_SQL, False),
+    ("near_dup_pairs", q_near_dup_pairs, _NEAR_DUP_SQL, False),
+    ("brute_force_topk", q_brute_force_topk, _BRUTE_TOPK_SQL, True),
+    ("embedding_near_dup_blocked", q_embedding_near_dup_blocked, _EMB_NEAR_DUP_BLOCKED_SQL, True),
+    ("json_extract", q_json_extract, _JSON_SQL, False),
+    ("chunk_documents", q_chunk_documents, _CHUNK_DOCS_SQL, True),
+    ("pack_chunks", q_pack_chunks, _PACK_CHUNKS_SQL, True),
+    ("sample_by_hash", q_sample_by_hash, _SAMPLE_HASH_SQL, False),
+    ("csv_roundtrip", q_csv_roundtrip, _CSV_ROUNDTRIP_SQL, False),
+    ("dtype_project", q_dtype_project, _DTYPE_PROJECT_SQL, False),
+    ("embedding_near_dup_lsh", q_embedding_near_dup_lsh, _emb_lsh_sql(), True),
+    ("minhash_lsh_pairs", q_minhash_lsh_pairs, _MINHASH_LSH_SQL, True),
+    ("simhash", q_simhash, _SIMHASH_SQL, False),
+    ("dedup_clusters_lsh", q_dedup_clusters_lsh, None, True),
+    ("multimodal_features", q_multimodal_features, None, False),
+    ("lsh_topk", q_lsh_topk, _lsh_topk_sql(), True),
+    ("ivf_topk", q_ivf_topk, _ivf_topk_sql(), True),
+    ("ivf_topk_trained", q_ivf_topk_trained, None, True),
+    ("synthetic_source", q_synthetic_source, None, False),
+    ("approx_profile", q_approx_profile, None, False),
+    ("event_transitions", q_event_transitions, _EVENT_TRANSITIONS_SQL, True),
+    ("cooccurrence_lift", q_cooccurrence_lift, _COOCCURRENCE_SQL, True),
+    ("session_paths", q_session_paths, _SESSION_PATHS_SQL, True),
+    ("cohort_retention", q_cohort_retention, _COHORT_SQL, True),
+    ("entity_link_degree", q_entity_link_degree, _ENTITY_LINK_SQL, True),
+    ("fraud_rings", q_fraud_rings, _FRAUD_RINGS_SQL, True),
+    ("conversion_latency", q_conversion_latency, _CONVERSION_LATENCY_SQL, True),
+    ("fraud_pipeline_split_compat", q_fraud_pipeline_split_compat, _FRAUD_SPLIT_COMPAT_SQL, True),
+    ("dedup_incremental", q_dedup_incremental, None, True),
+    ("sequence_score_nn", q_sequence_score_nn, None, True),
+    ("sequence_score_rnn", q_sequence_score_rnn, None, True),
+    ("peak_concurrency", q_peak_concurrency, _PEAK_CONCURRENCY_SQL, True),
+    ("triangle_count", q_triangle_count, _TRIANGLE_SQL, True),
+    ("hll_rollup", q_hll_rollup, None, True),
+    ("apply_cdc", q_apply_cdc, _APPLY_CDC_SQL, True),
+    ("incremental_moments", q_incremental_moments, _INCREMENTAL_MOMENTS_SQL, True),
+    ("jsonl_roundtrip", q_jsonl_roundtrip, _JSONL_ROUNDTRIP_SQL, True),
+    ("resample_interp", q_resample_interp, _RESAMPLE_INTERP_SQL, True),
+    ("quantile_rollup", q_quantile_rollup, _QUANTILE_ROLLUP_SQL, True),
+    ("weighted_sample", q_weighted_sample, _WEIGHTED_SAMPLE_SQL, True),
+    ("seasonal_naive_backtest", q_seasonal_naive_backtest, _SEASONAL_NAIVE_SQL, True),
+    ("hybrid_search_rrf", q_hybrid_search_rrf, _HYBRID_RRF_SQL, True),
+    ("incremental_state_report", q_incremental_state_report, None, True),
+    ("cusum_changepoint", q_cusum_changepoint, _CUSUM_SQL, True),
+    ("hll_set_overlap", q_hll_set_overlap, None, True),
+    ("category_entropy", q_category_entropy, _CATEGORY_ENTROPY_SQL, True),
+    ("interarrival_stats", q_interarrival_stats, _INTERARRIVAL_SQL, True),
+    ("cramers_v", q_cramers_v, _CRAMERS_V_SQL, True),
+    ("acf", q_acf, _ACF_SQL, True),
+    ("rolling_corr", q_rolling_corr, _ROLLING_CORR_SQL, True),
+    ("linear_trend", q_linear_trend, _LINEAR_TREND_SQL, True),
+    ("dormancy_reactivation", q_dormancy_reactivation, _DORMANCY_SQL, True),
+    ("structuring_screen", q_structuring_screen, _STRUCTURING_SQL, True),
+    ("duplicate_transactions", q_duplicate_transactions, _DUPLICATE_TXN_SQL, True),
+    ("burst_screen", q_burst_screen, _BURST_SCREEN_SQL, True),
+    ("bollinger_breakout", q_bollinger_breakout, _BOLLINGER_SQL, True),
+    ("shipping_priority", q_shipping_priority, _SHIPPING_PRIORITY_SQL, True),
+    ("large_volume_customers", q_large_volume_customers, _LARGE_VOLUME_SQL, True),
+    ("volume_anomaly", q_volume_anomaly, _VOLUME_ANOMALY_SQL, True),
+    ("reconcile_totals", q_reconcile_totals, _RECONCILE_SQL, True),
+    ("holt_forecast", q_holt_forecast, _HOLT_SQL, True),
+    ("mmr_rerank", q_mmr_rerank, None, True),
+    ("walk_forward", q_walk_forward, _WALK_FORWARD_SQL, True),
+    ("anova_f", q_anova_f, _ANOVA_SQL, True),
+    ("group_sample", q_group_sample, _GROUP_SAMPLE_SQL, True),
+    ("ann_recall", q_ann_recall, None, True),
+    ("new_entity_rate", q_new_entity_rate, _NEW_ENTITY_SQL, True),
+    ("activity_streaks", q_activity_streaks, _ACTIVITY_STREAKS_SQL, True),
+    ("attribution_last_touch", q_attribution_last_touch, _ATTRIBUTION_SQL, True),
+    ("period_over_period", q_period_over_period, _POP_SQL, True),
+    ("ndcg_eval", q_ndcg_eval, _NDCG_SQL, True),
+    ("interval_overlap", q_interval_overlap, _INTERVAL_OVERLAP_SQL, True),
+    ("fd_check", q_fd_check, _FD_CHECK_SQL, True),
+    ("seasonal_anomaly", q_seasonal_anomaly, _SEASONAL_ANOMALY_SQL, True),
+    ("label_propagation", q_label_propagation, _LPA_SQL, True),
+    ("ab_test", q_ab_test, _AB_TEST_SQL, True),
+    ("simhash_near_dup", q_simhash_near_dup, _SIMHASH_ND_SQL, True),
+    ("lorenz_deciles", q_lorenz_deciles, _LORENZ_SQL, True),
+    ("realized_volatility", q_realized_volatility, _REALIZED_VOL_SQL, True),
+    ("max_drawdown", q_max_drawdown, _MAX_DRAWDOWN_SQL, True),
+    ("pareto_frontier", q_pareto_frontier, _PARETO_SQL, True),
+    ("mahalanobis_outliers", q_mahalanobis_outliers, _MAHALANOBIS_SQL, True),
+    ("adamic_adar", q_adamic_adar, _ADAMIC_ADAR_SQL, True),
+    ("sorted_neighborhood", q_sorted_neighborhood, _SNM_SQL, True),
+    ("theil_sen_trend", q_theil_sen, _THEIL_SEN_SQL, True),
+    ("isotonic_calibration", q_isotonic_calibration, None, True),
+    ("entity_clusters", q_entity_clusters, _ENTITY_CLUSTERS_SQL, True),
+    ("rake_keywords", q_rake_keywords, _RAKE_SQL, True),
+    ("bigram_logprob", q_bigram_logprob, _BIGRAM_SQL, True),
+    ("lead_lag_corr", q_lead_lag_corr, _LEAD_LAG_SQL, True),
+    ("periodogram", q_periodogram, _PERIODOGRAM_SQL, True),
+    ("quantile_normalize", q_quantile_normalize, _QUANTILE_NORMALIZE_SQL, True),
+    ("audience_overlap", q_audience_overlap, _AUDIENCE_SQL, True),
+    ("dedup_method_agreement", q_dedup_method_agreement, _DEDUP_AGREEMENT_SQL, False),
+    ("neighbor_jaccard", q_neighbor_jaccard, _NEIGHBOR_JACCARD_SQL, True),
+    ("bootstrap_auc", q_bootstrap_auc, _bootstrap_auc_sql(), True),
+    ("log_odds_tokens", q_log_odds_tokens, _LOG_ODDS_SQL, True),
+    ("label_centroid_sim", q_label_centroid_sim, _LABEL_CENTROID_SQL, True),
+    ("stickiness", q_stickiness, _STICKINESS_SQL, True),
+    ("missing_buckets", q_missing_buckets, _MISSING_BUCKETS_SQL, True),
+    ("two_hop_reach", q_two_hop_reach, _TWO_HOP_SQL, True),
+    ("seasonality_strength", q_seasonality_strength, _SEASONALITY_STRENGTH_SQL, True),
+    ("sketch_accuracy", q_sketch_accuracy, None, True),
+    ("platt_scaling", q_platt_scaling, _platt_sql(), True),
+    ("pacf", q_pacf, _pacf_sql(), True),
+    ("em_weights", q_em_weights, _em_weights_sql(), True),
+    ("round_amount_screen", q_round_amount_screen, _ROUND_AMOUNT_SQL, True),
+    ("off_hours_screen", q_off_hours_screen, _OFF_HOURS_SQL, True),
+    ("peer_group_anomaly", q_peer_group_anomaly, _PEER_GROUP_SQL, True),
+    ("amihud_illiquidity", q_amihud_illiquidity, _AMIHUD_SQL, True),
+    ("spectral_entropy", q_spectral_entropy, _SPECTRAL_ENTROPY_SQL, True),
+    ("order_priority_check", q_order_priority_check, _ORDER_PRIORITY_SQL, True),
+    ("trade_volume", q_trade_volume, _TRADE_VOLUME_SQL, True),
+    ("market_share", q_market_share, _MARKET_SHARE_SQL, True),
+    ("product_profit", q_product_profit, _PRODUCT_PROFIT_SQL, True),
+    ("returned_items", q_returned_items, _RETURNED_ITEMS_SQL, True),
+    ("part_concentration", q_part_concentration, _PART_CONCENTRATION_SQL, True),
+    ("customer_distribution", q_customer_distribution, _CUSTOMER_DISTRIBUTION_SQL, True),
+    ("promo_revenue", q_promo_revenue, _PROMO_REVENUE_SQL, True),
+    ("top_supplier", q_top_supplier, _TOP_SUPPLIER_SQL, True),
+    ("parts_supplier_counts", q_parts_supplier_counts, _PARTS_SUPPLIER_SQL, True),
+    ("small_qty_revenue", q_small_qty_revenue, _SMALL_QTY_SQL, True),
+    ("discounted_revenue", q_discounted_revenue, _DISCOUNTED_REVENUE_SQL, True),
+    ("idle_customers", q_idle_customers, _IDLE_CUSTOMERS_SQL, True),
+    ("min_cost_supplier", q_min_cost_supplier, _MIN_COST_SUPPLIER_SQL, True),
+    ("l_diversity", q_l_diversity, _L_DIVERSITY_SQL, True),
+    ("qi_uniqueness", q_qi_uniqueness, _QI_UNIQUENESS_SQL, True),
+    ("dp_noisy_count", q_dp_noisy_count, _DP_NOISY_COUNT_SQL, True),
+    ("mann_whitney", q_mann_whitney, _MANN_WHITNEY_SQL, True),
+    ("conformal_intervals", q_conformal_intervals, _CONFORMAL_SQL, True),
+    ("hbos_scores", q_hbos_scores, _HBOS_SQL, True),
+    ("ipf_weights", q_ipf_weights, _IPF_SQL, True),
+    ("distinct_per_group", q_distinct_per_group, _DISTINCT_PER_GROUP_SQL, True),
+    ("group_size_filter", q_group_size_filter, _GROUP_SIZE_SQL, False),
+    ("corr_vector", q_corr_vector, _CORR_SQL, False),
+    ("temporal_features", q_temporal_features, _TEMPORAL_SQL, True),
+    ("zscore_global", q_zscore_global, _ZSCORE_SQL, True),
+    ("weighted_ensemble", q_weighted_ensemble, _WEIGHTED_ENSEMBLE_SQL, False),
+    ("scoring_summary", q_scoring_summary, _SCORING_SUMMARY_SQL, False),
+    ("class_weights", q_class_weights, _CLASS_WEIGHTS_SQL, False),
+    ("pinball_loss", q_pinball_loss, _PINBALL_SQL, True),
+    ("theil_atkinson", q_theil_atkinson, _THEIL_SQL, True),
+    ("degree_distribution", q_degree_distribution, _DEGREE_DIST_SQL, True),
+    ("rapid_movement", q_rapid_movement, _RAPID_SQL, True),
+    ("forecast_revenue_change", q_forecast_revenue_change, _Q6_SQL, True),
+    ("waiting_supplier", q_waiting_supplier, _Q21_SQL, True),
+    ("pattern_profile", q_pattern_profile, _PATTERN_SQL, True),
+    ("lateness_profile", q_lateness_profile, _LATENESS_PROFILE_SQL, True),
+    ("siegel_slope", q_siegel_slope, _SIEGEL_SLOPE_SQL, True),
+    ("cross_correlation", q_cross_correlation, _CROSS_CORRELATION_SQL, False),
+    ("page_hinkley_alarms", q_page_hinkley_alarms, _PAGE_HINKLEY_ALARMS_SQL, False),
+    ("kendall_tau", q_kendall_tau, _KENDALL_TAU_SQL, False),
+    ("cramer_von_mises", q_cramer_von_mises, _CRAMER_VON_MISES_SQL, False),
+)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registry order is deliberate: the external driver hash-checks the
-    FIRST 50 entries against ``oracle_sql()``, so the head of the dict is
-    composed to cover the widest spread of distinct operator families with
-    oracle-checkable queries; rows-only entries (approximate / env-seeded /
-    sketch outputs) sit at the tail.
-
-    Round-12 rotation (VERDICT r11 #1): the window is re-ordered at
-    return time via ``_DRIVER_WINDOW_R12`` — the literal below keeps its
-    thematic grouping and inline documentation, and the explicit list
-    makes each round's 50-entry external-contact set auditable in one
-    place. This round rotates 48 never-driver-checked entries in (the 24
-    the round-11 judge independently pre-verified green, 20 more
-    attested-green oracle-hash entries from the tail, and the 4 new
-    round-12 operators) and keeps `rfm_segment` + `behavior_mart` in the
-    window because their plans changed this round (shared-profile reuse).
-    """
-    q = {
-        # -- driver window: oracle-checkable, one per operator family ----
-        # Round-11 rotation (VERDICT r10 #2): the 23 round-10-window
-        # entries verified green on first external contact (round-9b
-        # tail + linkage family) moved to the 51+ tail; rotated IN: the
-        # 18 entries the round-10 judge independently pre-verified green
-        # (language_census, winnow_fingerprints, hurst_exponent,
-        # diff_in_diff, pq_topk, ivf_pq_topk, sliding_distinct,
-        # attribution_markov, dispersion_index, psi_timeline, gini_gain,
-        # discount_elasticity, cumulative_hazard, snapshot_diff,
-        # price_dispersion, psi_drift, funnel, gini), 4 more
-        # never-driver-checked families (best_threshold_cost,
-        # range_join_count, group_quantiles, robust_zscore), and the two
-        # entries whose PLANS changed this round (rfm_segment's shared
-        # cut-point/adaptive-rank rewrite + behavior_mart which composes
-        # it) so the changed code gets external hash contact immediately.
-        # window engine (W1-W11, W-corr)
-        "behavioral_features": q_behavioral_features,
-        "time_bounded_features": q_time_bounded_features,
-        "sliding_sequence": q_sliding_sequence,
-        "window_rank_suite": q_window_rank_suite,
-        "chunked_expanding_sum": q_chunked_expanding_sum,
-        # relational core
-        "groupby_agg": q_groupby_agg,
-        "left_join": q_left_join,
-        "target_encode": q_target_encode,
-        "time_split": q_time_split,
-        "filter_project": q_filter_project,
-        # round-11 rotation block A: judge-pre-verified tail families
-        "language_census": q_language_census,
-        "winnow_fingerprints": q_winnow_fingerprints,
-        "hurst_exponent": q_hurst_exponent,
-        "diff_in_diff": q_diff_in_diff,
-        "pq_topk": q_pq_topk,
-        "ivf_pq_topk": q_ivf_pq_topk,
-        "sliding_distinct": q_sliding_distinct,
-        "attribution_markov": q_attribution_markov,
-        "dispersion_index": q_dispersion_index,
-        "psi_timeline": q_psi_timeline,
-        # the flagship composed query sits INSIDE the driver window so the
-        # end-to-end pipeline gets a hard external parity signal each round
-        "fraud_feature_pipeline": q_fraud_feature_pipeline,
-        "score_events": q_score_events,
-        "grouping_sets": q_grouping_sets,
-        # evaluation engine
-        "confusion_metrics": q_confusion_metrics,
-        "threshold_sweep": q_threshold_sweep,
-        "roc_auc": q_roc_auc,
-        "pr_auc": q_pr_auc,
-        "best_threshold": q_best_threshold,
-        # temporal joins / sessions / rollups
-        "asof_join": q_asof_join,
-        "sessionize": q_sessionize,
-        "revenue_by_nation": q_revenue_by_nation,
-        "pricing_summary": q_pricing_summary,
-        "semi_anti_join": q_semi_anti_join,
-        "resample_ffill": q_resample_ffill,
-        # M8: LLM-data-pipeline (oracle-backed picks)
-        "exact_dedup": q_exact_dedup,
-        "text_features": q_text_features,
-        # round-11 rotation block B: judge-pre-verified + never-checked
-        "gini_gain": q_gini_gain,
-        "discount_elasticity": q_discount_elasticity,
-        "cumulative_hazard": q_cumulative_hazard,
-        "snapshot_diff": q_snapshot_diff,
-        "price_dispersion": q_price_dispersion,
-        "psi_drift": q_psi_drift,
-        "funnel": q_funnel,
-        "gini": q_gini,
-        "best_threshold_cost": q_best_threshold_cost,
-        "range_join_count": q_range_join_count,
-        "group_quantiles": q_group_quantiles,
-        "robust_zscore": q_robust_zscore,
-        # changed-this-round plans: external re-verification
-        "rfm_segment": q_rfm_segment,
-        "behavior_mart": q_behavior_mart,
-        # -- entry 51+: still oracle-backed (local parity tests cover) ---
-        # round-11 rotation-outs (externally hash-verified in r10)
-        "brown_forsythe": q_brown_forsythe,
-        "sharpe_sortino": q_sharpe_sortino,
-        "kyle_lambda": q_kyle_lambda,
-        "garch_variance": q_garch_variance,
-        "pk_candidates": q_pk_candidates,
-        "freshness_lag": q_freshness_lag,
-        "hapax_stats": q_hapax_stats,
-        "heaps_law": q_heaps_law,
-        "ljung_box": q_ljung_box,
-        "runs_test": q_runs_test,
-        "srm_check": q_srm_check,
-        "cuped": q_cuped,
-        "assortativity": q_assortativity,
-        "benford_second_digit": q_benford_second_digit,
-        "domain_kl": q_domain_kl,
-        "theta_forecast": q_theta_forecast,
-        "window_funnel": q_window_funnel,
-        "wavelet_energy": q_wavelet_energy,
-        "quantize_audit": q_quantize_audit,
-        "rolling_skew_kurt": q_rolling_skew_kurt,
-        "record_linkage": q_record_linkage,
-        "record_linkage_fine": q_record_linkage_fine,
-        "record_linkage_scaled": q_record_linkage_scaled,
-        # round-10 rotation-outs (externally hash-verified in r09)
-        "spearman_corr": q_spearman_corr,
-        "kruskal_wallis": q_kruskal_wallis,
-        "welch_ttest": q_welch_ttest,
-        "vwap_bars": q_vwap_bars,
-        "rolling_beta": q_rolling_beta,
-        "t_closeness": q_t_closeness,
-        "referential_integrity": q_referential_integrity,
-        "readability": q_readability,
-        "seasonal_decompose": q_seasonal_decompose,
-        "forecast_accuracy": q_forecast_accuracy,
-        "residual_anomaly": q_residual_anomaly,
-        "rule_census": q_rule_census,
-        "decile_migration": q_decile_migration,
-        "retrieval_metrics": q_retrieval_metrics,
-        "var_es": q_var_es,
-        "twap": q_twap,
-        "ohlc_bars": q_ohlc_bars,
-        "match_pattern": q_match_pattern,
-        "cohort_ltv": q_cohort_ltv,
-        "heavy_hitters": q_heavy_hitters,
-        "sprt_decision": q_sprt_decision,
-        "transition_entropy": q_transition_entropy,
-        # round-9 rotation-outs (externally hash-verified in r08)
-        "embedding_near_dup": q_embedding_near_dup,
-        "kalman_smooth": q_kalman_smooth,
-        "croston_forecast": q_croston,
-        "page_hinkley": q_page_hinkley,
-        "abc_classification": q_abc_classification,
-        "trimmed_mean": q_trimmed_mean,
-        "grouped_auc": q_grouped_auc,
-        "supplier_concentration": q_supplier_concentration,
-        "order_backlog": q_order_backlog,
-        "fulfillment_latency": q_fulfillment_latency,
-        "wasserstein_drift": q_wasserstein_drift,
-        "zipf_slope": q_zipf_slope,
-        "containment_pairs": q_containment_pairs,
-        "woe_encode": q_woe_encode,
-        "asof_join_tolerance": q_asof_join_tolerance,
-        "bm25_search": q_bm25_search,
-        # round-8 rotation-outs (externally hash-verified r02-r07; now
-        # audited by attest.py like the rest of the tail)
-        "pct_rank_pandas": q_pct_rank_pandas,
-        "first_flags": q_first_flags,
-        "padded_sequence": q_padded_sequence,
-        "last_known_value": q_last_known_value,
-        "value_range_window": q_value_range_window,
-        "null_profile": q_null_profile,
-        "top_k": q_top_k,
-        "group_describe": q_group_describe,
-        "numeric_profile": q_numeric_profile,
-        "imputation": q_imputation,
-        "risk_bucket": q_risk_bucket,
-        "rollup_agg": q_rollup_agg,
-        "set_ops": q_set_ops,
-        "pivot_counts": q_pivot_counts,
-        "label_encode": q_label_encode,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "user_expanding_features": q_user_expanding_features,
-        "velocity_features": q_velocity_features,
-        "cube_agg": q_cube_agg,
-        "pr_curve": q_pr_curve,
-        "best_threshold_recall": q_best_threshold_recall,
-        "salted_agg": q_salted_agg,
-        "cardinality": q_cardinality,
-        "session_agg": q_session_agg,
-        "time_bucket_rollup": q_time_bucket_rollup,
-        "dedup_keep_first": q_dedup_keep_first,
-        "full_outer_join": q_full_outer_join,
-        "ntile_deciles": q_ntile_deciles,
-        "ks_drift": q_ks_drift,
-        "benford_profile": q_benford_profile,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_keep_best": q_dedup_keep_best,
-        "lift_table": q_lift_table,
-        "asof_join_forward": q_asof_join_forward,
-        "chi2_drift": q_chi2_drift,
-        "drift_report": q_drift_report,
-        "calibration_table": q_calibration_table,
-        "seasonal_adjust": q_seasonal_adjust,
-        "target_encode_expanding": q_target_encode_expanding,
-        "quality_filter": q_quality_filter,
-        "unigram_logprob": q_unigram_logprob,
-        "bloom_semi_join": q_bloom_semi_join,
-        "rolling_quantiles": q_rolling_quantiles,
-        "ewma": q_ewma,
-        "stratified_sample": q_stratified_sample,
-        "winsorize": q_winsorize,
-        "repetition_stats": q_repetition_stats,
-        "decontaminate": q_decontaminate,
-        "redact_pii": q_redact_pii,
-        "expectations": q_expectations,
-        "kfold_assign": q_kfold_assign,
-        "shard_assign": q_shard_assign,
-        "mixture_sample": q_mixture_sample,
-        "feature_hash": q_feature_hash,
-        "edit_distance_pairs": q_edit_distance_pairs,
-        "sequence_score": q_sequence_score,
-        "token_stats": q_token_stats,
-        "word_ngram_jaccard": q_word_ngram_jaccard,
-        "near_dup_pairs": q_near_dup_pairs,
-        "brute_force_topk": q_brute_force_topk,
-        "embedding_near_dup_blocked": q_embedding_near_dup_blocked,
-        "json_extract": q_json_extract,
-        "chunk_documents": q_chunk_documents,
-        "pack_chunks": q_pack_chunks,
-        "sample_by_hash": q_sample_by_hash,
-        "csv_roundtrip": q_csv_roundtrip,
-        "dtype_project": q_dtype_project,
-        # oracle-backed since r9 (md5-seeded planes / md5 oracle-mode
-        # minhash); the rows-only tail proper starts at dedup_clusters_lsh
-        "embedding_near_dup_lsh": q_embedding_near_dup_lsh,
-        "minhash_lsh_pairs": q_minhash_lsh_pairs,
-        "simhash": q_simhash,
-        # -- rows-only tail: approximate / env-seeded / sketch outputs ---
-        "dedup_clusters_lsh": q_dedup_clusters_lsh,
-        "multimodal_features": q_multimodal_features,
-        "lsh_topk": q_lsh_topk,
-        "ivf_topk": q_ivf_topk,
-        "ivf_topk_trained": q_ivf_topk_trained,
-        "synthetic_source": q_synthetic_source,
-        "approx_profile": q_approx_profile,
-        # event-sequence analytics (beyond-reference)
-        "event_transitions": q_event_transitions,
-        "cooccurrence_lift": q_cooccurrence_lift,
-        "session_paths": q_session_paths,
-        "cohort_retention": q_cohort_retention,
-        # lexical retrieval / collocation mining (beyond-reference)
-        "token_pmi": q_token_pmi,
-        "entity_link_degree": q_entity_link_degree,
-        "fraud_rings": q_fraud_rings,
-        "conversion_latency": q_conversion_latency,
-        # reference-exact per-split truncation compat (SURVEY §3.1)
-        "fraud_pipeline_split_compat": q_fraud_pipeline_split_compat,
-        # composed IVF×PQ ANN (rows-only: recall < 1 by design)
-        # delta-vs-corpus dedup against a persisted signature index
-        "dedup_incremental": q_dedup_incremental,
-        # trained sequence conv net (distributed SGD; rows-only)
-        "sequence_score_nn": q_sequence_score_nn,
-        "sequence_score_rnn": q_sequence_score_rnn,
-        # SCD2 / sweep-line / graph-census / sketch family (round 6)
-        "scd2_history": q_scd2_history,
-        "peak_concurrency": q_peak_concurrency,
-        "triangle_count": q_triangle_count,
-        # rows-only: DataSketches HLL binary is engine-specific
-        "hll_rollup": q_hll_rollup,
-        # incremental-pipeline primitives (round 6)
-        "apply_cdc": q_apply_cdc,
-        "incremental_moments": q_incremental_moments,
-        "jsonl_roundtrip": q_jsonl_roundtrip,
-        "time_decay_sum": q_time_decay_sum,
-        "resample_interp": q_resample_interp,
-        "quantile_rollup": q_quantile_rollup,
-        "weighted_sample": q_weighted_sample,
-        "seasonal_naive_backtest": q_seasonal_naive_backtest,
-        "hybrid_search_rrf": q_hybrid_search_rrf,
-        # rows-only: windowed HLL estimates
-        # rows-only: maintained-state demo (sketch binaries in state)
-        "incremental_state_report": q_incremental_state_report,
-        "cusum_changepoint": q_cusum_changepoint,
-        # rows-only: HLL inclusion-exclusion estimates
-        "hll_set_overlap": q_hll_set_overlap,
-        # behavioral profiles / association / autocorrelation
-        "category_entropy": q_category_entropy,
-        "interarrival_stats": q_interarrival_stats,
-        "cramers_v": q_cramers_v,
-        "acf": q_acf,
-        "rolling_corr": q_rolling_corr,
-        "linear_trend": q_linear_trend,
-        "dormancy_reactivation": q_dormancy_reactivation,
-        "structuring_screen": q_structuring_screen,
-        "duplicate_transactions": q_duplicate_transactions,
-        "burst_screen": q_burst_screen,
-        "bollinger_breakout": q_bollinger_breakout,
-        "shipping_priority": q_shipping_priority,
-        "large_volume_customers": q_large_volume_customers,
-        "volume_anomaly": q_volume_anomaly,
-        "reconcile_totals": q_reconcile_totals,
-        # holt_forecast / holt_winters: recursive-CTE oracles since r8
-        "holt_forecast": q_holt_forecast,
-        "holt_winters": q_holt_winters,
-        # MMR diversity rerank: rows-only (sequential greedy per query)
-        "mmr_rerank": q_mmr_rerank,
-        # cohort LTV curve + walk-forward backtest assignment
-        "walk_forward": q_walk_forward,
-        # one-way ANOVA F relevance + point-in-time dimension join
-        "anova_f": q_anova_f,
-        "pit_join": q_pit_join,
-        # exact-k balanced sampling + ANN recall eval
-        "group_sample": q_group_sample,
-        "ann_recall": q_ann_recall,
-        "new_entity_rate": q_new_entity_rate,
-        "activity_streaks": q_activity_streaks,
-        "attribution_last_touch": q_attribution_last_touch,
-        "period_over_period": q_period_over_period,
-        "ndcg_eval": q_ndcg_eval,
-        "interval_overlap": q_interval_overlap,
-        "fd_check": q_fd_check,
-        "seasonal_anomaly": q_seasonal_anomaly,
-        "label_propagation": q_label_propagation,
-        "mutual_information": q_mutual_information,
-        "ab_test": q_ab_test,
-        "benford_mad": q_benford_mad,
-        "simhash_near_dup": q_simhash_near_dup,
-        "lorenz_deciles": q_lorenz_deciles,
-        "survival_curve": q_survival_curve,
-        # financial time-series primitives
-        "realized_volatility": q_realized_volatility,
-        "max_drawdown": q_max_drawdown,
-        # skyline / joint-outlier screens
-        "pareto_frontier": q_pareto_frontier,
-        "mahalanobis_outliers": q_mahalanobis_outliers,
-        # graph: link prediction + dense backbone
-        "adamic_adar": q_adamic_adar,
-        "kcore": q_kcore,
-        # SNM windowed-blocking dedup candidates
-        "sorted_neighborhood": q_sorted_neighborhood,
-        # robust trend + PAV calibration
-        "theil_sen_trend": q_theil_sen,
-        "isotonic_calibration": q_isotonic_calibration,
-        # Fellegi-Sunter entity resolution (+ cluster composition)
-        "entity_clusters": q_entity_clusters,
-        # RAKE keyword extraction + bigram LM fluency
-        "rake_keywords": q_rake_keywords,
-        "bigram_logprob": q_bigram_logprob,
-        # lead-lag cross-correlation + spectral period detection
-        "lead_lag_corr": q_lead_lag_corr,
-        "periodogram": q_periodogram,
-        # pooled-grid quantile normalization + tail risk
-        "quantile_normalize": q_quantile_normalize,
-        "audience_overlap": q_audience_overlap,
-        # rows-only: cross-generator dedup candidate agreement
-        "dedup_method_agreement": q_dedup_method_agreement,
-        # oracle-backed since r9: 1e-9-grid folded power iteration
-        "pagerank": q_pagerank,
-        # information-theory / AML screens / microstructure (round 7)
-        "neighbor_jaccard": q_neighbor_jaccard,
-        "bootstrap_auc": q_bootstrap_auc,
-        "log_odds_tokens": q_log_odds_tokens,
-        "label_centroid_sim": q_label_centroid_sim,
-        "stickiness": q_stickiness,
-        "missing_buckets": q_missing_buckets,
-        "two_hop_reach": q_two_hop_reach,
-        "seasonality_strength": q_seasonality_strength,
-        # rows-only: the sketch side is engine-specific by design
-        "sketch_accuracy": q_sketch_accuracy,
-        # platt_scaling: recursive-CTE Newton oracle since r8
-        "platt_scaling": q_platt_scaling,
-        # pacf: unrolled Durbin-Levinson oracle since r8; the EM /
-        # absorption solves below stay rows-only (driver-side iterates
-        # on aggregate-sized frames)
-        "pacf": q_pacf,
-        "em_weights": q_em_weights,
-        "round_amount_screen": q_round_amount_screen,
-        "off_hours_screen": q_off_hours_screen,
-        "peer_group_anomaly": q_peer_group_anomaly,
-        "amihud_illiquidity": q_amihud_illiquidity,
-        "spectral_entropy": q_spectral_entropy,
-        # decision-support relational suite (TPC-H-shaped)
-        "order_priority_check": q_order_priority_check,
-        "trade_volume": q_trade_volume,
-        "market_share": q_market_share,
-        "product_profit": q_product_profit,
-        "returned_items": q_returned_items,
-        "part_concentration": q_part_concentration,
-        "customer_distribution": q_customer_distribution,
-        "promo_revenue": q_promo_revenue,
-        "top_supplier": q_top_supplier,
-        "parts_supplier_counts": q_parts_supplier_counts,
-        "small_qty_revenue": q_small_qty_revenue,
-        "discounted_revenue": q_discounted_revenue,
-        "idle_customers": q_idle_customers,
-        "min_cost_supplier": q_min_cost_supplier,
-        # privacy-audit family (round 9, beyond-reference §2.13)
-        "k_anonymity": q_k_anonymity,
-        "l_diversity": q_l_diversity,
-        "qi_uniqueness": q_qi_uniqueness,
-        "dp_noisy_count": q_dp_noisy_count,
-        # statistical-rigor family (round 9)
-        "mann_whitney": q_mann_whitney,
-        "conformal_intervals": q_conformal_intervals,
-        "hbos_scores": q_hbos_scores,
-        "ipf_weights": q_ipf_weights,
-        # round-9b families not in the driver window
-        # rotated out of the head in round 9b (still attested each sweep)
-        "distinct_per_group": q_distinct_per_group,
-        "group_size_filter": q_group_size_filter,
-        "corr_vector": q_corr_vector,
-        "temporal_features": q_temporal_features,
-        "zscore_global": q_zscore_global,
-        "weighted_ensemble": q_weighted_ensemble,
-        "scoring_summary": q_scoring_summary,
-        "class_weights": q_class_weights,
-        # time-series diagnostics III (round 9b)
-        "pinball_loss": q_pinball_loss,
-        "theil_atkinson": q_theil_atkinson,
-        # experimentation suite (round 9b)
-        # graph II (round 9b)
-        "degree_distribution": q_degree_distribution,
-        # AML III (round 9b)
-        "rapid_movement": q_rapid_movement,
-        # embeddings / moments II (round 9b)
-        # decision-support additions (round 9b)
-        "forecast_revenue_change": q_forecast_revenue_change,
-        "waiting_supplier": q_waiting_supplier,
-        # corpus-mixture + forecasting additions (round 9b)
-        # funnel / data-quality additions (round 9b)
-        "pattern_profile": q_pattern_profile,
-        # monitoring / relevance additions (round 9b)
-        # survival / signal / pricing additions (round 9b)
-        # round-11 additions: Mann-Kendall/Theil-Sen trend, char-entropy
-        # quality screen, Qini uplift gains, iterative GESD outliers
-        "mann_kendall": q_mann_kendall,
-        "char_entropy": q_char_entropy,
-        "qini_curve": q_qini_curve,
-        "gesd_outliers": q_gesd_outliers,
-        "best_changepoint": q_best_changepoint,
-        "attribution_position": q_attribution_position,
-        "mde_power": q_mde_power,
-        "seasonal_esd": q_seasonal_esd,
-        # round-12 additions: robust-stats + event-time streaming-
-        # adjacent family (Hodges-Lehmann location, Hampel/MAD control
-        # bands, late-data session merge, tumbling exact distinct)
-        "hodges_lehmann": q_hodges_lehmann,
-        "mad_control_limits": q_mad_control_limits,
-        "session_merge_late": q_session_merge_late,
-        "windowed_distinct_exact": q_windowed_distinct_exact,
-        "lateness_profile": q_lateness_profile,
-        "siegel_slope": q_siegel_slope,
-        "cross_correlation": q_cross_correlation,
-        "page_hinkley_alarms": q_page_hinkley_alarms,
-        "kendall_tau": q_kendall_tau,
-        "cramer_von_mises": q_cramer_von_mises,
-    }
-    head = [k for k in _DRIVER_WINDOW_R12 if k in q]
-    assert len(set(head)) == len(head) <= 50, "driver window malformed"
-    in_head = set(head)
-    return {
-        **{k: q[k] for k in head},
-        **{k: v for k, v in q.items() if k not in in_head},
-    }
-
-
-# The external driver's 50-entry hash-check window for round 12 — every
-# name here was either never driver-checked before this round (46 tail
-# entries + 4 new round-12 operators) or had its plan changed this round
-# (rfm_segment / behavior_mart). See queries() docstring.
-_DRIVER_WINDOW_R12 = [
-    # 24 entries the round-11 judge independently pre-verified green
-    "mann_kendall",
-    "char_entropy",
-    "qini_curve",
-    "gesd_outliers",
-    "seasonal_esd",
-    "best_changepoint",
-    "attribution_position",
-    "mde_power",
-    "ewma",
-    "winsorize",
-    "decontaminate",
-    "redact_pii",
-    "token_pmi",
-    "pagerank",
-    "kcore",
-    "survival_curve",
-    "holt_winters",
-    "pit_join",
-    "benford_mad",
-    "k_anonymity",
-    "scd2_history",
-    "time_decay_sum",
-    "bloom_semi_join",
-    "mutual_information",
-    # 20 never-driver-checked oracle-hash entries (attested green at
-    # sf0.01 AND sf0.1 in the round-11 full-registry sweeps)
-    "best_threshold_recall",
-    "session_agg",
-    "time_bucket_rollup",
-    "dedup_keep_first",
-    "full_outer_join",
-    "ntile_deciles",
-    "ks_drift",
-    "benford_profile",
-    "dedup_keep_best",
-    "lift_table",
-    "asof_join_forward",
-    "chi2_drift",
-    "drift_report",
-    "calibration_table",
-    "seasonal_adjust",
-    "target_encode_expanding",
-    "quality_filter",
-    "unigram_logprob",
-    "rolling_quantiles",
-    "stratified_sample",
-    # plans changed this round (shared-profile reuse) -> keep external
-    "rfm_segment",
-    "behavior_mart",
-    # new round-12 operators
-    "hodges_lehmann",
-    "mad_control_limits",
-    "session_merge_late",
-    "windowed_distinct_exact",
-]
+    """Every registry entry's query function, in registry order."""
+    return {name: build for name, build, _, _ in REGISTRY}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "user_expanding_features": _EXPANDING_SQL,
-        "velocity_features": _VELOCITY_SQL,
-        "behavioral_features": _BEHAVIORAL_SQL,
-        "time_bounded_features": _TIME_BOUNDED_SQL,
-        "pct_rank_pandas": _PCT_RANK_SQL,
-        "first_flags": _FIRST_FLAGS_SQL,
-        "sliding_sequence": _SLIDING_SEQ_SQL,
-        "groupby_agg": _GROUPBY_AGG_SQL,
-        "left_join": _LEFT_JOIN_SQL,
-        "target_encode": _TARGET_ENCODE_SQL,
-        "null_profile": _null_profile_sql(),
-        "distinct_per_group": _DISTINCT_PER_GROUP_SQL,
-        "group_size_filter": _GROUP_SIZE_SQL,
-        "time_split": _TIME_SPLIT_SQL,
-        "top_k": _TOP_K_SQL,
-        "filter_project": _FILTER_PROJECT_SQL,
-        "cardinality": _CARDINALITY_SQL,
-        "group_describe": _GROUP_DESCRIBE_SQL,
-        "numeric_profile": _numeric_profile_sql(),
-        "corr_vector": _CORR_SQL,
-        "temporal_features": _TEMPORAL_SQL,
-        "zscore_global": _ZSCORE_SQL,
-        "imputation": _IMPUTATION_SQL,
-        "risk_bucket": _RISK_SQL,
-        "weighted_ensemble": _WEIGHTED_ENSEMBLE_SQL,
-        "scoring_summary": _SCORING_SUMMARY_SQL,
-        "class_weights": _CLASS_WEIGHTS_SQL,
-        "rollup_agg": _ROLLUP_SQL,
-        "cube_agg": _CUBE_SQL,
-        "set_ops": _SET_OPS_SQL,
-        "pivot_counts": _PIVOT_SQL,
-        "last_known_value": _LAST_KNOWN_SQL,
-        "json_extract": _JSON_SQL,
-        "padded_sequence": _PADDED_SEQ_SQL,
-        "score_events": _SCORE_EVENTS_SQL,
-        "label_encode": _LABEL_ENCODE_SQL,
-        "confusion_metrics": _CONFUSION_SQL,
-        "threshold_sweep": _SWEEP_SQL,
-        "pr_curve": _PR_CURVE_SQL,
-        "best_threshold": _BEST_THRESHOLD_SQL,
-        "best_threshold_cost": _BEST_THRESHOLD_COST_SQL,
-        "best_threshold_recall": _BEST_THRESHOLD_RECALL_SQL,
-        "roc_auc": _ROC_AUC_SQL,
-        "pr_auc": _PR_AUC_SQL,
-        "salted_agg": _SALTED_AGG_SQL,
-        "fraud_feature_pipeline": _FRAUD_PIPELINE_SQL,
-        "text_features": _text_features_sql(),
-        "token_stats": _TOKEN_STATS_SQL,
-        "exact_dedup": _EXACT_DEDUP_SQL,
-        "word_ngram_jaccard": _WORD_NGRAM_SQL,
-        "embedding_near_dup": _EMB_NEAR_DUP_SQL,
-        "embedding_near_dup_blocked": _EMB_NEAR_DUP_BLOCKED_SQL,
-        "chunk_documents": _CHUNK_DOCS_SQL,
-        "pack_chunks": _PACK_CHUNKS_SQL,
-        "sample_by_hash": _SAMPLE_HASH_SQL,
-        "near_dup_pairs": _NEAR_DUP_SQL,
-        "brute_force_topk": _BRUTE_TOPK_SQL,
-        # synthetic_source: rows-only (env-seeded generator)
-        "lsh_topk": _lsh_topk_sql(),
-        "pq_topk": _PQ_TOPK_SQL,
-        "ivf_pq_topk": _IVF_PQ_TOPK_SQL,
-        "embedding_near_dup_lsh": _emb_lsh_sql(),
-        "minhash_lsh_pairs": _MINHASH_LSH_SQL,
-        "asof_join": _ASOF_SQL,
-        "range_join_count": _RANGE_JOIN_SQL,
-        "sessionize": _SESSIONIZE_SQL,
-        "session_agg": _SESSION_AGG_SQL,
-        "time_bucket_rollup": _TIME_BUCKET_SQL,
-        "group_quantiles": _GROUP_QUANTILES_SQL,
-        "psi_drift": _PSI_DRIFT_SQL,
-        "ks_drift": _KS_DRIFT_SQL,
-        "woe_encode": _WOE_SQL,
-        "benford_profile": _BENFORD_SQL,
-        "dedup_clusters": _DEDUP_CLUSTERS_SQL,
-        "dedup_keep_best": _DEDUP_KEEP_BEST_SQL,
-        "lift_table": _LIFT_TABLE_SQL,
-        "asof_join_tolerance": _ASOF_TOL_SQL,
-        "asof_join_forward": _ASOF_FWD_SQL,
-        "chi2_drift": _CHI2_DRIFT_SQL,
-        "drift_report": _DRIFT_REPORT_SQL,
-        "calibration_table": _CALIBRATION_SQL,
-        "seasonal_adjust": _SEASONAL_SQL,
-        "target_encode_expanding": _TE_EXPANDING_SQL,
-        "quality_filter": _QUALITY_FILTER_SQL,
-        "unigram_logprob": _UNIGRAM_LP_SQL,
-        "bloom_semi_join": _BLOOM_SEMI_SQL,
-        "rolling_quantiles": _ROLLING_Q_SQL,
-        "ewma": _EWMA_SQL,
-        "stratified_sample": _STRATIFIED_SQL,
-        "winsorize": _WINSORIZE_SQL,
-        "repetition_stats": _REPETITION_SQL,
-        "decontaminate": _DECONTAMINATE_SQL,
-        "redact_pii": _REDACT_PII_SQL,
-        "expectations": _EXPECTATIONS_SQL,
-        "kfold_assign": _KFOLD_SQL,
-        "shard_assign": _SHARD_ASSIGN_SQL,
-        "mixture_sample": _MIXTURE_SAMPLE_SQL,
-        "feature_hash": _FEATURE_HASH_SQL,
-        "csv_roundtrip": _CSV_ROUNDTRIP_SQL,
-        "dtype_project": _DTYPE_PROJECT_SQL,
-        "event_transitions": _EVENT_TRANSITIONS_SQL,
-        "match_pattern": _MATCH_PATTERN_SQL,
-        "cooccurrence_lift": _COOCCURRENCE_SQL,
-        "session_paths": _SESSION_PATHS_SQL,
-        "funnel": _FUNNEL_SQL,
-        "cohort_retention": _COHORT_SQL,
-        "bm25_search": _BM25_SQL,
-        "retrieval_metrics": _retrieval_metrics_sql(),
-        "token_pmi": _TOKEN_PMI_SQL,
-        "entity_link_degree": _ENTITY_LINK_SQL,
-        "fraud_rings": _FRAUD_RINGS_SQL,
-        "conversion_latency": _CONVERSION_LATENCY_SQL,
-        "fraud_pipeline_split_compat": _FRAUD_SPLIT_COMPAT_SQL,
-        "robust_zscore": _ROBUST_Z_SQL,
-        "tfidf_top_terms": _TFIDF_SQL,
-        "dedup_keep_first": _DEDUP_KEEP_FIRST_SQL,
-        "ivf_topk": _ivf_topk_sql(),
-        "semi_anti_join": _SEMI_ANTI_SQL,
-        "full_outer_join": _FULL_OUTER_SQL,
-        "ntile_deciles": _NTILE_SQL,
-        "revenue_by_nation": _REVENUE_NATION_SQL,
-        "pricing_summary": _PRICING_SUMMARY_SQL,
-        "value_range_window": _VALUE_RANGE_SQL,
-        # approx_profile: rows-only (sketches are implementation-defined)
-        "window_rank_suite": _WINDOW_RANK_SQL,
-        "edit_distance_pairs": _EDIT_DISTANCE_SQL,
-        "grouping_sets": _GROUPING_SETS_SQL,
-        "sequence_score": _SEQUENCE_SCORE_SQL,
-        "chunked_expanding_sum": _CHUNKED_EXPANDING_SQL,
-        "resample_ffill": _RESAMPLE_SQL,
-        "scd2_history": _SCD2_SQL,
-        "peak_concurrency": _PEAK_CONCURRENCY_SQL,
-        "triangle_count": _TRIANGLE_SQL,
-        "heavy_hitters": _HEAVY_HITTERS_SQL,
-        # hll_rollup: rows-only (DataSketches binary is engine-specific)
-        "snapshot_diff": _SNAPSHOT_DIFF_SQL,
-        "apply_cdc": _APPLY_CDC_SQL,
-        "incremental_moments": _INCREMENTAL_MOMENTS_SQL,
-        "jsonl_roundtrip": _JSONL_ROUNDTRIP_SQL,
-        "time_decay_sum": _TIME_DECAY_SQL,
-        "resample_interp": _RESAMPLE_INTERP_SQL,
-        "quantile_rollup": _QUANTILE_ROLLUP_SQL,
-        "weighted_sample": _WEIGHTED_SAMPLE_SQL,
-        "seasonal_naive_backtest": _SEASONAL_NAIVE_SQL,
-        "attribution_markov": _ATTRIBUTION_MARKOV_SQL,
-        "sliding_distinct": _SLIDING_DISTINCT_SQL,
-        "hybrid_search_rrf": _HYBRID_RRF_SQL,
-        "cusum_changepoint": _CUSUM_SQL,
-        # hll_set_overlap: rows-only (sketch estimates)
-        "category_entropy": _CATEGORY_ENTROPY_SQL,
-        "rfm_segment": _RFM_SQL,
-        "interarrival_stats": _INTERARRIVAL_SQL,
-        "cramers_v": _CRAMERS_V_SQL,
-        "acf": _ACF_SQL,
-        "pacf": _pacf_sql(),
-        "seasonal_decompose": _SEASONAL_DECOMP_SQL,
-        "forecast_accuracy": _FORECAST_ACC_SQL,
-        "residual_anomaly": _RESIDUAL_ANOMALY_SQL,
-        "rule_census": _rule_census_sql(),
-        "decile_migration": _DECILE_MIGRATION_SQL,
-        "holt_forecast": _HOLT_SQL,
-        "holt_winters": _HW_SQL,
-        "rolling_corr": _ROLLING_CORR_SQL,
-        "gini": _GINI_SQL,
-        "linear_trend": _LINEAR_TREND_SQL,
-        "dormancy_reactivation": _DORMANCY_SQL,
-        "structuring_screen": _STRUCTURING_SQL,
-        "duplicate_transactions": _DUPLICATE_TXN_SQL,
-        "burst_screen": _BURST_SCREEN_SQL,
-        "bollinger_breakout": _BOLLINGER_SQL,
-        "shipping_priority": _SHIPPING_PRIORITY_SQL,
-        "large_volume_customers": _LARGE_VOLUME_SQL,
-        "volume_anomaly": _VOLUME_ANOMALY_SQL,
-        "reconcile_totals": _RECONCILE_SQL,
-        "new_entity_rate": _NEW_ENTITY_SQL,
-        "activity_streaks": _ACTIVITY_STREAKS_SQL,
-        "attribution_last_touch": _ATTRIBUTION_SQL,
-        "period_over_period": _POP_SQL,
-        "ndcg_eval": _NDCG_SQL,
-        "interval_overlap": _INTERVAL_OVERLAP_SQL,
-        "fd_check": _FD_CHECK_SQL,
-        "seasonal_anomaly": _SEASONAL_ANOMALY_SQL,
-        "mutual_information": _MUTUAL_INFO_SQL,
-        "ab_test": _AB_TEST_SQL,
-        "benford_mad": _BENFORD_MAD_SQL,
-        "lorenz_deciles": _LORENZ_SQL,
-        "survival_curve": _SURVIVAL_SQL,
-        "behavior_mart": _BEHAVIOR_MART_SQL,
-        "ohlc_bars": _OHLC_SQL,
-        "realized_volatility": _REALIZED_VOL_SQL,
-        "max_drawdown": _MAX_DRAWDOWN_SQL,
-        "twap": _TWAP_SQL,
-        "pareto_frontier": _PARETO_SQL,
-        "mahalanobis_outliers": _MAHALANOBIS_SQL,
-        "adamic_adar": _ADAMIC_ADAR_SQL,
-        "sorted_neighborhood": _SNM_SQL,
-        "theil_sen_trend": _THEIL_SEN_SQL,
-        "record_linkage": _LINKAGE_SQL,
-        "record_linkage_fine": _LINKAGE_FINE_SQL,
-        "record_linkage_scaled": _LINKAGE_SCALED_SQL,
-        "entity_clusters": _ENTITY_CLUSTERS_SQL,
-        "rake_keywords": _RAKE_SQL,
-        "bigram_logprob": _BIGRAM_SQL,
-        "lead_lag_corr": _LEAD_LAG_SQL,
-        "periodogram": _PERIODOGRAM_SQL,
-        "quantile_normalize": _QUANTILE_NORMALIZE_SQL,
-        "var_es": _VAR_ES_SQL,
-        "audience_overlap": _AUDIENCE_SQL,
-        "cohort_ltv": _COHORT_LTV_SQL,
-        "walk_forward": _WALK_FORWARD_SQL,
-        "anova_f": _ANOVA_SQL,
-        "pit_join": _PIT_JOIN_SQL,
-        "group_sample": _GROUP_SAMPLE_SQL,
-        # ann_recall: rows-only (compares two Spark-side result sets)
-        # isotonic_calibration: rows-only (PAV, no SQL twin)
-        "transition_entropy": _TRANSITION_ENTROPY_SQL,
-        "neighbor_jaccard": _NEIGHBOR_JACCARD_SQL,
-        "kalman_smooth": _KALMAN_SQL,
-        "wasserstein_drift": _WASSERSTEIN_SQL,
-        "sprt_decision": _sprt_sql(),
-        "bootstrap_auc": _bootstrap_auc_sql(),
-        "containment_pairs": _CONTAINMENT_SQL,
-        "zipf_slope": _ZIPF_SQL,
-        "grouped_auc": _GROUPED_AUC_SQL,
-        "fulfillment_latency": _FULFILLMENT_SQL,
-        "order_backlog": _ORDER_BACKLOG_SQL,
-        "supplier_concentration": _SUPPLIER_CONC_SQL,
-        "price_dispersion": _PRICE_DISPERSION_SQL,
-        "log_odds_tokens": _LOG_ODDS_SQL,
-        "label_centroid_sim": _LABEL_CENTROID_SQL,
-        "stickiness": _STICKINESS_SQL,
-        "missing_buckets": _MISSING_BUCKETS_SQL,
-        "two_hop_reach": _TWO_HOP_SQL,
-        "kcore": _KCORE_SQL,
-        "label_propagation": _LPA_SQL,
-        "pagerank": _PAGERANK_SQL,
-        "simhash": _SIMHASH_SQL,
-        "simhash_near_dup": _SIMHASH_ND_SQL,
-        "dedup_method_agreement": _DEDUP_AGREEMENT_SQL,
-        "seasonality_strength": _SEASONALITY_STRENGTH_SQL,
-        "croston_forecast": _CROSTON_SQL,
-        "page_hinkley": _PAGE_HINKLEY_SQL,
-        "abc_classification": _ABC_SQL,
-        "trimmed_mean": _TRIMMED_MEAN_SQL,
-        # sketch_accuracy: rows-only (engine-specific sketch output)
-        "platt_scaling": _platt_sql(),
-        "em_weights": _em_weights_sql(),
-        "round_amount_screen": _ROUND_AMOUNT_SQL,
-        "off_hours_screen": _OFF_HOURS_SQL,
-        "peer_group_anomaly": _PEER_GROUP_SQL,
-        "amihud_illiquidity": _AMIHUD_SQL,
-        "spectral_entropy": _SPECTRAL_ENTROPY_SQL,
-        "order_priority_check": _ORDER_PRIORITY_SQL,
-        "trade_volume": _TRADE_VOLUME_SQL,
-        "market_share": _MARKET_SHARE_SQL,
-        "product_profit": _PRODUCT_PROFIT_SQL,
-        "returned_items": _RETURNED_ITEMS_SQL,
-        "part_concentration": _PART_CONCENTRATION_SQL,
-        "customer_distribution": _CUSTOMER_DISTRIBUTION_SQL,
-        "promo_revenue": _PROMO_REVENUE_SQL,
-        "top_supplier": _TOP_SUPPLIER_SQL,
-        "parts_supplier_counts": _PARTS_SUPPLIER_SQL,
-        "small_qty_revenue": _SMALL_QTY_SQL,
-        "discounted_revenue": _DISCOUNTED_REVENUE_SQL,
-        "idle_customers": _IDLE_CUSTOMERS_SQL,
-        "min_cost_supplier": _MIN_COST_SUPPLIER_SQL,
-        "k_anonymity": _K_ANONYMITY_SQL,
-        "l_diversity": _L_DIVERSITY_SQL,
-        "qi_uniqueness": _QI_UNIQUENESS_SQL,
-        "dp_noisy_count": _DP_NOISY_COUNT_SQL,
-        "mann_whitney": _MANN_WHITNEY_SQL,
-        "conformal_intervals": _CONFORMAL_SQL,
-        "hbos_scores": _HBOS_SQL,
-        "ipf_weights": _IPF_SQL,
-        "spearman_corr": _SPEARMAN_SQL,
-        "kruskal_wallis": _KRUSKAL_SQL,
-        "welch_ttest": _WELCH_SQL,
-        "brown_forsythe": _BROWN_FORSYTHE_SQL,
-        "vwap_bars": _VWAP_SQL,
-        "rolling_beta": _ROLLING_BETA_SQL,
-        "sharpe_sortino": _SHARPE_SQL,
-        "kyle_lambda": _KYLE_SQL,
-        "garch_variance": _GARCH_SQL,
-        "t_closeness": _T_CLOSENESS_SQL,
-        "referential_integrity": _REF_INTEGRITY_SQL,
-        "pk_candidates": _PK_CANDIDATES_SQL,
-        "freshness_lag": _FRESHNESS_SQL,
-        "readability": _READABILITY_SQL,
-        "hapax_stats": _HAPAX_SQL,
-        "heaps_law": _HEAPS_SQL,
-        "ljung_box": _LJUNG_SQL,
-        "runs_test": _RUNS_SQL,
-        "pinball_loss": _PINBALL_SQL,
-        "theil_atkinson": _THEIL_SQL,
-        "srm_check": _SRM_SQL,
-        "cuped": _CUPED_SQL,
-        "assortativity": _ASSORT_SQL,
-        "degree_distribution": _DEGREE_DIST_SQL,
-        "benford_second_digit": _BENFORD2_SQL,
-        "rapid_movement": _RAPID_SQL,
-        "quantize_audit": _QUANTIZE_SQL,
-        "rolling_skew_kurt": _SKEW_KURT_SQL,
-        "forecast_revenue_change": _Q6_SQL,
-        "waiting_supplier": _Q21_SQL,
-        "domain_kl": _DOMAIN_KL_SQL,
-        "theta_forecast": _THETA_SQL,
-        "window_funnel": _WINDOW_FUNNEL_SQL,
-        "pattern_profile": _PATTERN_SQL,
-        "dispersion_index": _DISPERSION_SQL,
-        "psi_timeline": _PSI_TIMELINE_SQL,
-        "gini_gain": _GINI_GAIN_SQL,
-        "cumulative_hazard": _CUMHAZ_SQL,
-        "wavelet_energy": _WAVELET_SQL,
-        "discount_elasticity": _ELASTICITY_SQL,
-        "language_census": _language_census_sql(),
-        "winnow_fingerprints": _WINNOW_SQL,
-        "hurst_exponent": _HURST_SQL,
-        "diff_in_diff": _DID_SQL,
-        "mann_kendall": _MANN_KENDALL_SQL,
-        "char_entropy": _CHAR_ENTROPY_SQL,
-        "qini_curve": _QINI_SQL,
-        "gesd_outliers": _gesd_sql(),
-        "best_changepoint": _BEST_CHANGEPOINT_SQL,
-        "attribution_position": _ATTRIBUTION_POSITION_SQL,
-        "mde_power": _mde_power_sql(),
-        "seasonal_esd": _gesd_sql(r0=_SESD_R0, x_name="residual"),
-        "hodges_lehmann": _HODGES_LEHMANN_SQL,
-        "mad_control_limits": _MAD_CONTROL_SQL,
-        "session_merge_late": _SESSION_MERGE_SQL,
-        "windowed_distinct_exact": _WINDOWED_DISTINCT_SQL,
-        "lateness_profile": _LATENESS_PROFILE_SQL,
-        "siegel_slope": _SIEGEL_SLOPE_SQL,
-        "cross_correlation": _CROSS_CORRELATION_SQL,
-        "page_hinkley_alarms": _PAGE_HINKLEY_ALARMS_SQL,
-        "kendall_tau": _KENDALL_TAU_SQL,
-        "cramer_von_mises": _CRAMER_VON_MISES_SQL,
-    }
+    """The DuckDB twin of every entry that has one."""
+    return {name: sql for name, _, sql, _ in REGISTRY if sql is not None}

@@ -5,9 +5,8 @@
 Each query is timed end-to-end (plan + execute + a cheap count-style sink
 that forces full materialization without driver collection); min of
 $SPARK_GRAFT_BENCH_REPS (default 3) back-to-back timed runs after a full
-untimed warm sweep ($SPARK_GRAFT_BENCH_INTERLEAVE=1 spreads the reps
-across whole-suite passes instead — diagnostic only, measured ~19%
-slower minima; REPS=2 reproduces the round-12 methodology exactly).
+untimed warm sweep. The timed set is every ``REGISTRY`` row of
+``__spark_entry__`` whose bench flag is set, in registry order.
 """
 
 from __future__ import annotations
@@ -22,315 +21,14 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import __spark_entry__ as entrymod
 from financial_fraud_detection_using_time_series_data_spark.session import get_spark
 
-# headline set: the flagship window pipeline + one per operator family
-BENCH_QUERIES = [
-    "behavioral_features",
-    "user_expanding_features",
-    "velocity_features",
-    "time_bounded_features",
-    "pct_rank_pandas",
-    "sliding_sequence",
-    "groupby_agg",
-    "left_join",
-    "target_encode",
-    "distinct_per_group",
-    "time_split",
-    "top_k",
-    "temporal_features",
-    "zscore_global",
-    "pr_curve",
-    "threshold_sweep",
-    "roc_auc",
-    "pr_auc",
-    "salted_agg",
-    "fraud_feature_pipeline",
-    "text_features",
-    "token_stats",
-    "chunk_documents",
-    "pack_chunks",
-    "exact_dedup",
-    "minhash_lsh_pairs",
-    "embedding_near_dup_blocked",
-    "embedding_near_dup_lsh",
-    "brute_force_topk",
-    "lsh_topk",
-    "ivf_topk",
-    "ivf_topk_trained",
-    "pq_topk",
-    "asof_join",
-    "range_join_count",
-    "sessionize",
-    "session_agg",
-    "time_bucket_rollup",
-    "group_quantiles",
-    "robust_zscore",
-    "tfidf_top_terms",
-    "dedup_keep_first",
-    "revenue_by_nation",
-    "pricing_summary",
-    "window_rank_suite",
-    "sequence_score",
-    "chunked_expanding_sum",
-    "psi_drift",
-    "ks_drift",
-    "drift_report",
-    "woe_encode",
-    "benford_profile",
-    "seasonal_adjust",
-    "target_encode_expanding",
-    "quality_filter",
-    "unigram_logprob",
-    "bloom_semi_join",
-    "rolling_quantiles",
-    "ewma",
-    "stratified_sample",
-    "winsorize",
-    "repetition_stats",
-    "decontaminate",
-    "expectations",
-    "kfold_assign",
-    "feature_hash",
-    "redact_pii",
-    "dedup_clusters_lsh",
-    "event_transitions",
-    "funnel",
-    "match_pattern",
-    "cooccurrence_lift",
-    "session_paths",
-    "cohort_retention",
-    "entity_link_degree",
-    "fraud_rings",
-    "conversion_latency",
-    "bm25_search",
-    "token_pmi",
-    "fraud_pipeline_split_compat",
-    "ivf_pq_topk",
-    "dedup_incremental",
-    "sequence_score_nn",
-    "sequence_score_rnn",
-    "scd2_history",
-    "peak_concurrency",
-    "triangle_count",
-    "heavy_hitters",
-    "hll_rollup",
-    "snapshot_diff",
-    "apply_cdc",
-    "incremental_moments",
-    "jsonl_roundtrip",
-    "time_decay_sum",
-    "resample_interp",
-    "quantile_rollup",
-    "weighted_sample",
-    "seasonal_naive_backtest",
-    "sliding_distinct",
-    "hybrid_search_rrf",
-    "incremental_state_report",
-    "cusum_changepoint",
-    "hll_set_overlap",
-    "category_entropy",
-    "rfm_segment",
-    "interarrival_stats",
-    "cramers_v",
-    "acf",
-    "rolling_corr",
-    "gini",
-    "lorenz_deciles",
-    "linear_trend",
-    "dormancy_reactivation",
-    "structuring_screen",
-    "duplicate_transactions",
-    "burst_screen",
-    "bollinger_breakout",
-    "shipping_priority",
-    "large_volume_customers",
-    "volume_anomaly",
-    "reconcile_totals",
-    "holt_forecast",
-    "new_entity_rate",
-    "activity_streaks",
-    "attribution_last_touch",
-    "period_over_period",
-    "ndcg_eval",
-    "simhash_near_dup",
-    "interval_overlap",
-    "fd_check",
-    "seasonal_anomaly",
-    "label_propagation",
-    "mutual_information",
-    "ab_test",
-    "benford_mad",
-    "survival_curve",
-    "behavior_mart",
-    "ohlc_bars",
-    "realized_volatility",
-    "max_drawdown",
-    "twap",
-    "pareto_frontier",
-    "mahalanobis_outliers",
-    "adamic_adar",
-    "kcore",
-    "sorted_neighborhood",
-    "theil_sen_trend",
-    "isotonic_calibration",
-    "record_linkage",
-    "record_linkage_fine",
-    "record_linkage_scaled",
-    "retrieval_metrics",
-    "seasonal_decompose",
-    "forecast_accuracy",
-    "residual_anomaly",
-    "rule_census",
-    "decile_migration",
-    "rake_keywords",
-    "holt_winters",
-    "mmr_rerank",
-    "cohort_ltv",
-    "walk_forward",
-    "anova_f",
-    "pit_join",
-    "group_sample",
-    "ann_recall",
-    "entity_clusters",
-    "bigram_logprob",
-    "lead_lag_corr",
-    "periodogram",
-    "quantile_normalize",
-    "var_es",
-    "audience_overlap",
-    "pagerank",
-    "transition_entropy",
-    "round_amount_screen",
-    "off_hours_screen",
-    "peer_group_anomaly",
-    "amihud_illiquidity",
-    "spectral_entropy",
-    "order_priority_check",
-    "trade_volume",
-    "market_share",
-    "product_profit",
-    "returned_items",
-    "part_concentration",
-    "customer_distribution",
-    "promo_revenue",
-    "top_supplier",
-    "parts_supplier_counts",
-    "small_qty_revenue",
-    "discounted_revenue",
-    "idle_customers",
-    "min_cost_supplier",
-    "neighbor_jaccard",
-    "kalman_smooth",
-    "wasserstein_drift",
-    "sprt_decision",
-    "bootstrap_auc",
-    "pacf",
-    "attribution_markov",
-    "em_weights",
-    "containment_pairs",
-    "zipf_slope",
-    "grouped_auc",
-    "platt_scaling",
-    "fulfillment_latency",
-    "order_backlog",
-    "supplier_concentration",
-    "price_dispersion",
-    "log_odds_tokens",
-    "label_centroid_sim",
-    "stickiness",
-    "missing_buckets",
-    "two_hop_reach",
-    "seasonality_strength",
-    "croston_forecast",
-    "page_hinkley",
-    "abc_classification",
-    "trimmed_mean",
-    "sketch_accuracy",
-    "k_anonymity",
-    "l_diversity",
-    "qi_uniqueness",
-    "dp_noisy_count",
-    "mann_whitney",
-    "conformal_intervals",
-    "hbos_scores",
-    "ipf_weights",
-    "spearman_corr",
-    "kruskal_wallis",
-    "welch_ttest",
-    "brown_forsythe",
-    "vwap_bars",
-    "rolling_beta",
-    "sharpe_sortino",
-    "kyle_lambda",
-    "garch_variance",
-    "t_closeness",
-    "referential_integrity",
-    "pk_candidates",
-    "freshness_lag",
-    "readability",
-    "hapax_stats",
-    "heaps_law",
-    "ljung_box",
-    "runs_test",
-    "pinball_loss",
-    "theil_atkinson",
-    "assortativity",
-    "degree_distribution",
-    "benford_second_digit",
-    "rapid_movement",
-    "quantize_audit",
-    "rolling_skew_kurt",
-    "srm_check",
-    "cuped",
-    "forecast_revenue_change",
-    "waiting_supplier",
-    "domain_kl",
-    "theta_forecast",
-    "window_funnel",
-    "pattern_profile",
-    "dispersion_index",
-    "psi_timeline",
-    "gini_gain",
-    "cumulative_hazard",
-    "wavelet_energy",
-    "discount_elasticity",
-    # round-10 additions
-    "language_census",
-    "winnow_fingerprints",
-    "hurst_exponent",
-    "diff_in_diff",
-    "mann_kendall",
-    "char_entropy",
-    "qini_curve",
-    "gesd_outliers",
-    "best_changepoint",
-    "attribution_position",
-    "mde_power",
-    "seasonal_esd",
-    "hodges_lehmann",
-    "mad_control_limits",
-    "session_merge_late",
-    "windowed_distinct_exact",
-    "lateness_profile",
-    "siegel_slope",
-]
-
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-    # round-13 noise hardening (additions-only; VERDICT #8): back-to-back
-    # same-code runs disagreed by up to 2x per query in round 12. Two env
-    # knobs; REPS=2 reproduces the round-12 methodology exactly:
-    #   SPARK_GRAFT_BENCH_REPS        timed runs per query, min taken (3)
-    #   SPARK_GRAFT_BENCH_INTERLEAVE  1 = whole-suite passes (each rep of
-    #       a query lands minutes apart). Kept as an OPTION, default OFF:
-    #       a full interleaved vs back-to-back A/B of the same code
-    #       measured interleaved minima a median 19% SLOWER (253.2s vs
-    #       206.5s suite) — spreading reps forfeits the per-query
-    #       JIT/cache locality the back-to-back minimum legitimately
-    #       measures, and would poison round-over-round comparability.
+    # timed runs per query, min taken; back-to-back, because spreading the
+    # reps across whole-suite passes measured minima a median 19% slower
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-    interleave = os.environ.get("SPARK_GRAFT_BENCH_INTERLEAVE", "0") != "0"
+    names = [name for name, _, _, timed in entrymod.REGISTRY if timed]
     spark = get_spark(app_name="bench")
     queries = entrymod.queries()
 
@@ -342,7 +40,7 @@ def main() -> None:
     # HotSpot/codegen warm-up to whichever queries run early; a whole-suite
     # pass first means the timed passes below measure steady-state plan
     # cost, which is what matters for capacity planning at scale.
-    for name in BENCH_QUERIES:
+    for name in names:
         queries[name](spark, sf_dir).selectExpr("sum(hash(*)) as h").collect()
 
     def timed_run(name: str) -> float:
@@ -353,16 +51,9 @@ def main() -> None:
         df.selectExpr("sum(hash(*)) as h").collect()
         return time.perf_counter() - t0
 
-    best: dict[str, float] = {n: float("inf") for n in BENCH_QUERIES}
-    if interleave:
-        for _ in range(reps):
-            for name in BENCH_QUERIES:
-                best[name] = min(best[name], timed_run(name))
-    else:
-        for name in BENCH_QUERIES:
-            for _ in range(reps):
-                best[name] = min(best[name], timed_run(name))
-    timings = {name: round(v, 3) for name, v in best.items()}
+    timings = {
+        name: round(min(timed_run(name) for _ in range(reps)), 3) for name in names
+    }
 
     total = round(sum(timings.values()), 3)
 
@@ -380,6 +71,7 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "n_queries": len(timings),
+                "reps": reps,
                 "sf": sf,
             },
             f,

@@ -56,11 +56,6 @@ def cyclical(col: Column, period: float) -> tuple[Column, Column]:
     return F.sin(angle), F.cos(angle)
 
 
-def log1p_amount(col: Column) -> Column:
-    """F4 (engineer.py:231)."""
-    return F.log1p(col)
-
-
 def has_decimal(col: Column) -> Column:
     """F5 (engineer.py:234-240): amt % 1 > 0 flag."""
     return (col % F.lit(1.0) > 0).cast("int")

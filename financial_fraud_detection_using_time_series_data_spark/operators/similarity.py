@@ -356,7 +356,10 @@ def kmeans_centroids(
         )
         new = [list(c) for c in cents]
         for r in means:
-            new[r.cell_id][r.pos] = float(r.m)
+            # zero-norm vectors carry assign_cells' -1 sentinel; a negative
+            # index would silently overwrite the last centroid
+            if 0 <= r.cell_id < len(new):
+                new[r.cell_id][r.pos] = float(r.m)
         cents = new
     return cents
 

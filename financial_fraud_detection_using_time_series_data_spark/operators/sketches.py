@@ -66,24 +66,6 @@ def hll_merge_estimate(
     )
 
 
-def approx_distinct_rollup(
-    df: DataFrame,
-    fine_keys: tuple[str, ...],
-    rollup_keys: tuple[str, ...],
-    value_col: str,
-    lgk: int = 12,
-) -> DataFrame:
-    """Composition: fine-grained sketch partials → merged rollup estimate.
-
-    ``rollup_keys`` must be a subset of ``fine_keys``; the second
-    aggregation's input is |fine groups| rows, so the rollup shuffle is
-    metadata-sized.
-    """
-    return hll_merge_estimate(
-        hll_partial(df, fine_keys, value_col, lgk), rollup_keys
-    )
-
-
 def heavy_hitters(
     df: DataFrame,
     col: str,

@@ -57,11 +57,6 @@ def expanding_sum(col: Column, w: WindowSpec) -> Column:
     return F.sum(col).over(expanding_frame(w))
 
 
-def expanding_avg(col: Column, w: WindowSpec) -> Column:
-    """W3 (engineer.py:85-87)."""
-    return F.avg(col).over(expanding_frame(w))
-
-
 def expanding_std(col: Column, w: WindowSpec) -> Column:
     """W4 (engineer.py:89-91): sample std (ddof=1), NULL at n=1 — Spark's
     stddev_samp matches pandas' NaN-at-first-row exactly."""
@@ -74,12 +69,6 @@ def expanding_max(col: Column, w: WindowSpec) -> Column:
 
 def expanding_min(col: Column, w: WindowSpec) -> Column:
     return F.min(col).over(expanding_frame(w))
-
-
-def lag_diff(col: Column, w: WindowSpec, default: float | None = None) -> Column:
-    """W6 (engineer.py:108-109,127): groupby().diff() — x - lag(x)."""
-    d = col - F.lag(col, 1).over(w)
-    return F.coalesce(d, F.lit(default)) if default is not None else d
 
 
 def first_row_flag(w: WindowSpec) -> Column:

@@ -45,3 +45,13 @@ def test_entry_smoke(spark):
     df = spark_entry.entry(spark)
     assert df.count() > 0
     assert len(df.columns) > 5
+
+
+def test_attest_never_passes_an_unchecked_entry(spark, sf_dir):
+    """attest.py's loop reports PASS only after an oracle compare; an entry
+    without an oracle runs and reads ROWS-ONLY."""
+    import attest
+
+    rows = attest.attest(spark, sf_dir, ["top_k", "approx_profile"])
+    got = {name: status for name, status, _, _ in rows}
+    assert got == {"top_k": "PASS", "approx_profile": "ROWS-ONLY"}

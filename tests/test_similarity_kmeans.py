@@ -4,6 +4,7 @@ The reference serves embedding-style retrieval eagerly in memory; the
 engine's scale path is: train centroids once (`kmeans_centroids`), then
 every search is a map-only assign/probe plus ONE cell_id join."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from financial_fraud_detection_using_time_series_data_spark.operators import similarity
@@ -77,3 +78,20 @@ def test_trained_ivf_recall_and_plan(spark, sf_dir):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan, (
         plan[:1500]
     )
+
+
+def test_kmeans_zero_norm_vector_leaves_centroids_alone(spark):
+    """A zero-norm embedding has no best cell (assign_cells gives it the
+    -1 sentinel); it must not be averaged into any centroid. Vector 1
+    duplicates vector 0, so it ties into cell 0 and cell 1 stays empty:
+    cell 1 keeps its seed, and cell 0 is the mean of vectors 0-2."""
+    corpus = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [1.0, 0.0]), (2, [0.6, 0.8]), (3, [0.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    assert {r.cell_id for r in similarity.assign_cells(
+        corpus, [[1.0, 0.0], [1.0, 0.0]]
+    ).collect()} == {0, -1}
+    cents = similarity.kmeans_centroids(corpus, nlist=2, n_iter=1)
+    assert cents[1] == [1.0, 0.0]
+    assert cents[0] == pytest.approx([2.6 / 3, 0.8 / 3], abs=1e-12)
