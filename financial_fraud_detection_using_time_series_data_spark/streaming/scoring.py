@@ -6,9 +6,12 @@ path is stateless per request, so every user-history feature is
 unavailable at serve time (train/serve skew — api/main.py:189-195).
 
 The Spark design fixes that skew:
-- ONE scoring function (``score_batch``: DataFrame -> DataFrame) reused
-  verbatim by batch jobs and by the stream (via ``foreachBatch`` or
-  direct transformation) — identical semantics in both planes.
+- ONE scoring formula (``score_columns``: the fraud_score, risk and
+  reasons columns) behind ``score_batch`` (DataFrame -> DataFrame),
+  reused verbatim by batch jobs and by the stream (via ``foreachBatch``
+  or direct transformation) — identical semantics in both planes. The
+  HTTP service builds the same columns once and selects them over each
+  request's rows.
 - event-time watermark + sliding window velocity features
   (``streaming_velocity``) — the 1h velocity the reference *names* but
   computes as a cumulative count (engineer.py:130).
@@ -18,16 +21,20 @@ The Spark design fixes that skew:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import exprs as E
 
 
-def score_batch(df: DataFrame, amount_col: str = "value", model_score_col: str | None = None) -> DataFrame:
+def score_columns(amount_col: str = "value", model_score_col: str | None = None) -> list[Column]:
     """V1/V2: heuristic sigmoid base + optional model blend 0.4/0.6
     (api/main.py:269-272), risk bucket + reasons array (reasons =
-    array(when(...)) with nulls filtered — api/main.py:324-357)."""
+    array(when(...)) with nulls filtered — api/main.py:324-357).
+
+    Returns the three output columns ``fraud_score``, ``risk`` and
+    ``reasons``, unbound to any DataFrame, so a caller that scores many
+    small frames (the HTTP service) can build them once."""
     amt = F.col(amount_col)
     heuristic = E.heuristic_score(amt)
     score = (
@@ -43,12 +50,16 @@ def score_batch(df: DataFrame, amount_col: str = "value", model_score_col: str |
         ),
         lambda x: x.isNotNull(),
     )
-    return df.select(
-        "*",
+    return [
         E.clip(score, 0.0, 1.0).alias("fraud_score"),
         E.risk_bucket(score).alias("risk"),
         reasons.alias("reasons"),
-    )
+    ]
+
+
+def score_batch(df: DataFrame, amount_col: str = "value", model_score_col: str | None = None) -> DataFrame:
+    """``df`` with the ``score_columns`` appended."""
+    return df.select("*", *score_columns(amount_col, model_score_col))
 
 
 def build_stream_scorer(
