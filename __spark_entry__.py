@@ -6410,10 +6410,10 @@ FROM s WHERE status IS NOT NULL
 
 def q_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user 7-day Holt forecast over daily spend rollups. Recursive
-    smoother — the documented applyInPandas escape hatch over the
-    bucket rollup, never the raw events. Oracle-backed since round 8:
-    plain-Python float recursion in the same op order as the DuckDB
-    recursive CTE is bit-identical (the croston_forecast pattern)."""
+    smoother in `forecast.per_series` over the bucket rollup, never the
+    raw events. Oracle-backed: plain-Python float recursion in the same
+    op order as the DuckDB recursive CTE is bit-identical (the
+    croston_forecast pattern)."""
     from financial_fraud_detection_using_time_series_data_spark.operators import forecast
 
     out = forecast.holt_forecast(
@@ -9043,8 +9043,8 @@ ANTI JOIN e ON e.u = s.u AND e.v = s.v
 
 def q_kalman_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local-level Kalman filter over per-user daily totals (adaptive-
-    gain denoiser; sequential recursion inside applyInPandas, float ops
-    in the oracle's recursive-CTE order — bit-identical)."""
+    gain denoiser; sequential recursion in `forecast.per_series`, float
+    ops in the oracle's recursive-CTE order — bit-identical)."""
     from financial_fraud_detection_using_time_series_data_spark.operators import forecast
 
     out = forecast.kalman_filter(

@@ -161,6 +161,30 @@ def dsum(col: Column | str, scale: str = "decimal(25,2)") -> Column:
     return F.sum(c.cast(scale))
 
 
+# date_trunc grain -> INTERVAL unit: a shift of n BUCKETS must move in
+# the bucket's own unit, or the shifted bucket never equals a
+# date_trunc'd one (a day series shifted by "168 HOURS" never aligns)
+_GRAIN_UNIT = {
+    "minute": "MINUTES",
+    "hour": "HOURS",
+    "day": "DAYS",
+    "week": "WEEKS",
+    "month": "MONTHS",
+}
+
+
+def bucket_interval(bucket: str, n: int) -> Column:
+    """``INTERVAL n <unit>`` for ``n`` buckets of the ``bucket`` grain;
+    an unsupported grain raises ValueError."""
+    try:
+        unit = _GRAIN_UNIT[bucket]
+    except KeyError:
+        raise ValueError(
+            f"unsupported bucket {bucket!r}; one of {sorted(_GRAIN_UNIT)}"
+        ) from None
+    return F.expr(f"INTERVAL {int(n)} {unit}")
+
+
 def feature_hash_slot(col: "Column", dim: int = 64, salt: str = "fh") -> "Column":
     """Hashing-trick slot for a categorical value: md5 bucket mod dim.
     High-cardinality categoricals (merchant ids, devices) map into a

@@ -18,9 +18,9 @@ driver-side Adam — the same data-parallel layout as
 ``sequence_model.train_sequence_convnet``:
 
 - the ~150-float parameter vector rides the task closure each epoch;
-- ONE ``mapInPandas`` pass per epoch computes per-partition
-  (gradient-sum, loss-sum, count) via vectorized BPTT — Arrow batches,
-  never a Python row loop;
+- ONE ``mapInPandas`` pass per epoch (``sequence_model.gradient_pass``)
+  computes per-partition (gradient-sum, loss-sum, count) via vectorized
+  BPTT — Arrow batches, never a Python row loop;
 - the driver reduces partials IN PARTITION-ID ORDER (deterministic
   float reduction, bit-identical re-runs) and takes one Adam step
   (Adam state lives only on the driver; executors are stateless).
@@ -38,11 +38,11 @@ separation (conv AUC ≈ 0.5, BiRNN+attention AUC ≥ 0.9).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from .sequence_model import gradient_pass
+from .sequence_scorer import host
 
 __all__ = [
     "init_birnn_params",
@@ -180,61 +180,28 @@ def train_sequence_birnn(
     seed: int = 7,
 ) -> tuple[dict[str, np.ndarray], list[float]]:
     """Distributed synchronous full-batch training with driver-side
-    Adam. One Spark job per epoch; cache ``df`` before calling — every
-    epoch re-scans it. Returns (params, per-epoch mean-loss history)."""
-    from pyspark import TaskContext
-
-    p = init_birnn_params(hidden, attn, seed)
-    grad_schema = "pid int, grad array<double>, loss double, n long"
+    Adam: one `sequence_model.gradient_pass` (one Spark job) per epoch.
+    Cache ``df`` before calling — every epoch re-scans it. Returns
+    (params, per-epoch mean-loss history)."""
     history: list[float] = []
-    flat = _flatten(p)
+    flat = _flatten(init_birnn_params(hidden, attn, seed))
     m = np.zeros_like(flat)
     v = np.zeros_like(flat)
     b1, b2, a_eps = 0.9, 0.999, 1e-8
 
+    def unflatten(vec):
+        return _unflatten(vec, hidden, attn)
+
     for ep in range(1, epochs + 1):
-        cur_flat = flat.copy()
-
-        def _partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cur = _unflatten(cur_flat, hidden, attn)
-            acc = np.zeros_like(cur_flat)
-            loss_sum = 0.0
-            n = 0
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.stack(pdf[seq_col].to_numpy()).astype(np.float64)
-                yv = pdf[label_col].to_numpy().astype(np.float64)
-                g, loss = birnn_grads(X, yv, cur)
-                acc += _flatten(g)
-                loss_sum += loss
-                n += len(pdf)
-            pid = TaskContext.get().partitionId()
-            yield pd.DataFrame(
-                {"pid": [pid], "grad": [acc.tolist()], "loss": [loss_sum], "n": [n]}
-            )
-
-        rows = sorted(
-            df.select(seq_col, label_col).mapInPandas(_partials, grad_schema).collect(),
-            key=lambda r: r.pid,
+        grad, loss, total_n = gradient_pass(
+            df, flat, unflatten, birnn_grads, seq_col, label_col
         )
-        total_n = sum(r.n for r in rows)
-        if total_n == 0:
-            raise ValueError("empty training frame")
-        grad = np.zeros_like(flat)
-        loss = 0.0
-        for r in rows:
-            grad += np.asarray(r.grad)
-            loss += r.loss
         gf = grad / total_n
         m = b1 * m + (1 - b1) * gf
         v = b2 * v + (1 - b2) * gf * gf
         flat = flat - lr * (m / (1 - b1**ep)) / (np.sqrt(v / (1 - b2**ep)) + a_eps)
         history.append(loss / total_n)
-    return _unflatten(flat, hidden, attn), history
-
-
-SCORE_SCHEMA = "event_id long, user_id long, seq_score double"
+    return unflatten(flat), history
 
 
 def score_sequences_birnn(
@@ -242,18 +209,5 @@ def score_sequences_birnn(
     params: dict[str, np.ndarray],
     seq_col: str = "seq",
 ) -> DataFrame:
-    """Host the trained BiRNN in the same Arrow ``mapInPandas`` pattern
-    as the conv/linear scorers: weights ride the task closure, one
-    Python crossing per batch, vectorized forward, map-only plan."""
-
-    def _forward(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf[seq_col].to_numpy()).astype(np.float64)
-            prob, _ = birnn_forward(X, params)
-            out = pdf[["event_id", "user_id"]].copy()
-            out["seq_score"] = prob
-            yield out
-
-    return df.mapInPandas(_forward, schema=SCORE_SCHEMA)
+    """Host the trained BiRNN through `sequence_scorer.host`."""
+    return host(df, lambda X: birnn_forward(X, params)[0], seq_col)

@@ -9,9 +9,10 @@ full-batch gradient descent:
 
 - the parameter vector is a few dozen floats, broadcast to executors in
   the task closure each epoch;
-- ONE `mapInPandas` pass per epoch computes per-partition (gradient sum,
-  loss sum, row count) — Arrow-batched numpy forward+backward, never a
-  Python row loop;
+- ONE `mapInPandas` pass per epoch (`gradient_pass`, shared with the
+  BiRNN in `recurrent`) computes per-partition (gradient sum, loss sum,
+  row count) — Arrow-batched numpy forward+backward, never a Python row
+  loop;
 - the driver sums partition gradients IN PARTITION ORDER (so float
   reduction is deterministic run-to-run) and takes one step.
 
@@ -34,10 +35,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from .sequence_scorer import host
+
 __all__ = [
     "init_params",
     "conv_forward",
     "conv_grads",
+    "gradient_pass",
     "train_sequence_convnet",
     "score_sequences_convnet",
 ]
@@ -110,6 +114,59 @@ def _unflatten(vec: np.ndarray, n_filters: int, width: int) -> dict[str, np.ndar
     return {"Wc": Wc, "bc": bc, "wd": wd, "bd": bd}
 
 
+def gradient_pass(
+    df: DataFrame,
+    flat: np.ndarray,
+    unflatten,
+    grads_fn,
+    seq_col: str = "seq",
+    label_col: str = "label",
+) -> tuple[np.ndarray, float, int]:
+    """One distributed full-batch gradient evaluation: ONE Spark job in
+    which each partition sums ``grads_fn(X, y, unflatten(flat))`` over
+    its Arrow batches; the driver adds the partials sorted by partition
+    id (deterministic float order). Gradient dicts are flattened in the
+    key order of ``unflatten``'s output, the layout of ``flat``.
+
+    Returns (gradient sum, loss sum, row count); raises ValueError on an
+    empty frame."""
+    from pyspark import TaskContext
+
+    def _partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cur = unflatten(flat)
+        acc = np.zeros_like(flat)
+        loss_sum = 0.0
+        n = 0
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            X = np.stack(pdf[seq_col].to_numpy()).astype(np.float64)
+            y = pdf[label_col].to_numpy().astype(np.float64)
+            g, loss = grads_fn(X, y, cur)
+            acc += np.concatenate([np.asarray(g[k]).ravel() for k in cur])
+            loss_sum += loss
+            n += len(pdf)
+        pid = TaskContext.get().partitionId()
+        yield pd.DataFrame(
+            {"pid": [pid], "grad": [acc.tolist()], "loss": [loss_sum], "n": [n]}
+        )
+
+    grad_schema = "pid int, grad array<double>, loss double, n long"
+    rows = sorted(
+        df.select(seq_col, label_col).mapInPandas(_partials, grad_schema).collect(),
+        key=lambda r: r.pid,
+    )
+    total_n = sum(r.n for r in rows)
+    if total_n == 0:
+        raise ValueError("empty training frame")
+    grad = np.zeros_like(flat)
+    loss = 0.0
+    for r in rows:
+        grad += np.asarray(r.grad)
+        loss += r.loss
+    return grad, loss, total_n
+
+
 def train_sequence_convnet(
     df: DataFrame,
     seq_col: str = "seq",
@@ -120,59 +177,25 @@ def train_sequence_convnet(
     lr: float = 0.5,
     seed: int = 7,
 ) -> tuple[dict[str, np.ndarray], list[float]]:
-    """Distributed synchronous gradient descent. One Spark job per epoch:
-    executors compute Arrow-batched partial gradients against the
-    broadcast parameter vector; the driver reduces partials sorted by
-    partition id (deterministic float order) and steps. Cache ``df``
+    """Distributed synchronous gradient descent: one `gradient_pass`
+    (one Spark job) per epoch, then one driver-side step. Cache ``df``
     before calling — every epoch re-scans it.
 
     Returns (trained params, per-epoch mean-loss history)."""
-    from pyspark import TaskContext
-
     p = init_params(n_filters, width, seed)
-    grad_schema = "pid int, grad array<double>, loss double, n long"
     history: list[float] = []
+
+    def unflatten(vec):
+        return _unflatten(vec, n_filters, width)
 
     for _ in range(epochs):
         flat = _flatten(p)
-
-        def _partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cur = _unflatten(flat, n_filters, width)
-            acc = np.zeros_like(flat)
-            loss_sum = 0.0
-            n = 0
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.stack(pdf[seq_col].to_numpy()).astype(np.float64)
-                y = pdf[label_col].to_numpy().astype(np.float64)
-                g, loss = conv_grads(X, y, cur)
-                acc += _flatten(g)
-                loss_sum += loss
-                n += len(pdf)
-            pid = TaskContext.get().partitionId()
-            yield pd.DataFrame(
-                {"pid": [pid], "grad": [acc.tolist()], "loss": [loss_sum], "n": [n]}
-            )
-
-        rows = sorted(
-            df.select(seq_col, label_col).mapInPandas(_partials, grad_schema).collect(),
-            key=lambda r: r.pid,
+        grad, loss, total_n = gradient_pass(
+            df, flat, unflatten, conv_grads, seq_col, label_col
         )
-        total_n = sum(r.n for r in rows)
-        if total_n == 0:
-            raise ValueError("empty training frame")
-        grad = np.zeros_like(flat)
-        loss = 0.0
-        for r in rows:
-            grad += np.asarray(r.grad)
-            loss += r.loss
-        p = _unflatten(flat - lr * (grad / total_n), n_filters, width)
+        p = unflatten(flat - lr * (grad / total_n))
         history.append(loss / total_n)
     return p, history
-
-
-SCORE_SCHEMA = "event_id long, user_id long, seq_score double"
 
 
 def score_sequences_convnet(
@@ -180,18 +203,5 @@ def score_sequences_convnet(
     params: dict[str, np.ndarray],
     seq_col: str = "seq",
 ) -> DataFrame:
-    """Host the trained conv net in the same Arrow `mapInPandas` pattern
-    as `sequence_scorer.score_sequences_trained`: weights ride the task
-    closure, one Python crossing per batch, vectorized forward."""
-
-    def _forward(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf[seq_col].to_numpy()).astype(np.float64)
-            prob, _ = conv_forward(X, params)
-            out = pdf[["event_id", "user_id"]].copy()
-            out["seq_score"] = prob
-            yield out
-
-    return df.mapInPandas(_forward, schema=SCORE_SCHEMA)
+    """Host the trained conv net through `sequence_scorer.host`."""
+    return host(df, lambda X: conv_forward(X, params)[0], seq_col)

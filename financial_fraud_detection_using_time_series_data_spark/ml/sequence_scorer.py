@@ -13,10 +13,11 @@ INFERENCE-HOSTING pattern every deep sequence model needs at scale:
 - model weights ride the task closure (broadcast for real weight
   matrices), loaded once per executor, not per row.
 
-The forward pass below is a deterministic logistic head over the
-sequence mean — the documented plug-point for a real model is marked. A
-real deep-learning runtime is NOT available in this environment, so the
-gated import shows the pattern without a hard dependency.
+`host` is that pattern, shared by every sequence scorer (this module's
+linear heads, `sequence_model`'s conv net, `recurrent`'s BiRNN). The
+stub forward pass is a deterministic logistic head over the sequence
+mean; `score_sequences` documents the plug-point for a real model, so
+no deep-learning runtime is a dependency.
 """
 
 from __future__ import annotations
@@ -30,44 +31,45 @@ from pyspark.sql import DataFrame
 SCORE_SCHEMA = "event_id long, user_id long, seq_score double"
 
 
+def host(df: DataFrame, prob_fn, seq_col: str = "seq") -> DataFrame:
+    """Host a sequence model over (event_id, user_id, seq array<double>)
+    rows with equal-length seqs (the W10 full-window filter guarantees
+    this): ``prob_fn`` maps each Arrow batch's float64
+    ``(batch, seq_len)`` array to one score per row. One Python
+    crossing per batch; the model rides the task closure (broadcast for
+    real weight matrices), loaded once per executor; map-only plan.
+    Output: ``SCORE_SCHEMA``."""
+
+    def _forward(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            X = np.stack(pdf[seq_col].to_numpy()).astype(np.float64)
+            out = pdf[["event_id", "user_id"]].copy()
+            out["seq_score"] = prob_fn(X)
+            yield out
+
+    return df.mapInPandas(_forward, schema=SCORE_SCHEMA)
+
+
 def score_sequences(
     df: DataFrame,
     seq_col: str = "seq",
     w: float = 0.01,
     b: float = -5.0,
 ) -> DataFrame:
-    """Score fixed-length sequence arrays with a vectorized forward pass.
+    """Score fixed-length sequence arrays with a vectorized forward pass:
+    ``seq_score`` = sigmoid(w · mean(seq) + b) in [0, 1].
 
-    Input: (event_id, user_id, seq array<double>) with equal-length seqs
-    (the W10 full-window filter guarantees this). Output adds
-    ``seq_score`` in [0, 1]. One Arrow crossing per partition batch.
+    Plug-point for a real model: pass its forward pass to `host` as
+    ``prob_fn`` (e.g. a ``torch.jit.load(path).eval()`` module applied
+    to ``torch.from_numpy(X)``), with the weights in the closure or in a
+    file pushed via spark.files; the deterministic logistic head below
+    stands in for the trained model.
     """
-
-    def _forward(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # --- executor-side, once per task ---------------------------------
-        # A real model loads here (file pushed via spark.files or a
-        # broadcast of the state dict), NOT per batch:
-        #
-        #   try:
-        #       import torch
-        #       model = torch.jit.load(model_path).eval()
-        #   except ImportError:
-        #       model = None   # fall back to the linear head below
-        #
-        # ------------------------------------------------------------------
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            seqs = np.stack(pdf[seq_col].to_numpy())  # (batch, seq_len)
-            feat = seqs.mean(axis=1)
-            # plug-point: `scores = model(torch.from_numpy(seqs))` — the
-            # deterministic logistic head stands in for the trained model
-            scores = 1.0 / (1.0 + np.exp(-(w * feat + b)))
-            out = pdf[["event_id", "user_id"]].copy()
-            out["seq_score"] = scores
-            yield out
-
-    return df.mapInPandas(_forward, schema=SCORE_SCHEMA)
+    return host(
+        df, lambda X: 1.0 / (1.0 + np.exp(-(w * X.mean(axis=1) + b))), seq_col
+    )
 
 
 def train_sequence_head(
@@ -102,22 +104,9 @@ def score_sequences_trained(
     bias: float,
     seq_col: str = "seq",
 ) -> DataFrame:
-    """Host the TRAINED head in the same Arrow `mapInPandas` pattern as
-    `score_sequences`: scores = sigmoid(seqs @ w + b), numerically
-    identical to `LogisticRegressionModel.transform`'s probability (both
+    """Host the TRAINED head through `host`: scores =
+    sigmoid(seqs @ w + b), numerically identical to `LogisticRegressionModel.transform`'s probability (both
     are float64 sigmoid of the same dot product), so batch-vs-hosted
-    parity is testable to 1e-9. Weights ride the task closure (broadcast
-    for real weight matrices), loaded once per executor."""
+    parity is testable to 1e-9."""
     w = np.asarray(weights, dtype=np.float64)
-
-    def _forward(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            seqs = np.stack(pdf[seq_col].to_numpy())
-            scores = 1.0 / (1.0 + np.exp(-(seqs @ w + bias)))
-            out = pdf[["event_id", "user_id"]].copy()
-            out["seq_score"] = scores
-            yield out
-
-    return df.mapInPandas(_forward, schema=SCORE_SCHEMA)
+    return host(df, lambda X: 1.0 / (1.0 + np.exp(-(X @ w + bias))), seq_col)

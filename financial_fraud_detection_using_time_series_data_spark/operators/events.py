@@ -614,26 +614,9 @@ def seasonal_naive_backtest(
             .alias("actual")
         )
     )
-    # the seasonal shift is season_lag BUCKETS, so the interval unit must
-    # follow the bucket granularity (a day-bucketed series shifted by
-    # "168 HOURS" would never align with date_trunc('day') buckets)
-    units = {
-        "minute": "MINUTES",
-        "hour": "HOURS",
-        "day": "DAYS",
-        "week": "WEEKS",
-    }
-    try:
-        unit = units[bucket]
-    except KeyError:
-        raise ValueError(
-            f"unsupported bucket {bucket!r}; one of {sorted(units)}"
-        ) from None
     prev = actuals.select(
         type_col,
-        (F.col("bucket") + F.expr(f"INTERVAL {season_lag} {unit}")).alias(
-            "bucket"
-        ),
+        (F.col("bucket") + E.bucket_interval(bucket, season_lag)).alias("bucket"),
         F.col("actual").alias("forecast"),
     )
     scored = actuals.join(prev, [type_col, "bucket"])

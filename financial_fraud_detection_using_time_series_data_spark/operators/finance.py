@@ -23,8 +23,12 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .forecast import per_series
 
 
 def ohlc_bars(
@@ -782,11 +786,10 @@ def garch_variance(
     filter with fixed params is what a scoring pipeline replays.
 
     The linear state recursion is inherently sequential per series, so
-    it runs in `mapInPandas` over the rollup frame repartitioned by
-    series (the repo's documented Arrow escape hatch, same contract as
-    `holt_forecast`: the heavy lifting — the corpus → rollup collapse —
-    happened in ONE map-side-combined shuffle; the Python loop touches
-    |buckets| rows per series). Returns are quantized to the 1e-9 grid
+    it runs in `forecast.per_series` over the rollup frame (the heavy
+    lifting — the corpus → rollup collapse — happened in ONE
+    map-side-combined shuffle; the Python loop touches |buckets| rows
+    per series). Returns are quantized to the 1e-9 grid
     BEFORE the recursion, so both engines iterate identical doubles and
     the recursion is bit-reproducible (oracle: recursive CTE).
     Emits per (series, bucket): log_return, cond_var, std_resid.
@@ -802,59 +805,22 @@ def garch_variance(
         F.col("q").isNotNull()
     ).select(series_col, "bucket", "q")
 
-    ser_ddl = df.schema[series_col].dataType.simpleString()
-    # pandas dtype derived from the actual Spark type (int32/short series
-    # ids must not be emitted as int64 against their true DDL type);
-    # unlisted types fall back to object and let Arrow cast.
-    ser_pd = {
-        "string": "object",
-        "bigint": "int64",
-        "int": "int32",
-        "smallint": "int16",
-        "tinyint": "int8",
-    }.get(ser_ddl, "object")
-    schema = (
-        f"{series_col} {ser_ddl}, bucket timestamp, log_return double, "
-        "cond_var double, std_resid double"
-    )
+    def _fit(g):
+        v = om / (1.0 - al - be)
+        prev_r = None
+        for bkt, qi in zip(g["bucket"], g["q"]):
+            if prev_r is not None:
+                v = om + al * (prev_r * prev_r) + be * v
+            r = float(qi) / 1e9
+            yield bkt, r, v, r / math.sqrt(v) if v > 0 else None
+            prev_r = r
 
-    def _filter_partition(batches):
-        import math
-
-        import pandas as pd
-
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        sers, buckets, rets, cvars, resids = [], [], [], [], []
-        for ser, g in pdf.sort_values([series_col, "bucket"]).groupby(
-            series_col, sort=False
-        ):
-            v = om / (1.0 - al - be)
-            prev_r = None
-            for bkt, qi in zip(g["bucket"], g["q"]):
-                if prev_r is not None:
-                    v = om + al * (prev_r * prev_r) + be * v
-                r = float(qi) / 1e9
-                sers.append(ser)
-                buckets.append(bkt)
-                rets.append(r)
-                cvars.append(v)
-                resids.append(r / math.sqrt(v) if v > 0 else None)
-                prev_r = r
-        yield pd.DataFrame(
-            {
-                series_col: pd.Series(sers, dtype=ser_pd),
-                "bucket": pd.Series(buckets),
-                "log_return": pd.Series(rets, dtype="float64"),
-                "cond_var": pd.Series(cvars, dtype="float64"),
-                "std_resid": pd.Series(resids, dtype="float64"),
-            }
-        )
-
-    return per.repartition(series_col).mapInPandas(
-        _filter_partition, schema=schema
+    return per_series(
+        per,
+        series_col,
+        "bucket",
+        "bucket timestamp, log_return double, cond_var double, std_resid double",
+        _fit,
     )
 
 

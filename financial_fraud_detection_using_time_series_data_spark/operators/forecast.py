@@ -1,4 +1,5 @@
-"""Per-entity exponential-smoothing forecasts (beyond-reference).
+"""Per-entity forecasts and baseline scorecards over bucket rollups
+(beyond-reference).
 
 The reference scores the present (``src/models/``); a monitoring stack
 also needs a cheap forward view — "what volume/spend do we EXPECT from
@@ -6,53 +7,95 @@ this account next week?" — so that tomorrow's anomaly screens have a
 baseline. Holt's linear (double-exponential) smoothing is the workhorse:
 level + trend state folded once through each entity's bucketed series.
 
-The recursion is genuinely sequential per entity, so this is the
+The recursions are genuinely sequential per entity, so they take the
 documented Arrow escape hatch (SURVEY §2.12: built-ins first, pandas
-UDFs where semantics demand): a ``groupBy(entity).applyInPandas`` whose
-per-group state is two floats, running over the BUCKET ROLLUP — never
-the raw events.
+UDFs where semantics demand) through ONE harness, `per_series`, whose
+per-series state is a few floats running over the BUCKET ROLLUP
+(`_rollup`) — never the raw events.
 
 Scale notes (100 TB):
 - Stage 1 is a map-side-combined groupBy to |entities|·|buckets| rows
   (decimal-exact sums); the corpus is touched exactly once.
-- Stage 2 shuffles only the rollup on the entity key. The smoother runs
-  as ``mapInPandas`` over entity-repartitioned partitions — ONE Python
+- Stage 2 shuffles only the rollup on the entity key. The recursion runs
+  as ``mapInPandas`` over key-repartitioned partitions — ONE Python
   call per partition, with the per-entity split done by pandas groupby
-  inside it — rather than ``applyInPandas``'s one call per entity
-  (measured 4ms/group of pure invocation overhead at |entities|=1500,
-  ~6s of the benched cost). Output is |entities|·horizon rows.
+  inside it, not one call per entity (measured 4ms/group of pure
+  invocation overhead at |entities|=1500).
 - Arrow batches move the rollup, not the corpus; no collect, no
   driver-side loop over entities.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import exprs as E
 
-# Spark DDL type -> pandas dtype for id columns emitted by mapInPandas.
+
+# Spark DDL type -> pandas dtype for the columns `per_series` emits.
 # Anything not listed (decimal, date, ...) falls back to "object" so the
 # Python values pass through untyped and Arrow casts them to the declared
 # DDL type — never assume int64 for a non-long id.
-_ID_PD_DTYPE = {
+_PD_DTYPE = {
     "string": "object",
     "bigint": "int64",
+    "long": "int64",
     "int": "int32",
     "smallint": "int16",
     "tinyint": "int8",
+    "double": "float64",
+    "timestamp": "datetime64[ns]",
 }
 
 
-def _id_ddl(df: DataFrame, col: str) -> tuple[str, str]:
-    """DDL type + pandas dtype for an id column carried through a
-    mapInPandas output schema. Both are derived from the input frame's
-    actual Spark type so string / int / short entity ids all declare a
-    pandas dtype consistent with the DDL (an int32 id used to be emitted
-    as an int64 Series against an ``int`` DDL — a latent Arrow cast
-    mismatch)."""
-    ddl = df.schema[col].dataType.simpleString()
-    return ddl, _ID_PD_DTYPE.get(ddl, "object")
+def per_series(
+    rolled: DataFrame, key: str, order: str, schema: str, fit
+) -> DataFrame:
+    """Run a sequential recursion once per ``key`` series of ``rolled``.
+
+    ``fit(group_pdf)`` gets one series' rows sorted by ``order`` and
+    yields row tuples for the DDL ``schema``; the output is ``key`` (in
+    its input type) followed by those columns. One
+    ``mapInPandas`` call per partition after ``repartition(key)``; the
+    output pandas dtypes derive from the DDL, so an int/smallint/string
+    key is emitted as itself. Series whose key is NULL are dropped
+    (pandas groupby skips NaN keys).
+    """
+    ddl = f"{key} {rolled.schema[key].dataType.simpleString()}, {schema}"
+    fields = [f.split() for f in ddl.split(",")]
+    names = [n for n, _ in fields]
+    dtypes = [_PD_DTYPE.get(t, "object") for _, t in fields]
+
+    def _partition(batches):
+        import pandas as pd
+
+        chunks = list(batches)
+        if not chunks:
+            return
+        pdf = pd.concat(chunks, ignore_index=True)
+        rows = []
+        for k, g in pdf.sort_values([key, order]).groupby(key, sort=False):
+            rows.extend((k, *r) for r in fit(g))
+        cols = list(zip(*rows)) if rows else [()] * len(names)
+        yield pd.DataFrame(
+            {n: pd.Series(list(c), dtype=d) for n, c, d in zip(names, cols, dtypes)}
+        )
+
+    return rolled.repartition(key).mapInPandas(_partition, schema=ddl)
+
+
+def _rollup(
+    df: DataFrame, entity_col: str, ts_col: str, value_col: str, bucket: str
+) -> DataFrame:
+    """(entity_col, __b, __y): per-entity ``bucket`` totals, summed as
+    DECIMAL(25,2) so every engine and partitioning folds the same
+    double."""
+    return df.groupBy(
+        F.col(entity_col),
+        F.date_trunc(bucket, F.col(ts_col)).alias("__b"),
+    ).agg(E.dsum(value_col).cast("double").alias("__y"))
 
 
 def holt_forecast(
@@ -73,58 +116,30 @@ def holt_forecast(
     dropped (no trend is estimable).
     """
     a, b_, h = float(alpha), float(beta), int(horizon)
-    rolled = df.groupBy(
-        F.col(entity_col).alias("__e"),
-        F.date_trunc(bucket, F.col(ts_col)).alias("__b"),
-    ).agg(F.sum(F.col(value_col).cast("decimal(25,2)")).cast("double").alias("__y"))
 
-    ent_ddl, ent_pd = _id_ddl(df, entity_col)
-    schema = (
-        f"{entity_col} {ent_ddl}, step int, forecast double, "
-        "level double, trend double, sse double, n_obs long"
-    )
-
-    def _fit_partition(batches):
-        import pandas as pd
-
-        chunks = list(batches)
-        if not chunks:
+    def _fit(g):
+        y = g["__y"].to_numpy()
+        if len(y) < 2:
             return
-        pdf = pd.concat(chunks, ignore_index=True)
-        ents, steps, fcs, levs, trs, sses, ns = [], [], [], [], [], [], []
-        for ent, g in pdf.sort_values(["__e", "__b"]).groupby("__e", sort=False):
-            y = g["__y"].to_numpy()
-            if len(y) < 2:
-                continue
-            lev = float(y[0])
-            tr = float(y[1]) - float(y[0])
-            sse = 0.0
-            for t in range(1, len(y)):
-                err = float(y[t]) - (lev + tr)
-                sse += err * err
-                new_lev = a * float(y[t]) + (1.0 - a) * (lev + tr)
-                tr = b_ * (new_lev - lev) + (1.0 - b_) * tr
-                lev = new_lev
-            ents.extend([ent] * h)
-            steps.extend(range(1, h + 1))
-            fcs.extend(lev + k * tr for k in range(1, h + 1))
-            levs.extend([lev] * h)
-            trs.extend([tr] * h)
-            sses.extend([sse] * h)
-            ns.extend([len(y)] * h)
-        yield pd.DataFrame(
-            {
-                entity_col: pd.Series(ents, dtype=ent_pd),
-                "step": pd.Series(steps, dtype="int32"),
-                "forecast": pd.Series(fcs, dtype="float64"),
-                "level": pd.Series(levs, dtype="float64"),
-                "trend": pd.Series(trs, dtype="float64"),
-                "sse": pd.Series(sses, dtype="float64"),
-                "n_obs": pd.Series(ns, dtype="int64"),
-            }
-        )
+        lev = float(y[0])
+        tr = float(y[1]) - float(y[0])
+        sse = 0.0
+        for t in range(1, len(y)):
+            err = float(y[t]) - (lev + tr)
+            sse += err * err
+            new_lev = a * float(y[t]) + (1.0 - a) * (lev + tr)
+            tr = b_ * (new_lev - lev) + (1.0 - b_) * tr
+            lev = new_lev
+        for k in range(1, h + 1):
+            yield k, lev + k * tr, lev, tr, sse, len(y)
 
-    return rolled.repartition("__e").mapInPandas(_fit_partition, schema=schema)
+    return per_series(
+        _rollup(df, entity_col, ts_col, value_col, bucket),
+        entity_col,
+        "__b",
+        "step int, forecast double, level double, trend double, sse double, n_obs long",
+        _fit,
+    )
 
 
 def holt_winters_forecast(
@@ -143,12 +158,7 @@ def holt_winters_forecast(
     over its per-``bucket`` amount series — the seasonal completion of
     `holt_forecast` (daily/weekly cycles dominate transaction volume;
     a trend-only smoother launders the cycle into its error term).
-
-    Same scale shape as `holt_forecast`: the corpus is touched ONCE by
-    the bucket rollup (map-side combined decimal sums); the recursive
-    smoother runs per entity inside `mapInPandas` over the |entities| ×
-    |buckets| rollup — the documented Arrow escape hatch for
-    inherently-sequential state. Output is |entities| × horizon rows.
+    Output is |entities| × horizon rows.
 
     Initialization (standard additive HW): level = mean of the first
     season; trend = (mean of season 2 − mean of season 1)/m; seasonals =
@@ -160,74 +170,47 @@ def holt_winters_forecast(
     fewer than 2·``season_length`` buckets are dropped (the seasonal
     profile is not estimable). Missing buckets are treated as gaps in
     the index (no zero-fill) — compose with `resample_ffill` upstream
-    when a dense grid is wanted.
+    when a dense grid is wanted. ``season_length`` must be at least 1.
     """
-    a, b_, g_, m, h = float(alpha), float(beta), float(gamma), int(season_length), int(horizon)
-    rolled = df.groupBy(
-        F.col(entity_col).alias("__e"),
-        F.date_trunc(bucket, F.col(ts_col)).alias("__b"),
-    ).agg(F.sum(F.col(value_col).cast("decimal(25,2)")).cast("double").alias("__y"))
-
-    ent_ddl, ent_pd = _id_ddl(df, entity_col)
-    schema = (
-        f"{entity_col} {ent_ddl}, step int, forecast double, "
-        "level double, trend double, sse double, n_obs long"
-    )
-
-    def _fit_partition(batches):
-        import numpy as np
-        import pandas as pd
-
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        ents, steps, fcs, levs, trs, sses, ns = [], [], [], [], [], [], []
-        for ent, grp in pdf.sort_values(["__e", "__b"]).groupby("__e", sort=False):
-            y = grp["__y"].to_numpy(dtype=np.float64)
-            n = len(y)
-            if n < 2 * m:
-                continue
-            # exact cent sums: y is a DECIMAL(25,2) total as double, so
-            # round(y*100) recovers the integer cents losslessly
-            cents = np.rint(y * 100.0).astype(np.int64)
-            s1 = int(cents[:m].sum()) / 100.0 / m
-            s2 = int(cents[m : 2 * m].sum()) / 100.0 / m
-            lev = s1
-            tr = (s2 - s1) / m
-            seas = (y[:m] - s1).astype(np.float64)
-            sse = 0.0
-            for t in range(m, n):
-                si = t % m
-                pred = lev + tr + seas[si]
-                err = float(y[t]) - pred
-                sse += err * err
-                new_lev = a * (float(y[t]) - seas[si]) + (1.0 - a) * (lev + tr)
-                tr = b_ * (new_lev - lev) + (1.0 - b_) * tr
-                seas[si] = g_ * (float(y[t]) - new_lev) + (1.0 - g_) * seas[si]
-                lev = new_lev
-            ents.extend([ent] * h)
-            steps.extend(range(1, h + 1))
-            fcs.extend(
-                lev + k * tr + seas[(n + k - 1) % m] for k in range(1, h + 1)
-            )
-            levs.extend([lev] * h)
-            trs.extend([tr] * h)
-            sses.extend([sse] * h)
-            ns.extend([n] * h)
-        yield pd.DataFrame(
-            {
-                entity_col: pd.Series(ents, dtype=ent_pd),
-                "step": pd.Series(steps, dtype="int32"),
-                "forecast": pd.Series(fcs, dtype="float64"),
-                "level": pd.Series(levs, dtype="float64"),
-                "trend": pd.Series(trs, dtype="float64"),
-                "sse": pd.Series(sses, dtype="float64"),
-                "n_obs": pd.Series(ns, dtype="int64"),
-            }
+    if int(season_length) < 1:
+        raise ValueError(
+            f"holt_winters_forecast: season_length = {season_length} must be >= 1"
         )
+    a, b_, g_, m, h = float(alpha), float(beta), float(gamma), int(season_length), int(horizon)
 
-    return rolled.repartition("__e").mapInPandas(_fit_partition, schema=schema)
+    def _fit(grp):
+        y = grp["__y"].to_numpy(dtype=np.float64)
+        n = len(y)
+        if n < 2 * m:
+            return
+        # exact cent sums: y is a DECIMAL(25,2) total as double, so
+        # round(y*100) recovers the integer cents losslessly
+        cents = np.rint(y * 100.0).astype(np.int64)
+        s1 = int(cents[:m].sum()) / 100.0 / m
+        s2 = int(cents[m : 2 * m].sum()) / 100.0 / m
+        lev = s1
+        tr = (s2 - s1) / m
+        seas = (y[:m] - s1).astype(np.float64)
+        sse = 0.0
+        for t in range(m, n):
+            si = t % m
+            pred = lev + tr + seas[si]
+            err = float(y[t]) - pred
+            sse += err * err
+            new_lev = a * (float(y[t]) - seas[si]) + (1.0 - a) * (lev + tr)
+            tr = b_ * (new_lev - lev) + (1.0 - b_) * tr
+            seas[si] = g_ * (float(y[t]) - new_lev) + (1.0 - g_) * seas[si]
+            lev = new_lev
+        for k in range(1, h + 1):
+            yield k, lev + k * tr + seas[(n + k - 1) % m], lev, tr, sse, n
+
+    return per_series(
+        _rollup(df, entity_col, ts_col, value_col, bucket),
+        entity_col,
+        "__b",
+        "step int, forecast double, level double, trend double, sse double, n_obs long",
+        _fit,
+    )
 
 
 def kalman_filter(
@@ -245,65 +228,39 @@ def kalman_filter(
     is learned from the noise ratio) behind online fraud baselines.
     State: level L, variance P; per step Pₚ=P+q, K=Pₚ/(Pₚ+r),
     L←L+K·(y−L), P←(1−K)·Pₚ; initialized L₀=y₀, P₀=p0 (no update on
-    the first observation).
+    the first observation). Requires r > 0, q ≥ 0 and p0 ≥ 0, so the
+    gain's denominator Pₚ+r is positive.
 
-    Shape: one (entity, bucket) rollup shuffle (decimal-exact y), then
-    the sequential recursion runs inside ``applyInPandas`` over hash
-    BUCKETS of entities (64) — per-series state is two floats, each
-    bucket holds many calendar-bounded series, and bucketing amortizes
-    the per-Arrow-call overhead that dominates when series are short.
     Float ops are evaluated in the exact left-to-right order the SQL
     twin's recursive CTE uses, so outputs are bit-identical
-    cross-engine. At 100 TB: the groupBy is the only corpus pass;
-    raise the bucket count with the cluster.
+    cross-engine. At 100 TB: the rollup groupBy is the only corpus pass.
     """
-    qf, rf, p0f = float(q), float(r), float(p0)
-    rolled = df.groupBy(
-        F.col(entity_col).alias("__e"),
-        F.date_trunc(bucket, F.col(ts_col)).alias("__b"),
-    ).agg(F.sum(F.col(value_col).cast("decimal(25,2)")).cast("double").alias("__y"))
-    # bucket entities so each Arrow call carries MANY series — per-group
-    # applyInPandas overhead (~ms/group) dominates when series are short;
-    # 64 buckets amortizes it while staying perfectly parallel at 32 cores
-    rolled = rolled.withColumn(
-        "__g", F.pmod(F.xxhash64(F.col("__e")), F.lit(64))
-    )
-
-    ent_ddl, _ = _id_ddl(df, entity_col)
-    schema = f"{entity_col} {ent_ddl}, step long, y double, level double"
-
-    def _run(pdf):
-        import pandas as pd
-
-        ents_out, steps, ys_out, levels_out = [], [], [], []
-        for ent, grp in pdf.sort_values(["__e", "__b"]).groupby(
-            "__e", sort=False
-        ):
-            ys = [float(v) for v in grp["__y"]]
-            p = p0f
-            level = ys[0]
-            levels = [level]
-            for y in ys[1:]:
-                pp = p + qf
-                k = pp / (pp + rf)
-                level = level + k * (y - level)
-                p = (1.0 - k) * pp
-                levels.append(level)
-            n = len(ys)
-            ents_out.extend([ent] * n)
-            steps.extend(range(1, n + 1))
-            ys_out.extend(ys)
-            levels_out.extend(levels)
-        return pd.DataFrame(
-            {
-                entity_col: ents_out,
-                "step": steps,
-                "y": ys_out,
-                "level": levels_out,
-            }
+    if not (float(r) > 0.0 and float(q) >= 0.0 and float(p0) >= 0.0):
+        raise ValueError(
+            f"kalman_filter: need r > 0, q >= 0 and p0 >= 0 "
+            f"(got q={q}, r={r}, p0={p0})"
         )
+    qf, rf, p0f = float(q), float(r), float(p0)
 
-    return rolled.groupBy("__g").applyInPandas(_run, schema=schema)
+    def _fit(grp):
+        ys = [float(v) for v in grp["__y"]]
+        p = p0f
+        level = ys[0]
+        yield 1, ys[0], level
+        for step, y in enumerate(ys[1:], start=2):
+            pp = p + qf
+            k = pp / (pp + rf)
+            level = level + k * (y - level)
+            p = (1.0 - k) * pp
+            yield step, y, level
+
+    return per_series(
+        _rollup(df, entity_col, ts_col, value_col, bucket),
+        entity_col,
+        "__b",
+        "step long, y double, level double",
+        _fit,
+    )
 
 
 def croston_forecast(
@@ -323,63 +280,33 @@ def croston_forecast(
 
     The state recursion touches ONLY demand occurrences (zeros enter
     through the interval gaps), so the rollup keeps its sparse form —
-    no dense calendar grid is materialized. Runs in the same
-    hash-bucketed applyInPandas harness as ``kalman_filter``, with
-    float ops in the recursive-CTE order of the oracle twin
-    (bit-identical). Initialization: z₀ = first demand, p₀ = 1.
+    no dense calendar grid is materialized. Float ops follow the
+    recursive-CTE order of the oracle twin (bit-identical).
+    Initialization: z₀ = first demand, p₀ = 1.
 
     Returns the final state per entity: (entity, n_demands, z, p,
     forecast_rate).
     """
     af = float(alpha)
-    rolled = (
-        df.groupBy(
-            F.col(entity_col).alias("__e"),
-            F.date_trunc(bucket, F.col(ts_col)).alias("__b"),
-        )
-        .agg(
-            F.sum(F.col(value_col).cast("decimal(25,2)"))
-            .cast("double")
-            .alias("__y")
-        )
-        .where(F.col("__y") > 0)
+
+    def _fit(grp):
+        ys = [float(v) for v in grp["__y"]]
+        days = list(grp["__b"])
+        z = ys[0]
+        p = 1.0
+        for i in range(1, len(ys)):
+            gap = float((days[i] - days[i - 1]).days)
+            z = z + af * (ys[i] - z)
+            p = p + af * (gap - p)
+        yield len(ys), z, p, z / p
+
+    return per_series(
+        _rollup(df, entity_col, ts_col, value_col, bucket).where(F.col("__y") > 0),
+        entity_col,
+        "__b",
+        "n_demands long, z double, p double, forecast_rate double",
+        _fit,
     )
-    rolled = rolled.withColumn(
-        "__g", F.pmod(F.xxhash64(F.col("__e")), F.lit(64))
-    )
-
-    ent_ddl, _ = _id_ddl(df, entity_col)
-    schema = f"{entity_col} {ent_ddl}, n_demands long, z double, p double, forecast_rate double"
-
-    def _run(pdf):
-        import pandas as pd
-
-        ents, ns, zs, ps, fr = [], [], [], [], []
-        for ent, grp in pdf.sort_values(["__e", "__b"]).groupby("__e", sort=False):
-            ys = [float(v) for v in grp["__y"]]
-            days = list(grp["__b"])
-            z = ys[0]
-            p = 1.0
-            for i in range(1, len(ys)):
-                gap = float((days[i] - days[i - 1]).days)
-                z = z + af * (ys[i] - z)
-                p = p + af * (gap - p)
-            ents.append(ent)
-            ns.append(len(ys))
-            zs.append(z)
-            ps.append(p)
-            fr.append(z / p)
-        return pd.DataFrame(
-            {
-                entity_col: ents,
-                "n_demands": ns,
-                "z": zs,
-                "p": ps,
-                "forecast_rate": fr,
-            }
-        )
-
-    return rolled.groupBy("__g").applyInPandas(_run, schema=schema)
 
 
 def forecast_accuracy(
@@ -400,7 +327,7 @@ def forecast_accuracy(
     - ``mean``    ŷ_t = mean of ALL prior buckets (expanding)
 
     Both shifts are expressed in BUCKET units derived from ``bucket``
-    (the `seasonal_naive_backtest` grain→interval map): with
+    (`exprs.bucket_interval`): with
     bucket='hour' the naive baseline is the previous HOUR, not silently
     the same hour yesterday, and week/month grains shift by whole
     weeks/months so the shifted join always aligns with the
@@ -423,39 +350,26 @@ def forecast_accuracy(
     folds 1e-9-grid integer micro-units (order-invariant, oracle-exact).
     Output is |types|·3 rows.
     """
-    units = {
-        "minute": "MINUTES",
-        "hour": "HOURS",
-        "day": "DAYS",
-        "week": "WEEKS",
-        "month": "MONTHS",
-    }
-    try:
-        unit = units[bucket]
-    except KeyError:
-        raise ValueError(
-            f"unsupported bucket {bucket!r}; one of {sorted(units)}"
-        ) from None
+    naive_shift = E.bucket_interval(bucket, 1)
+    season_shift = E.bucket_interval(bucket, season_lag)
     b = F.date_trunc(bucket, F.col(ts_col)).alias("bucket")
     daily = df.groupBy(type_col, b).agg(
         F.sum(F.col(value_col).cast("decimal(25,2)")).alias("x_dec")
     )
-    # round 12 (guide §2.4/§5): the bounded |types|·|buckets| rollup
-    # feeds both shifted join sides and the windowed base — each
-    # reference re-ran the corpus groupBy
+    # the bounded |types|·|buckets| rollup feeds both shifted join sides
+    # and the windowed base; without the break each reference re-runs
+    # the corpus groupBy
     base = daily.select(
         type_col, "bucket", F.col("x_dec").cast("double").alias("y"), "x_dec"
     ).localCheckpoint(eager=False)
     shift1 = base.select(
         type_col,
-        (F.col("bucket") + F.expr(f"INTERVAL 1 {unit}")).alias("bucket"),
+        (F.col("bucket") + naive_shift).alias("bucket"),
         F.col("y").alias("__naive"),
     )
     shifts = base.select(
         type_col,
-        (F.col("bucket") + F.expr(f"INTERVAL {int(season_lag)} {unit}")).alias(
-            "bucket"
-        ),
+        (F.col("bucket") + season_shift).alias("bucket"),
         F.col("y").alias("__snaive"),
     )
     w_prior = Window.partitionBy(type_col).orderBy("bucket").rowsBetween(
@@ -537,28 +451,14 @@ def pinball_loss(
     bucket totals, the per-row τ-weighted loss micro-folds on the 1e-9
     grid. One rollup shuffle; output |types|·|quantiles| rows.
     """
-    units = {
-        "minute": "MINUTES",
-        "hour": "HOURS",
-        "day": "DAYS",
-        "week": "WEEKS",
-        "month": "MONTHS",
-    }
-    try:
-        unit = units[bucket]
-    except KeyError:
-        raise ValueError(
-            f"unsupported bucket {bucket!r}; one of {sorted(units)}"
-        ) from None
+    season_shift = E.bucket_interval(bucket, season_lag)
     b = F.date_trunc(bucket, F.col(ts_col)).alias("bucket")
     rolled = df.groupBy(type_col, b).agg(
         F.sum(F.col(value_col).cast("decimal(25,2)")).alias("x_dec")
     )
     shifted = rolled.select(
         type_col,
-        (F.col("bucket") + F.expr(f"INTERVAL {int(season_lag)} {unit}")).alias(
-            "bucket"
-        ),
+        (F.col("bucket") + season_shift).alias("bucket"),
         F.col("x_dec").alias("__yhat_dec"),
     )
     joined = rolled.join(shifted, [type_col, "bucket"]).select(
@@ -610,69 +510,39 @@ def theta_forecast(
     average. Completes the forecasting shelf next to `holt_forecast`
     (additive trend) and `croston_forecast` (intermittent demand).
 
-    The SES recursion is inherently sequential per series, so it runs
-    in mapInPandas over the |entities|·|buckets| rollup (the
-    `holt_forecast` contract — the corpus collapsed in ONE map-side-
-    combined shuffle first). The slope folds from EXACT integer sums
+    The SES recursion runs in `per_series` over the |entities|·|buckets|
+    rollup, like `holt_forecast`. The slope folds from EXACT integer sums
     (t indices × cent values as Python bigints, overflow-free), so both
     the recursion inputs and the drift are bit-reproducible against the
     recursive-CTE oracle. Entities with fewer than 2 buckets drop.
     Emits per (entity, step 1..horizon): forecast, level, slope, n_obs.
     """
     a, h = float(alpha), int(horizon)
-    rolled = df.groupBy(
-        F.col(entity_col).alias("__e"),
-        F.date_trunc(bucket, F.col(ts_col)).alias("__b"),
-    ).agg(
-        F.sum(F.col(value_col).cast("decimal(25,2)")).cast("double").alias("__y")
-    )
 
-    ent_ddl, ent_pd = _id_ddl(df, entity_col)
-    schema = (
-        f"{entity_col} {ent_ddl}, step int, forecast double, "
-        "level double, slope double, n_obs long"
-    )
-
-    def _fit_partition(batches):
-        import pandas as pd
-
-        chunks = list(batches)
-        if not chunks:
+    def _fit(g):
+        y = [float(v) for v in g["__y"]]
+        n = len(y)
+        if n < 2:
             return
-        pdf = pd.concat(chunks, ignore_index=True)
-        ents, steps, fcs, levs, slopes, ns = [], [], [], [], [], []
-        for ent, g in pdf.sort_values(["__e", "__b"]).groupby("__e", sort=False):
-            y = [float(v) for v in g["__y"]]
-            n = len(y)
-            if n < 2:
-                continue
-            # OLS slope from exact integer sums (cents × 1-based index)
-            cents = [int(round(v * 100)) for v in y]
-            st = n * (n + 1) // 2
-            stt = n * (n + 1) * (2 * n + 1) // 6
-            sy = sum(cents)
-            sty = sum((i + 1) * c for i, c in enumerate(cents))
-            num = float(n * sty - st * sy)
-            den = float(n * stt - st * st)
-            b = num / den / 100.0
-            lev = y[0]
-            for t in range(1, n):
-                lev = a * y[t] + (1.0 - a) * lev
-            ents.extend([ent] * h)
-            steps.extend(range(1, h + 1))
-            fcs.extend(lev + 0.5 * b * k for k in range(1, h + 1))
-            levs.extend([lev] * h)
-            slopes.extend([b] * h)
-            ns.extend([n] * h)
-        yield pd.DataFrame(
-            {
-                entity_col: pd.Series(ents, dtype=ent_pd),
-                "step": pd.Series(steps, dtype="int32"),
-                "forecast": pd.Series(fcs, dtype="float64"),
-                "level": pd.Series(levs, dtype="float64"),
-                "slope": pd.Series(slopes, dtype="float64"),
-                "n_obs": pd.Series(ns, dtype="int64"),
-            }
-        )
+        # OLS slope from exact integer sums (cents × 1-based index)
+        cents = [int(round(v * 100)) for v in y]
+        st = n * (n + 1) // 2
+        stt = n * (n + 1) * (2 * n + 1) // 6
+        sy = sum(cents)
+        sty = sum((i + 1) * c for i, c in enumerate(cents))
+        num = float(n * sty - st * sy)
+        den = float(n * stt - st * st)
+        b = num / den / 100.0
+        lev = y[0]
+        for t in range(1, n):
+            lev = a * y[t] + (1.0 - a) * lev
+        for k in range(1, h + 1):
+            yield k, lev + 0.5 * b * k, lev, b, n
 
-    return rolled.repartition("__e").mapInPandas(_fit_partition, schema=schema)
+    return per_series(
+        _rollup(df, entity_col, ts_col, value_col, bucket),
+        entity_col,
+        "__b",
+        "step int, forecast double, level double, slope double, n_obs long",
+        _fit,
+    )

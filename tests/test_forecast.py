@@ -202,3 +202,58 @@ def test_holt_winters_drops_short_series(spark):
         forecast.holt_winters_forecast(df, bucket="hour", season_length=4).collect()
         == []
     )
+
+
+@pytest.mark.parametrize("season_length", [-1, 0])
+def test_holt_winters_rejects_season_length_below_one(spark, season_length):
+    """A non-positive season is rejected when the frame is built: -1
+    used to return rows silently, 0 died in the Python worker."""
+    df = _daily(spark, {1: [float(v) for v in range(1, 9)]})
+    with pytest.raises(ValueError, match="season_length"):
+        forecast.holt_winters_forecast(df, bucket="day", season_length=season_length)
+
+
+@pytest.mark.parametrize(
+    "q, r, p0", [(0.0, 0.0, 0.0), (0.05, -0.5, 1.0), (-0.05, 0.5, 1.0), (0.05, 0.5, -1.0)]
+)
+def test_kalman_rejects_degenerate_noise(spark, q, r, p0):
+    """q = r = p0 = 0 used to die in the Python worker (0/0 gain); the
+    filter needs r > 0, q >= 0 and p0 >= 0, checked at build time."""
+    df = _daily(spark, {1: [1.0, 2.0, 3.0]})
+    with pytest.raises(ValueError, match="kalman_filter"):
+        forecast.kalman_filter(df, q=q, r=r, p0=p0)
+
+
+_KEYS_BY_TYPE = {
+    "bigint": [3_000_000_000, -2],
+    "int": [2_000_000_000, -5],
+    "smallint": [30_000, -7],
+    "string": ["a", "b'c"],
+}
+
+
+@pytest.mark.parametrize("key_type", sorted(_KEYS_BY_TYPE))
+def test_per_series_operators_keep_key_type(spark, key_type):
+    """Every operator on the per-series harness emits its key column in
+    the input's Spark type, and the key values round-trip."""
+    keys = _KEYS_BY_TYPE[key_type]
+    t0 = datetime(2024, 1, 1)
+    rows = [
+        (k, t0 + timedelta(days=d), 10.0 + 3.0 * j + d * (d % 3))
+        for j, k in enumerate(keys)
+        for d in range(8)
+    ]
+    df = spark.createDataFrame(rows, f"k {key_type}, ts timestamp, value double")
+    outs = {
+        "holt": forecast.holt_forecast(df, "k", "ts", "value"),
+        "holt_winters": forecast.holt_winters_forecast(
+            df, "k", "ts", "value", bucket="day", season_length=2, horizon=2
+        ),
+        "kalman": forecast.kalman_filter(df, "k", "ts", "value"),
+        "croston": forecast.croston_forecast(df, "k", "ts", "value"),
+        "theta": forecast.theta_forecast(df, "k", "ts", "value"),
+        "garch": finance.garch_variance(df, "ts", "k", "value"),
+    }
+    for name, out in outs.items():
+        assert out.schema["k"].dataType == df.schema["k"].dataType, name
+        assert {r["k"] for r in out.collect()} == set(keys), name

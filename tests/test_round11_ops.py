@@ -358,7 +358,7 @@ def test_qini_curve_clamps_out_of_range_scores(spark):
 
 def test_gesd_accepts_integer_series_column(spark):
     """A bigint series id must not crash the driver-side schema (the
-    forecast._id_ddl bug class)."""
+    key-dtype bug class `forecast.per_series` pins)."""
     rows = [(i, float(3600 * i), 7, float(v)) for i, v in enumerate(
         [10.0] * 20 + [400.0] + [10.0] * 5 + [11.0] * 4
     )]

@@ -503,3 +503,19 @@ def test_seasonal_naive_backtest_day_bucket_aligns(spark):
         df, bucket="day", season_lag=7
     ).collect()
     assert len(out) == 1 and out[0]["n_eval"] == 7 and out[0]["mae"] == 0.0
+
+
+def test_seasonal_naive_backtest_month_bucket_aligns(spark):
+    """month shares the grain map of forecast_accuracy/pinball_loss:
+    a 12-month lag lands on date_trunc('month') buckets exactly."""
+    rows = [
+        (m, dt.datetime(2023 + m // 12, m % 12 + 1, 15), 1, "t", 5.0)
+        for m in range(14)
+    ]
+    df = spark.createDataFrame(
+        rows, ["event_id", "ts", "user_id", "event_type", "value"]
+    )
+    out = events_ops.seasonal_naive_backtest(
+        df, bucket="month", season_lag=12
+    ).collect()
+    assert len(out) == 1 and out[0]["n_eval"] == 2 and out[0]["mae"] == 0.0
