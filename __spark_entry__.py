@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from financial_fraud_detection_using_time_series_data_spark.functions import exprs as E
+from financial_fraud_detection_using_time_series_data_spark.functions.local import local_frame
 from financial_fraud_detection_using_time_series_data_spark.operators import (
     behavior,
     dedup,
@@ -7916,7 +7917,7 @@ def q_dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     and Sorted-Neighborhood pair sets over the same corpus — per-method
     counts plus every pairwise intersection. Production dedup runs
     multiple generators and unions them; this is the overlap table that
-    decision is based on. Oracle-backed since round 10: all three
+    decision is based on. Oracle-backed: all three
     generators have SQL twins (md5 oracle-mode MinHash, md5-prefix
     SimHash banding, SNM prefix-key windows), so the census replays as
     a composition of the three pair CTEs; counts are exact integers
@@ -7957,8 +7958,8 @@ def q_dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows.append(
                 (n1, n2, sets[n1].join(sets[n2], ["a", "b"], "left_semi").count())
             )
-    return spark.createDataFrame(
-        rows, "method_a string, method_b string, n_pairs long"
+    return local_frame(
+        spark, rows, "method_a string, method_b string, n_pairs long"
     )
 
 
@@ -8608,7 +8609,8 @@ def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ISOTONIC_CACHE[sf_dir] = model
     bounds = [float(x) for x in model.boundaries]
     preds = [float(x) for x in model.predictions]
-    rows = spark.createDataFrame(
+    rows = local_frame(
+        spark,
         [(i, b, p) for i, (b, p) in enumerate(zip(bounds, preds))],
         "step int, boundary double, calibrated double",
     )

@@ -1,3 +1,3 @@
-from . import exprs
+from . import exprs, local
 
-__all__ = ["exprs"]
+__all__ = ["exprs", "local"]

@@ -76,7 +76,10 @@ def conv_forward(X: np.ndarray, p: dict[str, np.ndarray]):
     H = np.maximum(Z, 0.0)                     # ReLU
     P = H.mean(axis=1)                         # (N, K) mean-pool over time
     logit = P @ p["wd"] + p["bd"]
-    prob = 1.0 / (1.0 + np.exp(-logit))
+    # a logit below about -709 overflows exp to inf, and prob is then
+    # exactly 0.0 — the intended limit, so the warning is noise
+    with np.errstate(over="ignore"):
+        prob = 1.0 / (1.0 + np.exp(-logit))
     return prob, (V, Z, H, P)
 
 

@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.local import local_frame
+
 # single-bounded-sort budget for rfm_segment's adaptive rank plan: a
 # profile at or below this many entities ranks each axis in one task
 # (a ≤2M-row sort is tens of MB — well inside one executor); above it
@@ -1283,8 +1285,8 @@ def ipf_weights(
         (r, c, n, wt, (float(int(wt / n * 1e6 + 0.5)) / 1e6) if n else None)
         for r, c, n, wt, _ in out
     ]
-    return spark.createDataFrame(
-        out, f"{row_col} string, {col_col} long, n_obs long, "
+    return local_frame(
+        spark, out, f"{row_col} string, {col_col} long, n_obs long, "
         "weight double, raking_factor double"
     )
 

@@ -16,10 +16,12 @@ oracle can reproduce them bit-exactly (xxhash64 is Spark-only).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.exprs import r6
+from ..functions.local import fetch_bounded, local_frame
 
 from .text import char_shingles, fingerprint, normalize, tokens
 
@@ -685,17 +687,13 @@ def dedup_keep_first(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     )
 
 
-def _cc_driver(spark, edges: DataFrame) -> DataFrame:
+def _cc_driver(spark, edges: pa.Table, id_type: str) -> DataFrame:
     """Small-graph connected components: union-find (union-by-min root +
-    path halving) over a collected edge list. Invariant preserved from
+    path halving) over a fetched edge list. Invariant preserved from
     the distributed path: a tree's root is always the minimum id in its
     component (union attaches the larger root under the smaller), so
     ``component = min reachable id`` exactly. Returns (node, component)
-    with the input id type."""
-    import pandas as pd
-
-    id_type = edges.schema["src"].dataType.simpleString()
-    pdf = edges.toPandas()
+    with the input id type, as a local relation."""
     parent: dict = {}
 
     def find(x):
@@ -704,7 +702,8 @@ def _cc_driver(spark, edges: DataFrame) -> DataFrame:
             x = parent[x]
         return x
 
-    for s, t in zip(pdf["src"], pdf["dst"]):
+    src, dst = edges.column("src").to_pylist(), edges.column("dst").to_pylist()
+    for s, t in zip(src, dst):
         ra, rb = find(s), find(t)
         if ra == rb:
             continue
@@ -712,10 +711,11 @@ def _cc_driver(spark, edges: DataFrame) -> DataFrame:
             ra, rb = rb, ra
         parent[rb] = ra
 
-    nodes = pd.unique(pd.concat([pdf["src"], pdf["dst"]], ignore_index=True))
-    out = pd.DataFrame({"node": nodes})
-    out["component"] = [find(n) for n in out["node"]]
-    return spark.createDataFrame(out, schema=f"node {id_type}, component {id_type}")
+    return local_frame(
+        spark,
+        [(n, find(n)) for n in dict.fromkeys(src + dst)],
+        f"node {id_type}, component {id_type}",
+    )
 
 
 def _cc_star(edges: DataFrame, max_iter: int) -> DataFrame:
@@ -830,22 +830,24 @@ def connected_components(
 
     HYBRID small-graph path: upstream pair emission (LSH bucket caps,
     ring degree caps) bounds the edge list far below the corpus size; if
-    the deduped edge count is ≤ ``driver_threshold`` (~2M edges ≈ tens
-    of MB), a driver union-find with path halving replaces the whole
-    iterative phase — ~10 Spark jobs become 1 collect. The edge count is
-    read off the already-checkpointed edge list, so the check costs one
-    cheap job; graphs above the threshold take the distributed rounds
-    unchanged. This is the standard production hybrid (small-graph
-    solve-local, big-graph iterate) — not a local[32]-only shortcut.
+    the deduped symmetric edge list has ≤ ``driver_threshold`` rows (~2M
+    edges ≈ tens of MB), a driver union-find with path halving replaces
+    the whole iterative phase — ~10 Spark jobs become the one bounded
+    fetch that also decides the path, and the result is a local
+    relation. Graphs above the threshold take the distributed rounds
+    unchanged, over the checkpoint the fetch filled. This is the
+    standard production hybrid (small-graph solve-local, big-graph
+    iterate) — not a local[32]-only shortcut.
     """
     # materialize the edge list ONCE — it is joined every round, and
     # without the lineage break each iteration would re-execute the whole
-    # upstream pair-generation (LSH, shingling, …) from scratch
+    # upstream pair-generation (LSH, shingling, …) from scratch; the
+    # first action over it (the driver-path fetch) fills the checkpoint
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionAll(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
     if algorithm == "star":
         return _cc_star(edges, max_iter)
@@ -854,8 +856,10 @@ def connected_components(
             f"connected_components: unknown algorithm {algorithm!r} "
             "(expected 'pointer-jump' or 'star')"
         )
-    if edges.count() <= driver_threshold:
-        return _cc_driver(pairs.sparkSession, edges)
+    table = fetch_bounded(edges, driver_threshold)
+    if table is not None:
+        id_type = edges.schema["src"].dataType.simpleString()
+        return _cc_driver(pairs.sparkSession, table, id_type)
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("component")
     ).localCheckpoint()

@@ -21,6 +21,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.local import fetch_bounded, local_frame
+
 
 def _edges(
     ref: DataFrame, value_col: str, n_bins: int, exact: bool = True
@@ -984,7 +986,8 @@ def pacf(
             v = v * (1.0 - a * a)
             out.append((t, k, float(a)))
             phi_prev = phi
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         out,
         f"{type_col} {df.schema[type_col].dataType.simpleString()}, "
         "lag int, pacf double",
@@ -1894,10 +1897,12 @@ def gesd_outliers(
 
     Scale shape: ONE corpus-sized groupBy collapses to the per-(series,
     bucket) rollup (bounded by series × time span, the hour-grid
-    family contract); each round is one map-side-combined aggregate
-    over that lazily-checkpointed rollup collected at |series| rows —
-    bounded by construction — and removals become literal filters, so
-    no join, no window, no growing plan. Driver work is O(k·|series|).
+    family contract). A rollup of at most ~2M rows (`_esd_iterate`'s
+    ``driver_threshold``) is fetched once and every round runs
+    driver-side; a larger one runs each round as one map-side-combined
+    aggregate over the lazily-checkpointed rollup, collected at
+    |series| rows, with the removals applied as one broadcast anti-join
+    — no window, no growing plan.
     """
     if not 1 <= int(k) <= 20:
         raise ValueError(f"gesd_outliers: k={k} outside 1..20")
@@ -1943,26 +1948,28 @@ def _esd_iterate(
     dropped: list[tuple] = []   # (s, us) removal keys
     import math as _math
 
-    # HYBRID driver-iterate path (round 12, guide §1.2 "the distributed
-    # algorithm first"): the k-round loop below runs one aggregate JOB
-    # per round over the checkpointed rollup — k+1 Spark jobs for what
-    # is, after the one corpus groupBy, pure bounded-frame arithmetic.
-    # When the rollup is small (|series|·|buckets| ≤ ~2M rows, the same
-    # driver_threshold contract as `dedup.connected_components`), collect
-    # it ONCE and run every round in Python with exact integers: the
-    # per-round per-series stats (n, Σq, Σq², max/min with bucket tie-
-    # breaks) are integer folds, identical to the Spark aggregates, and
-    # the μ/σ/R float assembly is the SAME code in both paths — the
-    # trajectory is bit-identical (oracle-hash attested at sf0.01/sf0.1
-    # and pinned by tests/test_round12_fixes.py). Rollups above the
-    # threshold take the distributed per-round loop unchanged.
-    n_rollup = rolled.count()
-    if n_rollup <= driver_threshold:
+    # HYBRID driver-iterate path (guide §1.2 "the distributed algorithm
+    # first"): the k-round loop below runs one aggregate JOB per round
+    # over the checkpointed rollup — k Spark jobs for what is, after the
+    # one corpus groupBy, pure bounded-frame arithmetic. When the rollup
+    # is small (|series|·|buckets| ≤ ~2M rows, the same driver_threshold
+    # contract as `dedup.connected_components`), fetch it ONCE and run
+    # every round in Python with exact integers: the per-round per-series
+    # stats (n, Σq, Σq², max/min with bucket tie-breaks) are integer
+    # folds, identical to the Spark aggregates, and the μ/σ/R float
+    # assembly is the SAME code in both paths — the trajectory is
+    # bit-identical (oracle-hash attested at sf0.01/sf0.1 and pinned by
+    # tests/test_round12_fixes.py). Rollups above the threshold take the
+    # distributed per-round loop over the checkpoint the fetch filled.
+    table = fetch_bounded(rolled, driver_threshold)
+    if table is not None:
         per_series: dict = {}
-        for r in rolled.collect():
-            per_series.setdefault(r["__s"], []).append(
-                (int(r["__us"]), int(r["__q"]))
-            )
+        for s, us, q in zip(
+            table.column("__s").to_pylist(),
+            table.column("__us").to_pylist(),
+            table.column("__q").to_pylist(),
+        ):
+            per_series.setdefault(s, []).append((us, q))
         for rnd in range(1, int(k) + 1):
             for s in sorted(per_series):
                 pts = per_series[s]
@@ -2000,9 +2007,7 @@ def _esd_iterate(
             # ONE broadcast anti-join against the literal removed-keys
             # frame — plan size stays constant in k·|series| (an accreted
             # per-round isin-predicate chain grows O(k·|series|) literals)
-            rm = spark.createDataFrame(
-                dropped, f"__s {series_ddl}, __us long"
-            )
+            rm = local_frame(spark, dropped, f"__s {series_ddl}, __us long")
             cur = rolled.join(F.broadcast(rm), ["__s", "__us"], "left_anti")
         else:
             cur = rolled
@@ -2072,7 +2077,7 @@ def _esd_emit(
         f"{value_name} double, r_stat double, n_remaining long, "
         "flagged boolean"
     )
-    out = spark.createDataFrame(removed, schema)
+    out = local_frame(spark, removed, schema)
     return out.select(
         "round",
         series_col,

@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.exprs import r6
+from ..functions.local import local_frame
 from .chunked import chunk_offsets as _chunk_offsets
 from .chunked import range_chunk as _range_chunk
 
@@ -961,7 +962,7 @@ def platt_scaling(
     Each Newton step is ONE aggregate over the PERSISTED (score, label)
     projection — the source is scanned exactly once, every later pass
     hits the cached 2-column frame (at 100 TB the projection is the
-    only corpus read; 9 re-scans was the round-7 perf nit). Gradient
+    only corpus read). Gradient
     and Hessian entries fold as integer micro-units (DECIMAL(38,0)),
     so every iterate — and therefore the fitted (a, b) — is
     bit-deterministic across partitionings and engines; the 2×2 solve
@@ -1031,7 +1032,8 @@ def platt_scaling(
         ).collect()[0]["log_loss"]
     finally:
         proj.unpersist()
-    diag = df.sparkSession.createDataFrame(
+    diag = local_frame(
+        df.sparkSession,
         [(float(a), float(b), int(n_iter), int(n_rows), float(ll))],
         "a double, b double, n_iter int, n_rows long, log_loss double",
     )

@@ -34,15 +34,29 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import exprs as E
+from ..functions.local import fetch_bounded, local_frame
 
 
 # Hybrid small-graph cutoff for the iterative graph operators
 # (pagerank / label_propagation / kcore): graphs whose symmetrized edge
-# list fits under this row count are solved driver-side in one
-# collect — the same production hybrid (and the same 2M default) as
+# list has at most this many rows are solved driver-side — the same
+# production hybrid (and the same 2M default) as
 # `dedup.connected_components`. Module-level so tests can force either
-# path.
+# path (-1 always takes the distributed rounds).
 _GRAPH_DRIVER_THRESHOLD = 2_000_000
+
+
+def _driver_edges(edges: DataFrame) -> list | None:
+    """The symmetrized edge list of ``edges`` as (u, v) tuples when it
+    has at most `_GRAPH_DRIVER_THRESHOLD` rows, else None. The list holds
+    every edge in both directions (2·|edges| rows), so the one-direction
+    list is fetched bounded at half the threshold (2·n ≤ T ⟺ n ≤ T // 2)
+    and mirrored here: one Spark job, half the rows."""
+    table = fetch_bounded(edges, _GRAPH_DRIVER_THRESHOLD // 2)
+    if table is None:
+        return None
+    us, vs = table.column("u").to_pylist(), table.column("v").to_pylist()
+    return list(zip(us, vs)) + list(zip(vs, us))
 
 
 def _capped_members(
@@ -649,9 +663,9 @@ def pagerank(
 
     Power iteration with a FIXED ``n_iter`` round count and the
     unnormalized teleport form rank' = (1−d) + d·Σ_in rank/outdeg (ranks
-    sum to N instead of 1), which needs no driver-side count() or
-    collect() anywhere — the final rank is normalized by a single
-    1-row aggregate broadcast over the |nodes|-sized result. Every node
+    sum to N instead of 1), so the distributed rounds need no driver-side
+    action — the final rank is normalized by a single 1-row aggregate
+    broadcast over the |nodes|-sized result. Every node
     in an undirected graph has in-edges, so no dangling-mass term is
     needed. Per round: one join of the edge list against the |nodes|
     rank frame + one map-side-combined groupBy; lineage is broken with
@@ -661,7 +675,11 @@ def pagerank(
     trades plan depth against the checkpoint jobs Spark runs for the
     compact rank frame).
 
-    ORDER-INVARIANT iterates (round 9): each round's in-contributions
+    Graphs whose symmetrized edge list has at most
+    `_GRAPH_DRIVER_THRESHOLD` rows run the same rounds driver-side over
+    one bounded fetch and return a local relation.
+
+    ORDER-INVARIANT iterates: each round's in-contributions
     fold as 1e-9-grid integer micro-units (floor(rank/outdeg·1e9 + 0.5)
     summed exactly as decimal), so every iterate — and hence the final
     ranks — is bit-identical across partitionings AND engines; a
@@ -672,28 +690,24 @@ def pagerank(
     Returns (entity, rank, rank_norm, out_degree) for every node in the
     capped graph.
     """
-    # round 12: map-side bounded pair emission (guide §2.4/§3.6) — the
-    # per-attr member arrays are ≤ max_degree, so C(n,2) expansion
-    # replaces the members⋈members self-join outright
     edges = _capped_edges(df, attr, entity_col, min_degree, max_degree)
-    both = edges.unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
     if checkpoint_every:
-        both = both.localCheckpoint(eager=False)
+        # a graph above the threshold reuses what the fetch materialized
+        edges = edges.localCheckpoint(eager=False)
 
-    # HYBRID driver-iterate path (round 12): the capped graph's edge
-    # list is bounded far below the corpus; when it fits the same
+    # HYBRID driver-iterate path: the capped graph's edge list is
+    # bounded far below the corpus; when it fits the same
     # driver_threshold contract as `dedup.connected_components`
-    # (~2M symmetrized edges), collect it once and run the fixed
-    # power iteration in Python — the per-edge contribution floor, the
+    # (~2M symmetrized edges), fetch it once and run the fixed power
+    # iteration in Python — the per-edge contribution floor, the
     # integer Σ fold, and the rank/normalization float assembly are the
     # SAME IEEE ops as the distributed aggregates, so the trajectory is
     # bit-identical (path parity test-pinned). 10×(2 joins + 1 groupBy)
-    # Spark jobs collapse to 2 (count + collect); graphs above the
-    # threshold take the distributed rounds unchanged.
-    if both.count() <= _GRAPH_DRIVER_THRESHOLD:
-        erows = [(r["u"], r["v"]) for r in both.collect()]
+    # Spark jobs collapse to the one bounded fetch, and the result is a
+    # local relation; graphs above the threshold take the distributed
+    # rounds unchanged.
+    erows = _driver_edges(edges)
+    if erows is not None:
         odeg: dict = {}
         for u, _ in erows:
             odeg[u] = odeg.get(u, 0) + 1
@@ -710,16 +724,20 @@ def pagerank(
         out_rows = [
             (u, rk[u], rk[u] / tot, odeg[u]) for u in rk
         ]
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             out_rows,
             f"{entity_col} {ddl}, rank double, rank_norm double, "
             "out_degree long",
         )
 
+    both = edges.unionAll(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    )
     outdeg = both.groupBy("u").agg(F.count(F.lit(1)).alias("outdeg"))
     # static per-round join input: edge list pre-joined with the source
-    # outdegree ONCE (round 12 — the old per-round `.join(outdeg, "u")`
-    # re-ran the degree aggregation every iteration)
+    # outdegree ONCE (a per-round `.join(outdeg, "u")` would re-run the
+    # degree aggregation every iteration)
     both_od = both.join(outdeg, "u").localCheckpoint(eager=False)
     ranks = outdeg.select("u", F.lit(1.0).alias("rank"))
     for i in range(n_iter):
@@ -1037,27 +1055,24 @@ def label_propagation(
     against the |nodes| label frame + one (node, label) count + one
     integer-struct argmax — all exact integer arithmetic, no float
     nondeterminism anywhere. Lineage breaks every ``checkpoint_every``
-    rounds (same discipline as `dedup.connected_components`).
+    rounds (same discipline as `dedup.connected_components`). Graphs
+    whose symmetrized edge list has at most `_GRAPH_DRIVER_THRESHOLD`
+    rows run the same rounds driver-side over one bounded fetch.
 
     Returns (entity, community, community_size).
     """
-    # round 12: map-side bounded pair emission (guide §2.4/§3.6) — the
-    # per-attr member arrays are ≤ max_degree, so C(n,2) expansion
-    # replaces the members⋈members self-join outright
     edges = _capped_edges(df, attr, entity_col, min_degree, max_degree)
-    both = edges.unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
     if checkpoint_every:
-        both = both.localCheckpoint(eager=False)
+        # a graph above the threshold reuses what the fetch materialized
+        edges = edges.localCheckpoint(eager=False)
 
-    # HYBRID driver-iterate path (round 12): same contract as
-    # `pagerank` — synchronous label updates with the (count, smallest-
-    # label) argmax are pure integer ops, identical in Python, so a
-    # small graph's trajectory is bit-identical (path parity test-
-    # pinned) while 5×(join + 2 groupBys) collapse to count + collect.
-    if both.count() <= _GRAPH_DRIVER_THRESHOLD:
-        erows = [(r["u"], r["v"]) for r in both.collect()]
+    # HYBRID driver-iterate path: same contract as `pagerank` —
+    # synchronous label updates with the (count, smallest-label) argmax
+    # are pure integer ops, identical in Python, so a small graph's
+    # trajectory is bit-identical (path parity test-pinned) while
+    # 5×(join + 2 groupBys) collapse to the one bounded fetch.
+    erows = _driver_edges(edges)
+    if erows is not None:
         lab = {u: u for u, _ in erows}
         for _ in range(n_iter):
             cnt: dict = {}
@@ -1074,11 +1089,15 @@ def label_propagation(
         for label in lab.values():
             sizes[label] = sizes.get(label, 0) + 1
         ddl = df.schema[entity_col].dataType.simpleString()
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             [(u, label, sizes[label]) for u, label in lab.items()],
             f"{entity_col} {ddl}, community {ddl}, community_size long",
         )
 
+    both = edges.unionAll(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    )
     labels = both.select("u").distinct().select(
         "u", F.col("u").alias("label")
     )
@@ -1198,25 +1217,23 @@ def kcore(
     breaks the iterative lineage. Peeling rounds are bounded by the
     degeneracy ordering depth — tiny for capped fraud graphs; at
     extreme scale each round is shuffle-bounded by the CURRENT core,
-    which only shrinks.
+    which only shrinks. Graphs whose symmetrized edge list has at most
+    `_GRAPH_DRIVER_THRESHOLD` rows peel driver-side over one bounded
+    fetch and return a local relation.
 
     Returns surviving nodes with their within-core degree.
     """
-    cur = edges.unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=False)
+    # a graph above the threshold reuses what the fetch materialized
+    edges = edges.localCheckpoint(eager=False)
 
-    # HYBRID driver peel (round 12, same contract as `pagerank` /
+    # HYBRID driver peel (same contract as `pagerank` /
     # `connected_components`): the peel is pure integer counting, so a
     # small graph's fixpoint is identical computed driver-side — one
-    # collect replaces up-to-max_iter (agg + count + 2 semi-joins)
+    # bounded fetch replaces up-to-max_iter (agg + count + 2 semi-joins)
     # rounds. Exact loop-state semantics replicated, incl. the
     # n_alive==prev_n early return and the max_iter fallthrough.
-    ddl = edges.schema["u"].dataType.simpleString()
-    out_schema = f"u {ddl}, core_degree long"
-    if cur.count() <= _GRAPH_DRIVER_THRESHOLD:
-        pairs = [(r["u"], r["v"]) for r in cur.collect()]
-        spark = edges.sparkSession
+    pairs = _driver_edges(edges)
+    if pairs is not None:
         prev_n = None
         for _ in range(max_iter):
             deg: dict = {}
@@ -1224,23 +1241,26 @@ def kcore(
                 deg[u] = deg.get(u, 0) + 1
             alive = {u for u, d in deg.items() if d >= k}
             n_alive = len(alive)
-            if n_alive == 0:
-                return spark.createDataFrame([], out_schema)
-            if prev_n is not None and n_alive == prev_n:
-                return spark.createDataFrame(
-                    [(u, d) for u, d in deg.items() if d >= k], out_schema
-                )
+            if n_alive == 0 or n_alive == prev_n:
+                break
             prev_n = n_alive
             pairs = [
                 (u, v) for u, v in pairs if u in alive and v in alive
             ]
-        deg = {}
-        for u, _v in pairs:
-            deg[u] = deg.get(u, 0) + 1
-        return spark.createDataFrame(
-            [(u, d) for u, d in deg.items() if d >= k], out_schema
+        else:
+            deg = {}
+            for u, _v in pairs:
+                deg[u] = deg.get(u, 0) + 1
+        ddl = edges.schema["u"].dataType.simpleString()
+        return local_frame(
+            edges.sparkSession,
+            [(u, d) for u, d in deg.items() if d >= k],
+            f"u {ddl}, core_degree long",
         )
 
+    cur = edges.unionAll(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    )
     prev_n = None
     for _ in range(max_iter):
         deg = cur.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
@@ -1446,7 +1466,7 @@ def attribution_markov(
     attribution share. Baseline conversion probability rides along for
     context.
 
-    ``method="power"`` (round 10) replaces the LAPACK solve with
+    ``method="power"`` replaces the LAPACK solve with
     ``n_iter`` fixed power iterations on the 1e-9 integer grid —
     t′ = r + Q·t with every Q_ij·t_j term floored to integer units
     individually, so the iterate is reduction-order invariant and the
@@ -1644,7 +1664,8 @@ def attribution_markov(
             )
             for c, re in effects
         ]
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         out,
         "channel string, n_transitions long, removal_effect double, "
         "attribution double, p_conv_base double",

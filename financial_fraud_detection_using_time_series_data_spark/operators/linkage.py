@@ -19,6 +19,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.local import local_frame
+
 __all__ = ["FieldComparison", "block_pairs", "em_weights", "fellegi_sunter"]
 
 
@@ -135,8 +137,8 @@ def em_weights(
     The per-iteration accumulations (Σ w·n and its per-field splits)
     fold as 1e-9-grid integer micro-units, so every EM iterate is
     independent of pattern enumeration order — which makes the whole
-    fit reproducible as a recursive-CTE SQL twin (round 8; the float
-    accumulation it replaces depended on collect() row order).
+    fit reproducible as a recursive-CTE SQL twin (a float accumulation
+    would depend on collect() row order).
 
     Returns one row per field: learned m, u and the log2 agreement /
     disagreement weights ready to feed back into ``fellegi_sunter``.
@@ -199,7 +201,8 @@ def em_weights(
         )
         for j in range(k)
     ]
-    return pairs.sparkSession.createDataFrame(
+    return local_frame(
+        pairs.sparkSession,
         out,
         "field string, m double, u double, w_agree double, "
         "w_disagree double, lambda double",

@@ -28,6 +28,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.local import local_frame
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -176,4 +178,4 @@ def synthetic_media(spark, n: int = 64) -> DataFrame:
         rows.append(
             (i, kind, bytearray(content), f"application/x-{kind}", 64, 48, 3000 if kind == "video" else None)
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)

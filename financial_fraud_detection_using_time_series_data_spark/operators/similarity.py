@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.exprs import r6
+from ..functions.local import local_frame
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -368,8 +369,8 @@ def save_centroids(spark, centroids: list[list[float]], path: str) -> None:
     """Persist a trained IVF index as parquet (S5 model-artifact analog):
     build once on the cluster, reload for any later search job."""
     rows = [(i, [float(x) for x in v]) for i, v in enumerate(centroids)]
-    spark.createDataFrame(
-        rows, "cell_id int, centroid array<double>"
+    local_frame(
+        spark, rows, "cell_id int, centroid array<double>"
     ).repartition(1).write.mode("overwrite").parquet(path)
 
 
@@ -1238,12 +1239,12 @@ def ivf_pq_topk_planted(
         _int_argmin_sql(f"slice({iv_txt}, {j * dsub + 1}, {dsub})", book)
         for j, book in enumerate(books_int)
     )
-    # round 12: cell + code argmins are the per-row cost; fan_out
+    # cell + code argmins are the per-row cost; fan_out
     # spreads a single-split corpus before them (no-op at scale)
     from ..sources.tables import fan_out
 
-    # coalesce(.., -1) makes cell_id provably NON-NULLABLE (round 13):
-    # the downstream inner join otherwise derives IsNotNull(cell_id)
+    # coalesce(.., -1) makes cell_id provably NON-NULLABLE: the
+    # downstream inner join otherwise derives IsNotNull(cell_id)
     # and filter pushdown re-inlines the FULL integer argmin — the
     # whole centroid matrix — into a Filter, doubling the per-row
     # assignment cost (plan-verified). -1 joins nothing, like NULL;
@@ -1281,7 +1282,7 @@ def ivf_pq_topk_planted(
             qbase.schema["__qiv"],
         ]
     )
-    probes = queries.sparkSession.createDataFrame(probe_rows, probe_schema)
+    probes = local_frame(queries.sparkSession, probe_rows, probe_schema)
     joined = index.join(F.broadcast(probes), "cell_id").filter(
         F.col(id_col) != F.col(qid_col)
     )

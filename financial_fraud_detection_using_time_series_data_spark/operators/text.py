@@ -11,6 +11,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.exprs import r6
+from ..functions.local import local_frame
 
 # small English stopword list used by the quality/language heuristics;
 # kept tiny + explicit so the SQL oracle can inline the same list
@@ -1301,11 +1302,13 @@ def retrieval_metrics(
             f"(1..{len(DCG_DISC_U)}); extend DCG_DISC_U to use a larger k"
         )
     spark = df.sparkSession
-    qmap = spark.createDataFrame(
+    qmap = local_frame(
+        spark,
         [(qid, t.lower()) for qid, ts in queries for t in ts],
         "query_id int, term string",
     )
-    qinfo = spark.createDataFrame(
+    qinfo = local_frame(
+        spark,
         [(qid, " ".join(t.lower() for t in ts), len(ts)) for qid, ts in queries],
         "query_id int, query string, n_terms int",
     )

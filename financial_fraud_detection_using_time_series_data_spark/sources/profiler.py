@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.local import local_frame
+
 
 def null_profile(df: DataFrame) -> DataFrame:
     """Per-column null counts + percentages, sorted desc — tall format
@@ -154,8 +156,10 @@ def schema_diff(before: DataFrame, after: DataFrame) -> DataFrame:
                     f"nullable={fa.nullable}",
                 )
             )
-    return spark.createDataFrame(
-        rows, "col_name string, change string, before string, after string"
+    return local_frame(
+        spark,
+        rows,
+        "col_name string, change string, before string, after string",
     )
 
 

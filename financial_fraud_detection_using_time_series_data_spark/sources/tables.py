@@ -13,6 +13,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.local import local_frame
+
 TABLES = (
     "region",
     "nation",
@@ -138,7 +140,7 @@ def read_csv_optional(spark: SparkSession, path: str, schema) -> DataFrame:
     when the file is absent, so downstream left joins still resolve."""
     if os.path.exists(path):
         return read_csv(spark, path, schema=schema)
-    return spark.createDataFrame([], schema)
+    return local_frame(spark, [], schema)
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:

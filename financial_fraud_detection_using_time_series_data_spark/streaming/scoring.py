@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import exprs as E
+from ..functions.local import local_frame
 
 
 def score_columns(amount_col: str = "value", model_score_col: str | None = None) -> list[Column]:
@@ -181,7 +182,8 @@ def drift_monitor(
             for b, pr in enumerate(p_ref)
             for pc in [max(byb.get(b, 0) / tot, eps)]
         )
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(int(batch_id), int(tot), float(psi))],
             "batch_id long, n_events long, psi double",
         ).write.mode("append").parquet(out_dir)

@@ -649,6 +649,27 @@ def test_sequence_convnet_training_is_deterministic(spark):
         seqs.unpersist()
 
 
+def test_conv_forward_saturates_without_overflow_warning():
+    """A logit far below -709 overflows exp(-logit) to inf; the head must
+    return exactly 0.0 and raise no RuntimeWarning (scoring runs it on
+    every executor batch, so a warning floods the logs)."""
+    import warnings
+
+    import numpy as np
+
+    from financial_fraud_detection_using_time_series_data_spark.ml import (
+        sequence_model as sm,
+    )
+
+    p = sm.init_params(n_filters=2, width=3)
+    p["wd"] = np.zeros(2)
+    p["bd"] = np.array(-900.0)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        prob, _ = sm.conv_forward(np.ones((2, 5)), p)
+    assert prob.tolist() == [0.0, 0.0]
+
+
 # --- BiRNN + attention (M4, recurrent) --------------------------------------
 
 
