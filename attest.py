@@ -34,6 +34,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
 import duckdb
+import numpy as np
 import pandas as pd
 
 import __spark_entry__ as entrymod
@@ -54,9 +55,23 @@ FORCED_NAMES = (
 )
 
 
+def _canon_cell(v):
+    """An array cell as a nested tuple of Python scalars: hashable, sortable,
+    and the same whether an engine returned a list or an ndarray."""
+    if isinstance(v, np.ndarray):
+        v = v.tolist()
+    if isinstance(v, list):
+        return tuple(_canon_cell(x) for x in v)
+    return v
+
+
 def _canon_hash(df: pd.DataFrame) -> int:
     df = df[sorted(df.columns)].copy()
     for c in df.columns:
+        # array-valued columns: only columns holding a list or ndarray are
+        # rewritten, so every other column hashes as it always has
+        if df[c].dtype == object and any(isinstance(v, (list, np.ndarray)) for v in df[c]):
+            df[c] = pd.Series([_canon_cell(v) for v in df[c]], index=df.index, dtype=object)
         # tz-aware (Spark LTZ) vs naive (DuckDB) and us- vs ns-resolution
         # timestamps are value-identical here (UTC session) but hash
         # differently; normalize to UTC-naive ns

@@ -10,6 +10,12 @@ ship to a 1000-executor cluster job except for master/memory:
 - Arrow enabled for every pandas interop (Pandas UDFs, toPandas).
 - Session timezone pinned UTC so timestamp semantics match the DuckDB
   oracle (DuckDB timestamps are UTC-naive).
+- The generated-code cache holds ``CODEGEN_CACHE_ENTRIES`` classes, not
+  Spark's default 100. The engine runs the same feature queries again and
+  again (batch retrains, streaming micro-batches, benchmark passes), and
+  the six-entry perfbench ``registry`` pass alone keeps more than 100
+  generated classes live. At 100 entries LRU eviction made every pass
+  recompile 80-100 of them through Janino, at about 10-20 ms each.
 """
 
 from __future__ import annotations
@@ -17,6 +23,17 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Size of Spark's compiled-class cache (`spark.sql.codegen.cache.maxEntries`,
+# default 100). Measured on 4 cores with perfbench's sf0.01 tables by
+# counting CodegenMetrics compilations over passes 1-6 of one session: the
+# registry pass keeps more generated classes live than 100, so LRU
+# eviction recompiled 83-108 classes every pass; at 1000 a pass compiles
+# 0-6, all of them tfidf_top_terms stages whose whole-stage codegen ids
+# AQE numbers in the order its concurrent stages finish. 1000 is several
+# times that working set, which leaves room for more queries and AQE
+# re-plans without evicting.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -56,6 +73,10 @@ def get_spark(
         # a bloated old-gen (measured: same query 0.5s fresh vs 4.4s late).
         # A 2-min periodic GC keeps the ContextCleaner draining.
         .config("spark.cleaner.periodicGC.interval", "2min")
+        # A static conf, read once when the JVM first generates code: like
+        # ReservedCodeCacheSize above, it only takes effect when this
+        # builder launches the JVM.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # driver testdata writes TIMESTAMP(NANOS) parquet, which Spark
@@ -71,3 +92,11 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this JVM so far (every session on it).
+    The difference over a span of work is how many generated classes that
+    work compiled, i.e. missed the compiled-class cache."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

@@ -12,6 +12,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.local import local_frame
 
@@ -59,32 +60,53 @@ def normalize_scan_types(df: DataFrame, nano_cols=()) -> DataFrame:
     return df
 
 
-# Lazy-DataFrame HANDLE memo (round 13, guide §4 "eliminate the
-# boundary"): `spark.read.parquet` + the dtype normalization cost
-# ~30-80 ms of py4j/footer/file-listing chatter per call, paid by every
-# query build in a 287-query bench session. The memo stores the
-# UNEXECUTED logical plan only — it is NOT result caching: no
+# Lazy-DataFrame handle memo: `spark.read.parquet` + the dtype
+# normalization cost ~30-80 ms of py4j/footer/file-listing chatter per
+# call, paid by every query build in a 287-query bench session. The memo
+# stores the UNEXECUTED logical plan only; it is NOT result caching: no
 # .persist()/.cache() is ever applied (pinned by
-# tests/test_round13_fixes.py), so every action on the handle still
-# scans the parquet inputs from scratch; two queries sharing a handle
-# just share the analyzed relation node, exactly like a production
-# session that registers tables once. Keyed by applicationId (stable
-# per SparkContext — object ids can be reused after GC).
+# tests/test_round13_fixes.py), so every action on the handle still scans
+# the parquet inputs from scratch; two queries sharing a handle just share
+# the analyzed relation node, exactly like a production session that
+# registers tables once.
+#
+# Keyed by the session object, so a `newSession()` on the same context
+# gets a handle bound to itself (its own SQL conf), never another
+# session's. The key holds the object, so its id cannot be reused by a
+# later session after GC.
+#
+# Assumes immutable inputs: the handle keeps the file listing of its first
+# load, so files added to or removed from `sf_dir/<name>.parquet` later
+# are not seen by that session. Rewrite a table under a new path, or read
+# it with `spark.read` directly.
 _TABLE_HANDLE_CACHE: dict[tuple, DataFrame] = {}
+# Under the same assumption a table's parquet schema is inferred once and
+# shared by every session: inference reads file footers and was ~80% of a
+# fresh session's load cost (0.85 of 1.0 s for the 10 tables at sf0.01 on
+# 4 cores). Each session still gets its own handle.
+_TABLE_SCHEMA_CACHE: dict[tuple, StructType] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _TABLE_HANDLE_CACHE.get(key)
-    if cached is not None:
-        return cached
     # Self-sufficient on TIMESTAMP(NANOS) parquet: the driver (or any
     # embedding app) may hand us a vanilla SparkSession without the
     # legacy nanos config, and the scan then dies with
-    # PARQUET_TYPE_ILLEGAL. Setting the conf at read time is safe — it
-    # is a runtime-settable SQL conf — and idempotent.
+    # PARQUET_TYPE_ILLEGAL. Set on every call, memo hit or not, because
+    # the conf is read when a query on the handle is planned, and the
+    # session's conf may have been changed since the handle was made. It
+    # is a runtime-settable SQL conf, and setting it is idempotent.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    key = (spark, sf_dir, name)
+    cached = _TABLE_HANDLE_CACHE.get(key)
+    if cached is not None:
+        return cached
+    reader = spark.read
+    schema = _TABLE_SCHEMA_CACHE.get((sf_dir, name))
+    if schema is not None:
+        reader = reader.schema(schema)
+    df = reader.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    if schema is None:
+        _TABLE_SCHEMA_CACHE[(sf_dir, name)] = df.schema
     df = normalize_scan_types(df, _NANO_TS_COLS.get(name, []))
     _TABLE_HANDLE_CACHE[key] = df
     return df

@@ -55,3 +55,59 @@ def test_attest_never_passes_an_unchecked_entry(spark, sf_dir):
     rows = attest.attest(spark, sf_dir, ["top_k", "approx_profile"])
     got = {name: status for name, status, _, _ in rows}
     assert got == {"top_k": "PASS", "approx_profile": "ROWS-ONLY"}
+
+
+def test_canon_hash_hashes_array_columns_order_independently():
+    """Array cells (ndarray from Spark's toPandas, list from DuckDB) hash by
+    value: row order and container type do not matter, contents do."""
+    import numpy as np
+    import pandas as pd
+
+    import attest
+
+    arrays = pd.DataFrame(
+        {
+            "k": [1, 2, 3],
+            "v": [np.array([0.5, 2.0]), None, np.array([], dtype="float64")],
+            "nested": [[[1, 2], [3]], [[4]], []],
+        }
+    )
+    lists = pd.DataFrame(
+        {
+            "k": [3, 2, 1],
+            "v": [[], None, [0.5, 2.0]],
+            "nested": [[], [np.array([4])], [np.array([1, 2]), np.array([3])]],
+        }
+    )
+    assert attest._canon_hash(arrays) == attest._canon_hash(lists)
+    changed = arrays.copy()
+    changed.at[0, "v"] = np.array([0.5, 2.5])
+    assert attest._canon_hash(changed) != attest._canon_hash(arrays)
+
+
+def test_canon_hash_of_scalar_columns_is_pinned():
+    """Frames without array columns hash exactly as before array support,
+    so every digest recorded earlier keeps its meaning."""
+    import pandas as pd
+
+    import attest
+
+    df = pd.DataFrame(
+        {
+            "user_id": [3, 1, 2],
+            "amount": [10.5, -0.25, 1e6],
+            "label": ["b", None, "a"],
+            "ts": pd.to_datetime(
+                ["2024-01-02 03:04:05", "2024-01-01 00:00:00", "2023-12-31 23:59:59"]
+            ).tz_localize("UTC"),
+        }
+    )
+    assert attest._canon_hash(df) == attest._canon_hash(df.iloc[::-1]) == 5405075148283534411
+
+
+@pytest.mark.parametrize("name", ["approx_profile", "multimodal_features"])
+def test_canon_hash_accepts_array_valued_entries(spark, sf_dir, name):
+    import attest
+
+    pdf = QUERIES[name](spark, sf_dir).toPandas()
+    assert attest._canon_hash(pdf) == attest._canon_hash(pdf.iloc[::-1])

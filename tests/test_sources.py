@@ -212,3 +212,21 @@ def test_schema_diff_flags_all_change_kinds(spark):
     assert "id" not in out and "keep" not in out
     # identical schemas -> empty diff
     assert schema_diff(before, before).count() == 0
+
+
+def test_load_table_handle_is_bound_to_its_own_session(spark, sf_dir):
+    """A newSession() on the same context gets its own handle, and the
+    nanosAsLong conf is set on a memo hit too."""
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    other = spark.newSession()
+    mine = load_table(spark, sf_dir, "events")
+    theirs = load_table(other, sf_dir, "events")
+    assert theirs is not mine
+    assert theirs.sparkSession is other
+    assert theirs._jdf.sparkSession().equals(other._jsparkSession)
+    assert theirs.schema == mine.schema
+    other.conf.unset(conf)
+    assert load_table(other, sf_dir, "events") is theirs
+    assert other.conf.get(conf) == "true"
+    assert theirs.count() == mine.count() > 0
+
