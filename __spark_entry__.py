@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from financial_fraud_detection_using_time_series_data_spark.functions import exprs as E
+from financial_fraud_detection_using_time_series_data_spark.functions.lineage import reuse
 from financial_fraud_detection_using_time_series_data_spark.functions.local import local_frame
 from financial_fraud_detection_using_time_series_data_spark.operators import (
     behavior,
@@ -7938,15 +7939,13 @@ def q_dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
 
     def canon(df):
-        # materialize each candidate set ONCE: every set feeds one self
-        # count + two semi-join intersections, and without the lineage
-        # break each of those actions would re-run the whole generator
+        # each set feeds its own count and two intersections: one generator run
         return (
             df.select(
                 F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
             )
             .distinct()
-            .localCheckpoint()
+            .transform(reuse)
         )
 
     sets = {"minhash": canon(mh), "simhash": canon(sh), "snm": canon(sn)}
@@ -11962,7 +11961,7 @@ def q_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t-closeness audit of per-user value distributions vs the global
     one: ordered EMD over a 20-bin fixed-width grid (Li et al. 2007),
     |CumP_class − CumP_global| micro-folded per class. One (user, bin)
-    rollup is the only corpus-sized pass; the checkpointed rollup fans
+    rollup is the only corpus-sized pass; the lineage-broken rollup fans
     into class sizes, the densify join and the global histogram."""
     ev = _events(spark, sf_dir)
     return privacy.t_closeness(ev, ["user_id"], "value", t=0.1, n_bins=20)
@@ -12144,7 +12143,7 @@ def q_freshness_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type freshness vs the dataset watermark: latest ts, exact
     integer-microsecond lag, event count on the watermark's calendar
     day, staleness verdict (>1 h). One corpus pass to the (type, day)
-    rollup; everything else folds off that checkpointed frame."""
+    rollup; everything else folds off that lineage-broken frame."""
     ev = _events(spark, sf_dir)
     return profiler_fresh(ev, "event_type", "ts", stale_after_s=3600.0)
 
@@ -12455,7 +12454,7 @@ FROM l
 def q_theil_atkinson(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil T and Atkinson(ε=0.5) inequality of per-user value totals
     — decomposable companions to `gini`; ln/pow terms micro-fold on
-    the 1e-9 grid over the checkpointed per-entity frame."""
+    the 1e-9 grid over the per-entity frame."""
     ev = _events(spark, sf_dir)
     return behavior.theil_atkinson(ev, "user_id", "value", epsilon=0.5)
 

@@ -1,3 +1,3 @@
-from . import exprs, local
+from . import exprs, lineage, local
 
-__all__ = ["exprs", "local"]
+__all__ = ["exprs", "lineage", "local"]

@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.lineage import reuse
 from ..functions.local import local_frame
 
 # single-bounded-sort budget for rfm_segment's adaptive rank plan: a
@@ -150,12 +151,8 @@ def _rfm_from_profile(
     # Chunked global row numbers instead of partitionless ntile windows;
     # the chunk key is a monotone (non-strict) image of each axis's sort
     # key, so equal keys share a chunk and per-chunk order is exact.
-    # materialize the |entities| profile frame ONCE: the cut-point agg,
-    # the marginal count pass, and the window chain all branch off it,
-    # and without truncating the lineage every branch would re-execute
-    # the full-corpus groupBy. LAZY checkpoint: the materialization rides
-    # the stats collect below instead of costing its own job.
-    agg = agg.localCheckpoint(eager=False)
+    # the cut points, the marginal counts and the window chain share one groupBy
+    agg = reuse(agg)
     n_chunks = 32
     fracs = [i / n_chunks for i in range(1, n_chunks)]
     # second-resolution last-event instant: recency_days is an exact
@@ -555,9 +552,8 @@ def behavior_mart(
         F.max(ts_col).alias("__last"),
         F.sum(F.col(value_col).cast("decimal(25,2)")).alias("__mon"),
     )
-    # both branches fork off this |entities·categories|-sized frame;
-    # LAZY checkpoint so the corpus groupBy runs once, not per branch
-    percat = percat.localCheckpoint(eager=False)
+    # both branches share one corpus groupBy
+    percat = reuse(percat)
     ent = _entropy_from_counts(
         percat.select(entity_col, cat_col, "n"), entity_col
     )
@@ -1171,13 +1167,10 @@ def decile_migration(
         raise ValueError(f"decile_migration: unsupported grain {grain!r}")
     step = "INTERVAL 7 DAY" if grain == "week" else "INTERVAL 1 MONTH"
     m = F.date_trunc(grain, F.col(ts_col)).alias("month")
-    # round 12 (guide §2.4/§5): spend feeds the decile agg AND the
-    # assignment join, dec both sides of the consecutive-period join —
-    # each reference re-ran the corpus groupBy (16 scans in the audited
-    # plan). Lazy breaks on the bounded entity×period frames.
+    # spend feeds the deciles and the assignment; dec both period-join sides
     spend = df.groupBy(F.col(entity_col).alias("__e"), m).agg(
         F.sum(F.col(value_col).cast("decimal(25,2)")).cast("double").alias("__s")
-    ).localCheckpoint(eager=False)
+    ).transform(reuse)
     qs = spend.groupBy("month").agg(
         F.percentile("__s", F.array(*[F.lit(k / 10.0) for k in range(1, 10)])).alias(
             "__q"
@@ -1194,7 +1187,7 @@ def decile_migration(
                 lambda acc, q: acc + F.when(F.col("__s") > q, 1).otherwise(0),
             )
         ).alias("decile"),
-    ).localCheckpoint(eager=False)
+    ).transform(reuse)
     nxt = dec.select(
         "__e",
         (F.col("month") + F.expr(step)).alias("month"),
@@ -1304,8 +1297,8 @@ def theil_atkinson(
 
     T = (1/n)·Σ (x/μ)·ln(x/μ);  A_ε = 1 − ((1/n)·Σ (x/μ)^(1−ε))^(1/(1−ε))
     (ε ≠ 1). The corpus collapses to the per-entity decimal-exact total
-    frame in one map-side-combined shuffle (checkpointed: the 1-row
-    mean fold and the per-row terms both consume it); ln/pow terms
+    frame in one map-side-combined shuffle, which the 1-row mean fold
+    and the per-row terms both read; ln/pow terms
     micro-fold on the 1e-9 grid. Non-positive totals drop (ln/pow
     undefined) and are reported as ``n_dropped``. Returns one row.
     """
@@ -1317,7 +1310,6 @@ def theil_atkinson(
     per = df.groupBy(F.col(entity_col).alias("__e")).agg(
         F.sum(F.col(value_col).cast("decimal(25,2)")).alias("__x_dec")
     )
-    per = per.localCheckpoint()
     pos = per.where(F.col("__x_dec").cast("double") > 0)
     mu = pos.agg(
         (F.sum("__x_dec").cast("double") / F.count(F.lit(1))).alias("__mu"),

@@ -21,6 +21,11 @@ to the single-window form (asserted by the oracle-parity suite). Skewed
 keys only cost balance, never correctness: percentile cuts adapt to the
 data distribution, and a fully-degenerate key (all rows equal) simply
 collapses to the one-task plan you would have had anyway.
+
+Neither primitive breaks the lineage: a break on the cut frame or the
+totals reads no fewer parquet rows and adds build-time jobs. A caller
+whose input is an expensive subtree read by several branches breaks it
+before calling in (`functions.lineage.reuse`).
 """
 
 from __future__ import annotations
@@ -43,15 +48,7 @@ def range_chunk(
         # percentile list yields NULL, which would NULL the chunk id)
         return df.withColumn("__chunk", F.lit(0))
     fracs = [i / n_chunks for i in range(1, n_chunks)]
-    # materialize the 1-row cut frame: without the lineage break every
-    # downstream re-reference of the chunked frame re-executes df's
-    # whole subtree TWICE (once under this agg, once as the crossJoin
-    # probe) — plan-audited at 26 parquet scans for one spearman_corr
-    # before the fix, 3 after (round 12, guide §2.4 "remove shuffles /
-    # duplicated subtrees outright")
-    cuts = df.agg(
-        F.percentile_approx(key, fracs, 10000).alias("__cuts")
-    ).localCheckpoint(eager=False)
+    cuts = df.agg(F.percentile_approx(key, fracs, 10000).alias("__cuts"))
     op = ">" if descending else "<"
     return (
         df.crossJoin(F.broadcast(cuts))
@@ -70,12 +67,6 @@ def range_chunk(
 def chunk_offsets(totals: DataFrame, sum_cols: list[str]) -> DataFrame:
     """EXCLUSIVE running offsets (``<col>_off``) over the tiny per-chunk
     totals table — triangular broadcast self-join, zero WindowExec."""
-    # materialize the ≤ n_chunks-row totals before the triangular self-
-    # join: the a×b aliasing would otherwise execute the totals lineage
-    # (typically a corpus-scale window/groupBy chain) twice, and every
-    # caller that also references totals separately (global_rank's count
-    # branch) a third time
-    totals = totals.localCheckpoint(eager=False)
     a, b = totals.alias("a"), totals.alias("b")
     return (
         a.join(F.broadcast(b), F.col("b.__chunk") < F.col("a.__chunk"), "left")

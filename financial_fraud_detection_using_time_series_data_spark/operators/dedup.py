@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.exprs import r6
+from ..functions.lineage import reuse
 from ..functions.local import fetch_bounded, local_frame
 
 from .text import char_shingles, fingerprint, normalize, tokens
@@ -239,9 +240,8 @@ def dedup_incremental(
     batch_sigs = minhash_signature(
         batch, text_col, id_col, num_hashes, shingle_k, fast=fast
     )
-    # two consumers (the union below and the hot-bucket probe): break
-    # lineage once so the delta is shingled+minhashed a single time
-    batch_sigs = batch_sigs.localCheckpoint(eager=False)
+    # the union and the hot-bucket probe share one shingling of the delta
+    batch_sigs = reuse(batch_sigs)
     all_sigs = index.select(id_col, "signature").unionByName(batch_sigs)
     banded_all = _band_buckets(all_sigs, id_col, num_hashes, bands, fast)
     hot = (
@@ -743,7 +743,7 @@ def _cc_star(edges: DataFrame, max_iter: int) -> DataFrame:
     (node, component) with component = min reachable id, identical to
     the pointer-jump and driver paths (equivalence test-pinned).
     """
-    e = edges  # symmetric, distinct, checkpointed by the caller
+    e = edges  # symmetric, distinct, lineage-broken by the caller
     prev = None
     for _ in range(max_iter):
         # ---- large-star: (v, m(u)) for v ∈ Γ(u), v > u ----
@@ -769,7 +769,7 @@ def _cc_star(edges: DataFrame, max_iter: int) -> DataFrame:
             .select(F.col("dst").alias("src"), F.col("__m2").alias("dst"))
         )
         selfe = nbmin2.select("src", F.col("__m2").alias("dst"))
-        canon = attach.unionAll(selfe).distinct().localCheckpoint()
+        canon = attach.unionAll(selfe).distinct().transform(reuse)
         stats = canon.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h"),
@@ -777,7 +777,7 @@ def _cc_star(edges: DataFrame, max_iter: int) -> DataFrame:
         cur = (stats["n"], stats["h"])
         e = canon.unionAll(
             canon.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct().localCheckpoint()
+        ).distinct().transform(reuse)
         if prev is not None and cur == prev:
             break
         prev = cur
@@ -811,20 +811,19 @@ def connected_components(
     one hop (component := component of its component) — the path-halving
     step squares the propagation distance, so rounds are O(log diameter)
     instead of O(diameter). Pure joins + groupBy, no graph library.
-    `localCheckpoint` breaks the iterative lineage each round (the plan
-    would otherwise double per iteration); on a real cluster use a
-    checkpoint dir. At extreme scale the large-star/small-star edge
-    rewriting (Kiveris et al. 2014) also shrinks the EDGE set per round;
-    dedup graphs rarely need it — pass ``algorithm="star"`` to opt in
-    for extreme-diameter / giant-component graphs (the published 100 TB
-    answer; equivalence to this path is test-pinned on a planted-cluster
-    corpus).
+    The label frame's lineage is broken each round (`reuse`; the plan
+    would otherwise double per iteration). At extreme scale the
+    large-star/small-star edge rewriting (Kiveris et al. 2014) also
+    shrinks the EDGE set per round; dedup graphs rarely need it — pass
+    ``algorithm="star"`` to opt in for extreme-diameter /
+    giant-component graphs (the published 100 TB answer; equivalence to
+    this path is test-pinned on a planted-cluster corpus).
 
     Convergence detection exploits monotonicity: every node's label is
     non-increasing across rounds (least of own/neighbors, then the jump
     target's label ≤ the label itself), so Σ labels strictly decreases
     until the fixpoint — one tiny sum-aggregate per round on the
-    already-checkpointed frame (decimal(38,0): no int64 overflow at any
+    already-broken frame (decimal(38,0): no int64 overflow at any
     node count) replaces the join+count convergence job the earlier
     version paid, which cost as much as the propagation it guarded.
 
@@ -835,19 +834,16 @@ def connected_components(
     the whole iterative phase — ~10 Spark jobs become the one bounded
     fetch that also decides the path, and the result is a local
     relation. Graphs above the threshold take the distributed rounds
-    unchanged, over the checkpoint the fetch filled. This is the
+    unchanged, over the edge blocks the fetch filled. This is the
     standard production hybrid (small-graph solve-local, big-graph
     iterate) — not a local[32]-only shortcut.
     """
-    # materialize the edge list ONCE — it is joined every round, and
-    # without the lineage break each iteration would re-execute the whole
-    # upstream pair-generation (LSH, shingling, …) from scratch; the
-    # first action over it (the driver-path fetch) fills the checkpoint
+    # the fetch fills it; every distributed round reuses it, not the pair generation
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionAll(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(reuse)
     )
     if algorithm == "star":
         return _cc_star(edges, max_iter)
@@ -862,7 +858,7 @@ def connected_components(
         return _cc_driver(pairs.sparkSession, table, id_type)
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("component")
-    ).localCheckpoint()
+    ).transform(reuse)
     prev_sum = None
     for it in range(max_iter):
         neigh = (
@@ -892,12 +888,12 @@ def connected_components(
                 "node",
                 F.coalesce(F.col("__pc"), F.col("x.component")).alias("component"),
             )
-            .localCheckpoint()
+            .transform(reuse)
         )
         labels = new
         # monotone-sum convergence check: Σ labels decreases strictly
         # until the fixpoint, so an unchanged sum ⟺ no label changed —
-        # a scalar agg over the checkpointed frame, no join
+        # a scalar agg over the broken frame, no join
         cur_sum = new.agg(
             F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
         ).collect()[0].s

@@ -21,6 +21,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.lineage import reuse
 from ..functions.local import fetch_bounded, local_frame
 
 
@@ -67,11 +68,7 @@ def psi_bins(
     is what a monitoring dashboard actually plots. ``exact_edges=False``
     switches the decile pass to the KLL sketch for 100 TB references."""
     spark = ref.sparkSession
-    # round 12 (guide §2.4): the 1-row edge frame feeds BOTH bin-count
-    # branches; without the break each re-runs the full percentile pass
-    edges = _edges(ref, value_col, n_bins, exact_edges).localCheckpoint(
-        eager=False
-    )
+    edges = _edges(ref, value_col, n_bins, exact_edges)
     rc = _bin_counts(ref, edges, value_col, "n_ref")
     cc = _bin_counts(cur, edges, value_col, "n_cur")
     tot_r = ref.agg(F.count(F.lit(1)).alias("__tr"))
@@ -124,12 +121,10 @@ def ks_statistic(
             F.col(value_col).alias("v"), F.lit(0).alias("r"), F.lit(1).alias("c")
         )
     )
-    # round 12 (guide §2.4): the distinct-value frame feeds the
-    # percentile cut AND the chunk assignment; the break stops each
-    # reference re-running the two-corpus union groupBy
+    # the cut and the chunk assignment share one two-corpus groupBy
     g = tagged.groupBy("v").agg(
         F.sum("r").alias("n_ref_v"), F.sum("c").alias("n_cur_v")
-    ).localCheckpoint(eager=False)
+    ).transform(reuse)
     ch = C.range_chunk(g, "v", n_chunks)
     w_in = (
         Window.partitionBy("__chunk")
@@ -138,12 +133,12 @@ def ks_statistic(
     )
     within = ch.withColumn("__cr_in", F.sum("n_ref_v").over(w_in)).withColumn(
         "__cc_in", F.sum("n_cur_v").over(w_in)
-    ).localCheckpoint(eager=False)
+    )
     # per-chunk totals from the windowed frame (monotone nonneg cumsums →
     # max = chunk total; groupBy key == window partitioning → exchange reuse)
     totals = within.groupBy("__chunk").agg(
         F.max("__cr_in").alias("__cr"), F.max("__cc_in").alias("__cc")
-    ).localCheckpoint(eager=False)
+    )
     offsets = C.chunk_offsets(totals, ["__cr", "__cc"])
     tot = totals.agg(
         F.sum("__cr").alias("__tr"), F.sum("__cc").alias("__tc")
@@ -205,21 +200,17 @@ def mann_whitney(
             F.col(value_col).alias("v"), F.lit(0).alias("r"), F.lit(1).alias("c")
         )
     )
-    # round 12 (guide §2.4): the distinct-value frame feeds the
-    # percentile cut AND the chunk assignment; the break stops each
-    # reference re-running the two-corpus union groupBy
+    # the cut and the chunk assignment share one two-corpus groupBy
     g = tagged.groupBy("v").agg(
         F.sum("r").alias("n_ref_v"), F.sum("c").alias("n_cur_v")
-    ).localCheckpoint(eager=False)
+    ).transform(reuse)
     ch = C.range_chunk(g, "v", n_chunks)
     w_in = (
         Window.partitionBy("__chunk")
         .orderBy("v")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    within = ch.withColumn(
-        "__cr_in", F.sum("n_ref_v").over(w_in)
-    ).localCheckpoint(eager=False)
+    within = ch.withColumn("__cr_in", F.sum("n_ref_v").over(w_in))
     totals = within.groupBy("__chunk").agg(F.max("__cr_in").alias("__cr"))
     offsets = C.chunk_offsets(totals, ["__cr"])
     # 2·U_cur contribution of value v: n_cur(v)·(2·ref_less(v) + n_ref(v));
@@ -345,17 +336,10 @@ def chi2_drift(
     (chi2, dof, n_categories)."""
     rc = ref.groupBy(F.col(col).alias("cat")).agg(F.count(F.lit(1)).alias("n_ref"))
     cc = cur.groupBy(F.col(col).alias("cat")).agg(F.count(F.lit(1)).alias("n_cur"))
-    # round 12 (guide §2.4): cells feeds the totals agg AND the term
-    # projection; the break stops both from re-running the two corpus
-    # groupBys (frame bounded by category cardinality)
-    cells = (
-        rc.join(cc, "cat", "full_outer")
-        .select(
-            "cat",
-            F.coalesce("n_ref", F.lit(0)).alias("n_ref"),
-            F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
-        )
-        .localCheckpoint(eager=False)
+    cells = rc.join(cc, "cat", "full_outer").select(
+        "cat",
+        F.coalesce("n_ref", F.lit(0)).alias("n_ref"),
+        F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
     )
     tot = cells.agg(
         F.sum("n_ref").alias("__tr"), F.sum("n_cur").alias("__tc")
@@ -632,12 +616,9 @@ def volume_anomaly(
     aggregates and the final flag all run on that tiny frame via
     broadcast 1-row joins — no collect, no second corpus pass.
     """
-    # round 12 (guide §2.4/§5): the |buckets|-row count frame feeds the
-    # median and the staged chain — the break stops each reference
-    # re-running the corpus groupBy
     counts = df.groupBy(
         F.date_trunc(bucket, F.col(ts_col)).alias("bucket_ts")
-    ).agg(F.count(F.lit(1)).alias("n_rows")).localCheckpoint(eager=False)
+    ).agg(F.count(F.lit(1)).alias("n_rows"))
     med = counts.agg(F.median("n_rows").alias("med"))
     with_med = counts.crossJoin(F.broadcast(med))
     mad = with_med.agg(
@@ -703,14 +684,8 @@ def seasonal_anomaly(
     """
     from .relational import seasonal_adjust
 
-    # round 12 (guide §2.4/§5): the adjusted frame feeds the median,
-    # the MAD and the flag projection — each reference re-ran the whole
-    # seasonal_adjust composition (32 scans in the audited plan). One
-    # executor-side materialization beats four recomputes; at 100 TB
-    # persist the adjusted table instead (split_compat convention).
-    adj = seasonal_adjust(df, ts_col, value_col, id_col).localCheckpoint(
-        eager=False
-    )
+    # the median, the MAD and the flags share one seasonal_adjust pass
+    adj = seasonal_adjust(df, ts_col, value_col, id_col).transform(reuse)
     med = adj.agg(F.median("adjusted").alias("med"))
     with_med = adj.crossJoin(F.broadcast(med))
     mad = with_med.agg(
@@ -848,12 +823,7 @@ def spectral_entropy(
     harmonic is the min-k row attaining the exact maximum power. All
     post-periodogram math runs on a ≤max_k-row frame.
     """
-    # round 12 (guide §2.4): the ≤max_k-row periodogram feeds the total
-    # agg AND the entropy fold — the break stops the second reference
-    # re-running the corpus DFT rollup
-    pg = periodogram(
-        df, ts_col=ts_col, max_k=max_k, bucket_s=bucket_s
-    ).localCheckpoint(eager=False)
+    pg = periodogram(df, ts_col=ts_col, max_k=max_k, bucket_s=bucket_s)
     tot = pg.agg(
         F.sum(
             F.floor(F.col("power") * F.lit(1e3) + F.lit(0.5)).cast("decimal(38,0)")
@@ -912,11 +882,7 @@ def wasserstein_bins(
     from pyspark.sql import Window
 
     spark = ref.sparkSession
-    # round 12 (guide §2.4): the 1-row edge frame feeds BOTH bin-count
-    # branches; without the break each re-runs the full percentile pass
-    edges = _edges(ref, value_col, n_bins, exact_edges).localCheckpoint(
-        eager=False
-    )
+    edges = _edges(ref, value_col, n_bins, exact_edges)
     rc = _bin_counts(ref, edges, value_col, "n_ref")
     cc = _bin_counts(cur, edges, value_col, "n_cur")
     tot_r = ref.agg(F.count(F.lit(1)).alias("__tr"))
@@ -1234,12 +1200,8 @@ def residual_anomaly(
     buckets only: (series, bucket, x, residual, robust_z).
     """
     dec = seasonal_decompose(df, ts_col, type_col, value_col, bucket, half)
-    # round 12 (guide §2.4/§5): the bounded |series|·|buckets| residual
-    # frame feeds the median, the MAD and the flag join — the break
-    # stops each from re-running the decomposition's rollup + windows
-    res = dec.where(F.col("residual").isNotNull()).localCheckpoint(
-        eager=False
-    )
+    # the median, the MAD and the flag join share one decomposition
+    res = dec.where(F.col("residual").isNotNull()).transform(reuse)
     med = res.groupBy(type_col).agg(F.median("residual").alias("__med"))
     with_med = res.join(F.broadcast(med), type_col)
     mad = with_med.groupBy(type_col).agg(
@@ -1594,7 +1556,7 @@ def psi_timeline(
         bin_id.alias("__bin"),
         F.col("__day0"),
     ).agg(F.count(F.lit(1)).alias("__n"))
-    counts = counts.localCheckpoint()  # feeds baseline + densify + totals
+    counts = reuse(counts)  # feeds baseline + densify + totals
     is_base = F.col("__day") < F.col("__day0") + F.expr(
         f"INTERVAL {int(baseline_days)} DAYS"
     )
@@ -1679,7 +1641,7 @@ def wavelet_energy(
     rolled = df.groupBy(
         F.col(type_col).alias("__s"), hour_idx.alias("__h")
     ).agg(F.count(F.lit(1)).alias("__c"))
-    rolled = rolled.localCheckpoint()  # one consumer per level
+    rolled = reuse(rolled)  # one consumer per level
     # per-series hour-index span: n_blocks at level l counts every
     # 2^l-hour block the series spans, including fully-empty ones
     # (which contribute zero energy but belong in the mean)
@@ -1773,7 +1735,6 @@ def hurst_exponent(
     rolled = df.groupBy(
         F.col(type_col).alias("__s"), hour_idx.alias("__h")
     ).agg(F.count(F.lit(1)).alias("__c"))
-    rolled = rolled.localCheckpoint()  # one consumer per scale
     span = rolled.groupBy("__s").agg(
         F.min("__h").alias("__h0"),
         F.max("__h").alias("__h1"),
@@ -1900,7 +1861,7 @@ def gesd_outliers(
     family contract). A rollup of at most ~2M rows (`_esd_iterate`'s
     ``driver_threshold``) is fetched once and every round runs
     driver-side; a larger one runs each round as one map-side-combined
-    aggregate over the lazily-checkpointed rollup, collected at
+    aggregate over the lineage-broken rollup, collected at
     |series| rows, with the removals applied as one broadcast anti-join
     — no window, no growing plan.
     """
@@ -1941,17 +1902,15 @@ def _esd_iterate(
     excluded up front: a None key would break the deterministic sort
     and poison the removal filter (NULL-valued predicates silently
     drop other series' rows), and a NULL series is not a series."""
-    rolled = rolled.where(F.col("__s").isNotNull()).localCheckpoint(
-        eager=False
-    )
+    rolled = rolled.where(F.col("__s").isNotNull()).transform(reuse)
     removed: list[tuple] = []   # (round, s, us, q, r6(R), n_remaining, flagged)
     dropped: list[tuple] = []   # (s, us) removal keys
     import math as _math
 
-    # HYBRID driver-iterate path (guide §1.2 "the distributed algorithm
-    # first"): the k-round loop below runs one aggregate JOB per round
-    # over the checkpointed rollup — k Spark jobs for what is, after the
-    # one corpus groupBy, pure bounded-frame arithmetic. When the rollup
+    # HYBRID driver-iterate path: the k-round loop below runs one
+    # aggregate JOB per round over the broken rollup — k Spark jobs for
+    # what is, after the one corpus groupBy, pure bounded-frame
+    # arithmetic. When the rollup
     # is small (|series|·|buckets| ≤ ~2M rows, the same driver_threshold
     # contract as `dedup.connected_components`), fetch it ONCE and run
     # every round in Python with exact integers: the per-round per-series
@@ -1960,7 +1919,7 @@ def _esd_iterate(
     # assembly is the SAME code in both paths — the trajectory is
     # bit-identical (oracle-hash attested at sf0.01/sf0.1 and pinned by
     # tests/test_round12_fixes.py). Rollups above the threshold take the
-    # distributed per-round loop over the checkpoint the fetch filled.
+    # distributed per-round loop over the blocks the fetch filled.
     table = fetch_bounded(rolled, driver_threshold)
     if table is not None:
         per_series: dict = {}
@@ -2329,7 +2288,6 @@ def mad_control_limits(
             (F.col("__x") * F.lit(1_000_000_000)).cast("long").alias("__q"),
         )
     )
-    rolled = rolled.localCheckpoint(eager=False)  # three bounded passes
     med = rolled.groupBy(F.col("__s").alias("__sm")).agg(
         F.expr("percentile(__q, 0.5)").alias("__med"),
         F.count(F.lit(1)).cast("long").alias("n_buckets"),
@@ -2432,7 +2390,7 @@ def cross_correlation(
         )
         .agg(F.sum(F.col(value_col).cast("decimal(25,2)")).alias("__x"))
     )
-    rolled = rolled.localCheckpoint(eager=False)  # stats + both sides
+    rolled = reuse(rolled)  # stats + both sides
     stats = rolled.groupBy(F.col("__s").alias("__s2")).agg(
         F.count(F.lit(1)).cast("long").alias("__n"),
         F.sum("__x").alias("__sx"),
@@ -2602,12 +2560,10 @@ def cramer_von_mises(
             F.col(value_col).alias("v"), F.lit(0).alias("r"), F.lit(1).alias("c")
         )
     )
-    # round 12 (guide §2.4): the distinct-value frame feeds the
-    # percentile cut AND the chunk assignment; the break stops each
-    # reference re-running the two-corpus union groupBy
+    # the cut and the chunk assignment share one two-corpus groupBy
     g = tagged.groupBy("v").agg(
         F.sum("r").alias("n_ref_v"), F.sum("c").alias("n_cur_v")
-    ).localCheckpoint(eager=False)
+    ).transform(reuse)
     ch = C.range_chunk(g, "v", n_chunks)
     w_in = (
         Window.partitionBy("__chunk")
@@ -2616,10 +2572,10 @@ def cramer_von_mises(
     )
     within = ch.withColumn("__cr_in", F.sum("n_ref_v").over(w_in)).withColumn(
         "__cc_in", F.sum("n_cur_v").over(w_in)
-    ).localCheckpoint(eager=False)
+    )
     totals = within.groupBy("__chunk").agg(
         F.max("__cr_in").alias("__cr"), F.max("__cc_in").alias("__cc")
-    ).localCheckpoint(eager=False)
+    )
     offsets = C.chunk_offsets(totals, ["__cr", "__cc"])
     tot = totals.agg(
         F.sum("__cr").cast("long").alias("__tr"),

@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.exprs import r6
+from ..functions.lineage import reuse
 from ..functions.local import local_frame
 from .chunked import chunk_offsets as _chunk_offsets
 from .chunked import range_chunk as _range_chunk
@@ -434,13 +435,10 @@ def mutual_information(
     spark = df.sparkSession
     out = None
     for fc in feature_cols:
-        # round 12 (guide §2.4/§5): cells feeds both marginals, the
-        # total and the MI join — each reference re-ran the corpus
-        # groupBy (24 scans across the 3-feature audited plan). One
-        # lazy break per feature; frame bounded by |bins|·|labels|.
+        # |bins|·|labels| cells feed both marginals, the total and the MI join
         cells = df.groupBy(
             F.col(fc).alias("__x"), F.col(label_col).alias("__y")
-        ).agg(F.count(F.lit(1)).alias("__nxy")).localCheckpoint(eager=False)
+        ).agg(F.count(F.lit(1)).alias("__nxy")).transform(reuse)
         xm = cells.groupBy("__x").agg(F.sum("__nxy").alias("__nx"))
         ym = cells.groupBy("__y").agg(F.sum("__nxy").alias("__ny"))
         tot = cells.agg(F.sum("__nxy").alias("__n"))
@@ -539,31 +537,25 @@ def conformal_intervals(
     Returns one row per group: n_cal, center, q_hat, lo, hi, n_test,
     coverage.
     """
-    # round 12 (guide §2.4/§5): centers feeds three consumers, the
-    # distinct-residual frame four (percentile cut + chunk assignment +
-    # window chain) and params two — every reference re-executed the
-    # corpus aggregation (26 parquet scans in the audited plan). Lazy
-    # localCheckpoints on the bounded frames cut that to 2 corpus
-    # passes; integer folds are unchanged, results bit-identical.
+    # centers, the distinct residuals and params each feed several
+    # consumers; each break keeps the corpus groupBy single
     centers = cal.groupBy(group_col).agg(
         F.median(value_col).alias("__center"),
         F.count(F.lit(1)).alias("n_cal"),
-    ).localCheckpoint(eager=False)
+    ).transform(reuse)
     r_cal = cal.join(F.broadcast(centers), group_col).select(
         group_col, F.abs(F.col(value_col) - F.col("__center")).alias("__r")
     )
     g = r_cal.groupBy(group_col, "__r").agg(
         F.count(F.lit(1)).alias("__cnt")
-    ).localCheckpoint(eager=False)
+    ).transform(reuse)
     ch = _range_chunk(g, "__r", n_chunks)
     w_in = (
         Window.partitionBy(group_col, "__chunk")
         .orderBy("__r")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    within = ch.withColumn(
-        "__c_in", F.sum("__cnt").over(w_in)
-    ).localCheckpoint(eager=False)
+    within = ch.withColumn("__c_in", F.sum("__cnt").over(w_in))
     totals = within.groupBy(group_col, "__chunk").agg(
         F.max("__c_in").alias("__ct")
     )
@@ -589,7 +581,7 @@ def conformal_intervals(
         .groupBy(group_col)
         .agg(F.min("__r").alias("q_hat"))
     )
-    params = centers.join(qhat, group_col).localCheckpoint(eager=False)
+    params = centers.join(qhat, group_col).transform(reuse)
     covered = (
         test.join(
             F.broadcast(params.select(group_col, "__center", "q_hat")), group_col
@@ -1071,7 +1063,7 @@ def srm_check(
     counts = df.groupBy(
         F.col(arm_col).cast("string").alias("__arm")
     ).agg(F.count(F.lit(1)).alias("__o"))
-    counts = counts.localCheckpoint()  # consumed by two branches below
+    counts = reuse(counts)  # feeds the observed and the expected branch
     declared = F.explode(
         F.array(
             *[

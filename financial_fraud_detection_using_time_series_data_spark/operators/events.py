@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import exprs as E
+from ..functions.lineage import reuse
 from ..functions.local import fetch_bounded, local_frame
 
 
@@ -44,6 +45,12 @@ from ..functions.local import fetch_bounded, local_frame
 # `dedup.connected_components`. Module-level so tests can force either
 # path (-1 always takes the distributed rounds).
 _GRAPH_DRIVER_THRESHOLD = 2_000_000
+
+# rounds between lineage breaks in the distributed iterations: a break
+# bounds the plan depth of the next round and costs one job for the
+# compact |nodes|-row frame
+_PAGERANK_BREAK_EVERY = 3
+_LABEL_PROP_BREAK_EVERY = 2
 
 
 def _driver_edges(edges: DataFrame) -> list | None:
@@ -105,14 +112,12 @@ def _capped_edges(
     """Distinct undirected (u < v) edge list of the capped shared-
     attribute graph — the construction every graph operator shares.
 
-    Round-12 shape (guide §2.4): the capped membership is grouped per
-    attr (≤ ``max_degree`` members by construction, so the per-value
-    array is BOUNDED) and pairs are emitted map-side from the array —
-    C(n, 2) per value, no self-join. This removes the two join-side
-    exchanges and the duplicated membership subtree of the old
-    members⋈members plan; the emitted pair set is identical
-    (least/greatest canonicalizes, the final distinct dedups pairs
-    linked through several values).
+    The capped membership is grouped per attr (≤ ``max_degree`` members
+    by construction, so the per-value array is BOUNDED) and pairs are
+    emitted map-side from the array — C(n, 2) per value, no self-join;
+    least/greatest canonicalizes and the final distinct dedups pairs
+    linked through several values. The lineage is not broken here: a
+    caller that reads the edge list more than once wraps it in `reuse`.
     """
     members = _capped_members(df, attr, entity_col, min_degree, max_degree)
     # the per-attr array is ≤ max_degree elements by the cap; a sort-
@@ -335,7 +340,7 @@ def fraud_rings(
     Plan shape: distinct (attr, entity) collapses the corpus first; the
     degree/hub dim is |linking values| rows; edges are edge-list-sized.
     Components run on the existing min-label + pointer-jumping engine
-    (`dedup.connected_components` — O(log diameter) rounds, checkpointed
+    (`dedup.connected_components` — O(log diameter) rounds, broken
     lineage); ring size is one window over the (entity, ring) result.
     """
     from pyspark.sql import functions as F
@@ -556,14 +561,8 @@ def triangle_count(
 
     Returns a single row (n_nodes, n_edges, n_triangles).
     """
-    # round 12: map-side bounded pair emission (guide §2.4/§3.6) — the
-    # per-attr member arrays are ≤ max_degree, so C(n,2) expansion
-    # replaces the members⋈members self-join outright
-    edges = _capped_edges(df, attr, entity_col, min_degree, max_degree)
-    # the edge list feeds four consumers (degree, orientation, closing
-    # probe, edge count); break lineage once so the pair expansion runs
-    # once — the capped edge list is far smaller than the corpus
-    edges = edges.localCheckpoint(eager=False)
+    # degree, orientation, closing probe and edge count share one expansion
+    edges = reuse(_capped_edges(df, attr, entity_col, min_degree, max_degree))
     both = edges.unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     ndeg = both.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     e = (
@@ -648,7 +647,6 @@ def pagerank(
     max_degree: int = 10,
     damping: float = 0.85,
     n_iter: int = 10,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """PageRank centrality over the shared-attribute entity graph — the
     ring-CENTRALITY complement to `fraud_rings` (membership) and
@@ -668,12 +666,8 @@ def pagerank(
     broadcast over the |nodes|-sized result. Every node
     in an undirected graph has in-edges, so no dangling-mass term is
     needed. Per round: one join of the edge list against the |nodes|
-    rank frame + one map-side-combined groupBy; lineage is broken with
-    localCheckpoint every ``checkpoint_every`` rounds (the same
-    discipline as `dedup.connected_components`; pass 0 to disable —
-    results are IDENTICAL either way, test-pinned, the cadence only
-    trades plan depth against the checkpoint jobs Spark runs for the
-    compact rank frame).
+    rank frame + one map-side-combined groupBy; the rank frame's lineage
+    is broken every `_PAGERANK_BREAK_EVERY` rounds to bound plan depth.
 
     Graphs whose symmetrized edge list has at most
     `_GRAPH_DRIVER_THRESHOLD` rows run the same rounds driver-side over
@@ -690,10 +684,8 @@ def pagerank(
     Returns (entity, rank, rank_norm, out_degree) for every node in the
     capped graph.
     """
-    edges = _capped_edges(df, attr, entity_col, min_degree, max_degree)
-    if checkpoint_every:
-        # a graph above the threshold reuses what the fetch materialized
-        edges = edges.localCheckpoint(eager=False)
+    # a graph above the threshold reuses what the fetch materialized
+    edges = reuse(_capped_edges(df, attr, entity_col, min_degree, max_degree))
 
     # HYBRID driver-iterate path: the capped graph's edge list is
     # bounded far below the corpus; when it fits the same
@@ -738,7 +730,7 @@ def pagerank(
     # static per-round join input: edge list pre-joined with the source
     # outdegree ONCE (a per-round `.join(outdeg, "u")` would re-run the
     # degree aggregation every iteration)
-    both_od = both.join(outdeg, "u").localCheckpoint(eager=False)
+    both_od = both.join(outdeg, "u").transform(reuse)
     ranks = outdeg.select("u", F.lit(1.0).alias("rank"))
     for i in range(n_iter):
         # 1e-9-grid integer fold: the per-edge contribution is floored
@@ -760,8 +752,8 @@ def pagerank(
                 * (F.sum("cu").cast("double") / F.lit(1e9))
             ).alias("rank")
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=False)
+        if (i + 1) % _PAGERANK_BREAK_EVERY == 0:
+            ranks = reuse(ranks)
     # normalization via 1-row agg + broadcast crossJoin — NOT a
     # partitionless window: the rank frame is |nodes|-sized (corpus-scale
     # for a near-unique entity column), so a single-partition Window here
@@ -865,12 +857,7 @@ def cooccurrence_lift(
     |types|² rows.
     """
     b = F.date_trunc(bucket, F.col(ts_col))
-    # round 12 (guide §2.4/§5): items fed two consumers, sizes two and
-    # kept three — every reference re-executed the corpus distinct (18
-    # parquet scans in the audited plan). Lazy localCheckpoints on the
-    # bounded basket frames cut that to one corpus pass; the basket-size
-    # window replaces the groupBy+semi-join (same membership, one less
-    # corpus-frame join). Results bit-identical.
+    # the basket-size window keeps baskets within the cap in one pass
     items = (
         df.select(
             F.col(entity_col).alias("__e"),
@@ -884,9 +871,9 @@ def cooccurrence_lift(
         items.withColumn("__sz", sz)
         .where(F.col("__sz") <= max_basket)
         .drop("__sz")
-        .localCheckpoint(eager=False)
+        .transform(reuse)  # the census, the marginals and the pair join
     )
-    # surviving-basket census straight from the checkpointed kept frame
+    # surviving-basket census straight from the kept frame
     # (distinct (e, b) of kept ≡ baskets within the cap)
     n_baskets = (
         kept.select("__e", "__b")
@@ -1037,7 +1024,6 @@ def label_propagation(
     min_degree: int = 2,
     max_degree: int = 10,
     n_iter: int = 5,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Community detection by synchronous label propagation over the
     shared-attribute entity graph — the soft-clustering complement to
@@ -1054,17 +1040,15 @@ def label_propagation(
     emission bounded per value). Per round: one join of the edge list
     against the |nodes| label frame + one (node, label) count + one
     integer-struct argmax — all exact integer arithmetic, no float
-    nondeterminism anywhere. Lineage breaks every ``checkpoint_every``
-    rounds (same discipline as `dedup.connected_components`). Graphs
+    nondeterminism anywhere. The label frame's lineage is broken every
+    `_LABEL_PROP_BREAK_EVERY` rounds to bound plan depth. Graphs
     whose symmetrized edge list has at most `_GRAPH_DRIVER_THRESHOLD`
     rows run the same rounds driver-side over one bounded fetch.
 
     Returns (entity, community, community_size).
     """
-    edges = _capped_edges(df, attr, entity_col, min_degree, max_degree)
-    if checkpoint_every:
-        # a graph above the threshold reuses what the fetch materialized
-        edges = edges.localCheckpoint(eager=False)
+    # a graph above the threshold reuses what the fetch materialized
+    edges = reuse(_capped_edges(df, attr, entity_col, min_degree, max_degree))
 
     # HYBRID driver-iterate path: same contract as `pagerank` —
     # synchronous label updates with the (count, smallest-label) argmax
@@ -1115,8 +1099,8 @@ def label_propagation(
                 ]
             ).alias("label")
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            labels = labels.localCheckpoint(eager=False)
+        if (i + 1) % _LABEL_PROP_BREAK_EVERY == 0:
+            labels = reuse(labels)
     sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("community_size"))
     return labels.join(sizes, "label").select(
         F.col("u").alias(entity_col),
@@ -1137,14 +1121,11 @@ def shared_attr_edges(
     when they share an ``attr`` value held by ``min_degree``..
     ``max_degree`` distinct entities. The cap bounds per-value pair
     emission at C(max_degree, 2) — no hub value goes quadratic at
-    100 TB. Returns distinct undirected edges (u < v), lineage-broken
-    (the edge list is joined repeatedly by every consumer)."""
-    # round 12: map-side bounded pair emission (guide §2.4/§3.6) — the
-    # per-attr member arrays are ≤ max_degree, so C(n,2) expansion
-    # replaces the members⋈members self-join outright
+    100 TB. Returns distinct undirected edges (u < v) with the lineage
+    broken (`reuse`), since every consumer joins the edge list repeatedly."""
     return _capped_edges(
         df, attr, entity_col, min_degree, max_degree
-    ).localCheckpoint(eager=False)
+    ).transform(reuse)
 
 
 def adamic_adar(
@@ -1213,8 +1194,8 @@ def kcore(
     edge list + one semi-join filter — no windows, no collect of data
     rows. Convergence uses the monotone survivor COUNT (strictly
     decreasing until fixpoint, one scalar agg per round — same
-    discipline as `dedup.connected_components`); `localCheckpoint`
-    breaks the iterative lineage. Peeling rounds are bounded by the
+    discipline as `dedup.connected_components`); `reuse` breaks the
+    iterative lineage. Peeling rounds are bounded by the
     degeneracy ordering depth — tiny for capped fraud graphs; at
     extreme scale each round is shuffle-bounded by the CURRENT core,
     which only shrinks. Graphs whose symmetrized edge list has at most
@@ -1224,7 +1205,7 @@ def kcore(
     Returns surviving nodes with their within-core degree.
     """
     # a graph above the threshold reuses what the fetch materialized
-    edges = edges.localCheckpoint(eager=False)
+    edges = reuse(edges)
 
     # HYBRID driver peel (same contract as `pagerank` /
     # `connected_components`): the peel is pure integer counting, so a
@@ -1278,7 +1259,7 @@ def kcore(
         cur = (
             cur.join(alive, "u", "left_semi")
             .join(alive.select(F.col("u").alias("v")), "v", "left_semi")
-            .localCheckpoint(eager=False)
+            .transform(reuse)
         )
     deg = cur.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     return deg.where(F.col("deg") >= k).select(
@@ -1318,12 +1299,10 @@ def transition_entropy(
         )
         .where(F.col("__nxt").isNotNull())
     )
-    # round 12 (guide §2.4/§5): the |types|²-cell frame feeds both
-    # marginals, the total and the conditional-entropy join — each
-    # reference re-ran the corpus window+groupBy
+    # both marginals, the total and the entropy join share one window+groupBy
     cells = pairs.groupBy("__cur", "__nxt").agg(
         F.count(F.lit(1)).alias("__nxy")
-    ).localCheckpoint(eager=False)
+    ).transform(reuse)
     row_m = cells.groupBy("__cur").agg(F.sum("__nxy").alias("__nx"))
     col_m = cells.groupBy("__nxt").agg(F.sum("__nxy").alias("__ny"))
     tot = cells.agg(F.sum("__nxy").alias("__n"))
@@ -1734,9 +1713,6 @@ def _shared_attr_edges(
     the cap bounds per-value pair emission at C(max_degree, 2)) — the
     construction `fraud_rings` / `triangle_count` / `adamic_adar`
     share."""
-    # round 12: map-side bounded pair emission (guide §2.4/§3.6) — the
-    # per-attr member arrays are ≤ max_degree, so C(n,2) expansion
-    # replaces the members⋈members self-join outright
     return _capped_edges(df, attr, entity_col, min_degree, max_degree)
 
 
@@ -1757,13 +1733,13 @@ def assortativity(
     Computed over the DOUBLED edge list (both directions, the standard
     symmetric estimator): all five moment sums of (deg_u, deg_v) are
     exact BIGINT folds (degrees are integers), so r assembles bit-
-    identically in closed form. The capped edge list is checkpointed
-    once and feeds degrees + the moment pass. Returns one row:
+    identically in closed form. The capped edge list is broken once
+    and feeds degrees + the moment pass. Returns one row:
     (n_nodes, n_edges, assortativity) — NULL r for a degree-regular
     graph (zero variance).
     """
     edges = _shared_attr_edges(df, attr, entity_col, min_degree, max_degree)
-    edges = edges.localCheckpoint()
+    edges = reuse(edges)
     both = edges.unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import exprs as E
+from ..functions.lineage import reuse
 
 
 # Spark DDL type -> pandas dtype for the columns `per_series` emits.
@@ -356,12 +357,10 @@ def forecast_accuracy(
     daily = df.groupBy(type_col, b).agg(
         F.sum(F.col(value_col).cast("decimal(25,2)")).alias("x_dec")
     )
-    # the bounded |types|·|buckets| rollup feeds both shifted join sides
-    # and the windowed base; without the break each reference re-runs
-    # the corpus groupBy
+    # both shifted join sides and the windowed base share one corpus groupBy
     base = daily.select(
         type_col, "bucket", F.col("x_dec").cast("double").alias("y"), "x_dec"
-    ).localCheckpoint(eager=False)
+    ).transform(reuse)
     shift1 = base.select(
         type_col,
         (F.col("bucket") + naive_shift).alias("bucket"),

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.lineage import reuse
+
 
 def _micro_sum(col: Column) -> Column:
     """Order-invariant float fold: per-row 1e-9-grid integer micro-units
@@ -247,10 +249,8 @@ def t_closeness(
         .groupBy(*qi_cols, bin_id.alias("__bin"))
         .agg(F.count(F.lit(1)).alias("__n"))
     )
-    # three consumers fan out of the rollup (class sizes, densify join,
-    # global histogram); checkpoint the |classes|·n_bins frame so the
-    # corpus scan stays single
-    counts = counts.localCheckpoint()
+    # class sizes, the densify join and the global histogram share one scan
+    counts = reuse(counts)
     classes = counts.groupBy(*qi_cols).agg(
         F.sum("__n").cast("long").alias("class_size")
     )

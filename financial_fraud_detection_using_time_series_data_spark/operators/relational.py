@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from . import chunked
 from ..functions import exprs as E
+from ..functions.lineage import reuse
 
 
 def left_join(
@@ -698,12 +699,8 @@ def apply_cdc(
     side); the snapshot anti-joins the touched-key dim (broadcastable
     when churn is small) and never shuffles on anything but the key.
     """
-    # round 12 (guide §2.4): the deduped log feeds the touched-key dim
-    # AND the upsert branch — the break stops the second window pass
-    # over the change log (the small side by contract)
-    latest = _cdc_latest_per_key(changes, keys, op_col, seq_col).localCheckpoint(
-        eager=False
-    )
+    # the deduped log feeds the touched-key dim and the upserts: one window pass
+    latest = _cdc_latest_per_key(changes, keys, op_col, seq_col).transform(reuse)
     touched = latest.select(*keys)
     kept = snapshot.join(touched, keys, "left_anti")
     upserts = latest.where(F.col(op_col) != "D").drop(op_col, seq_col)

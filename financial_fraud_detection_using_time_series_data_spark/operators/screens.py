@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.lineage import reuse
+
 
 def structuring_screen(
     df: DataFrame,
@@ -571,11 +573,8 @@ def hbos_scores(
         F.dayofweek(ts_col).cast("long").alias("__db"),
         F.col("__n"),
     )
-    # round 12 (guide §2.4/§5): binned feeds three histogram aggs and
-    # the scoring join — each reference re-ran the corpus scan + stats
-    # crossJoin (16 scans in the audited plan). One executor-side
-    # materialization of the 5-narrow-column frame instead.
-    binned = binned.localCheckpoint(eager=False)
+    # three histograms and the scoring join share one scan + stats crossJoin
+    binned = reuse(binned)
 
     def _hist(frame: DataFrame, col: str) -> DataFrame:
         # -ln(count/n) per bin, micro-rounded on the tiny bins frame

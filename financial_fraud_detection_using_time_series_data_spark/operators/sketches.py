@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.lineage import reuse
+
 
 def hll_partial(
     df: DataFrame,
@@ -346,14 +348,8 @@ def sliding_distinct_exact(
             F.min("__pb").alias("__bmin"),
         )
     )
-    # |time points|-row frame (bounded by the hour spine, not the
-    # corpus) feeding range_chunk + the within/totals double reference:
-    # break the lineage once here. NOTE (r12 ADVICE): localCheckpoint
-    # blocks are unreplicated — on a multi-executor cluster an executor
-    # loss after truncation fails the job instead of recomputing.
-    # Acceptable for this bounded stat frame (cheap job retry); swap in
-    # a reliable checkpoint dir if the retry itself is expensive.
-    deltas = deltas.localCheckpoint(eager=False)
+    # the cut, the within-chunk window and the totals share one delta rollup
+    deltas = reuse(deltas)
     from .chunked import chunk_offsets, range_chunk
 
     ch = range_chunk(deltas, "__t", 32)
@@ -428,7 +424,7 @@ def windowed_distinct_exact(
         F.col(key_col).alias("__k"), win, F.col(value_col).alias("__v")
     ).agg(F.count(F.lit(1)).cast("long").alias("__n"))
     # both branches re-aggregate this |key·window·distinct| frame
-    pres = pres.localCheckpoint(eager=False)
+    pres = reuse(pres)
     per_win = pres.groupBy("__k", "window_start").agg(
         F.sum("__n").cast("long").alias("n_events"),
         F.count(F.lit(1)).cast("long").alias("n_distinct"),

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import chunked as C
+from ..functions.lineage import reuse
 
 
 def _rank2(df: DataFrame, col: str, n_chunks: int) -> DataFrame:
@@ -38,14 +39,10 @@ def _rank2(df: DataFrame, col: str, n_chunks: int) -> DataFrame:
     r2 = 2·(average rank of v in the full sorted order) — an exact
     BIGINT (ties make average ranks half-integers; doubling clears the
     half). Chunked cumulative count, no partitionless window."""
-    # materialize the bounded |distinct(col)|-row frame ONCE: it feeds
-    # the percentile-cut agg, the chunked window, the chunk totals and
-    # the final join — without the break each reference re-runs the
-    # corpus groupBy (round-12 plan audit: spearman_corr scanned its
-    # parquet input 26× through these re-references)
+    # the |distinct(col)| frame feeds the cut, the window, the totals and the join
     g = df.groupBy(F.col(col).alias("v")).agg(
         F.count(F.lit(1)).alias("cnt")
-    ).localCheckpoint(eager=False)
+    ).transform(reuse)
     ch = C.range_chunk(g, "v", n_chunks)
     w = (
         Window.partitionBy("__chunk")
@@ -458,9 +455,9 @@ def mann_kendall(
             .alias("__q"),
         )
     )
-    rolled = rolled.localCheckpoint(eager=False)  # pairs ×2 + ties + n
+    rolled = reuse(rolled)  # pairs ×2 + ties + n
     # self-join with DISJOINT column names on the right side: both
-    # branches descend from the same checkpoint, so aliased a./b.
+    # branches descend from the same break, so aliased a./b.
     # references share exprIds and resolve ambiguously in Spark 4 —
     # renamed projections sidestep the alias machinery entirely
     right = rolled.select(
@@ -499,7 +496,7 @@ def mann_kendall(
         "__sen_micro",
         extra_over={"__S": F.sum("__sgn")},
     )
-    # distinct rename: pairs and ties branch off the SAME checkpoint, so
+    # distinct rename: pairs and ties branch off the SAME break, so
     # their __s attributes share an exprId — a USING-join would leave
     # the output ambiguous
     ties = (
@@ -589,7 +586,7 @@ def hodges_lehmann(
             (F.col("__x") * F.lit(1_000_000)).cast("long").alias("__q"),
         )
     )
-    rolled = rolled.localCheckpoint(eager=False)  # pairs + n branch
+    rolled = reuse(rolled)  # pairs + n branch
     right = rolled.select(
         F.col("__s").alias("__sb"),
         F.col("__us").alias("__usb"),
@@ -671,7 +668,6 @@ def siegel_slope(
             "__x",
         )
     )
-    rolled = rolled.localCheckpoint(eager=False)  # pairs + sen branches
     right = rolled.select(
         F.col("__s").alias("__sb"),
         F.col("__us").alias("__usb"),
@@ -692,17 +688,9 @@ def siegel_slope(
         .cast("long")
         .alias("__mslope"),
     )
-    # round 12 (guide §2.4): pairs feeds the repeated-median branch AND
-    # the Theil-Sen diagnostic — the break stops the second B² self-join
-    pairs = pairs.localCheckpoint(eager=False)
-    # round 13 NEGATIVE RESULT (kept as r12 percentile — see
-    # OPTIMIZATION_r13.md §1): the rank-median window was A/B'd here in
-    # three variants (all-window 6.0s, inner/outer-percentile hybrid
-    # 5.7-6.5s, vs 4.5-5.1s for this shape in the same sessions) and
-    # LOST — siegel's groups are all bounded by the operator contract
-    # (B and B² ride the time-span-bounded bucket rollup, never the
-    # corpus), so the percentile buffers are bounded too and the hash
-    # aggregate beats the window's exchange+sort at every scale.
+    # percentile hash aggregates, not a rank-median window: the groups are
+    # bounded by the bucket rollup, and the window lost its A/B (6.0 s vs
+    # 4.5-5.1 s, OPTIMIZATION_r13.md §1)
     inner = pairs.groupBy("__g", "__i").agg(
         F.expr("percentile(__mslope, 0.5)").alias("__med_i")
     )
@@ -780,7 +768,7 @@ def kendall_tau(
     common = a.join(b, F.col("__ua") == F.col("__ub")).select(
         F.col("__ua").alias("__u"), "__qa", "__qb"
     )
-    common = common.localCheckpoint(eager=False)  # pair self-join
+    common = reuse(common)  # pair self-join
     right = common.select(
         F.col("__u").alias("__u2"),
         F.col("__qa").alias("__qa2"),

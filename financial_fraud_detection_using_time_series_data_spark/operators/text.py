@@ -11,6 +11,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.exprs import r6
+from ..functions.lineage import reuse
 from ..functions.local import local_frame
 
 # small English stopword list used by the quality/language heuristics;
@@ -345,9 +346,9 @@ def tfidf_top_terms(
     toks = df.select(
         id_col, F.explode(tokens(F.col(text_col))).alias("term")
     ).filter(F.length("term") > 0)
-    # No localCheckpoint here: it would pin a CORPUS-scale frame
-    # (|doc, term| rows) to executor block storage, against the repo's
-    # bounded-frames-only checkpoint policy. Both references to `toks`
+    # No `reuse` here: it would pin a CORPUS-scale frame
+    # (|doc, term| rows) to executor block storage, against the
+    # bounded-frames-only lineage policy. Both references to `toks`
     # share exprIds, yet ReuseExchange does NOT dedupe their subtrees:
     # the executed AQE plan runs 4 documents scans with 0 reused
     # exchanges (measured at sf0.01 and sf0.1).
@@ -801,9 +802,9 @@ def token_pmi(
     upstream (e.g. top-m terms per doc) before calling. Unigram doc
     frequencies are a |vocab|-row broadcast; N rides a 1-row broadcast.
     """
-    # No localCheckpoint here: it would pin the CORPUS-scale distinct
+    # No `reuse` here: it would pin the CORPUS-scale distinct
     # (doc, term) frame to executor block storage, against the
-    # bounded-frames-only checkpoint policy. The unigram agg and both
+    # bounded-frames-only lineage policy. The unigram agg and both
     # self-join sides reference the same object (shared exprIds), but
     # ReuseExchange catches only part of it: the executed AQE plan runs
     # 3 documents scans with 2 reused exchanges (measured at sf0.01 and
@@ -965,12 +966,8 @@ def rake_keywords(
     runs = nonstop.withColumn(
         "__run", F.col("__pos") - F.row_number().over(w)
     )
-    # round 12 (guide §2.4): the windowed run frame feeds the
-    # phrase-length agg AND the member join — the break stops the
-    # second tokenize+window pass
-    members = runs.select("__id", "__run", "__pos", "__tok").localCheckpoint(
-        eager=False
-    )
+    # the run frame feeds the phrase-length agg and the member join
+    members = runs.select("__id", "__run", "__pos", "__tok").transform(reuse)
     plen = members.groupBy("__id", "__run").agg(
         F.count(F.lit(1)).alias("__plen")
     )
@@ -1624,9 +1621,9 @@ def domain_kl(
         F.explode(tokens(F.col(text_col))).alias("__t"),
     ).where(F.length("__t") > 0)
     dt = tok.groupBy("__d", "__t").agg(F.count(F.lit(1)).alias("__n_dt"))
-    dt = dt.localCheckpoint()  # feeds the vocab dim and the seen fold
+    dt = reuse(dt)  # feeds the vocab dim and the seen fold
     vocab = dt.groupBy("__t").agg(F.sum("__n_dt").alias("__n_t"))
-    vocab = vocab.localCheckpoint()
+    vocab = reuse(vocab)
     a = float(alpha)
     vtot = vocab.agg(
         F.count(F.lit(1)).cast("long").alias("__V"),

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.lineage import reuse
+
 __all__ = [
     "abc_classification",
     "customer_distribution",
@@ -728,14 +730,11 @@ def abc_classification(
     """
     from .chunked import chunk_offsets, range_chunk
 
-    # round 12 (guide §2.4/§5): the parts-dim revenue frame feeds the
-    # percentile cut AND the chunk assignment, and the windowed/totals
-    # frames feed two consumers each — each reference re-executed the
-    # corpus groupBy. Lazy localCheckpoints on the bounded frames.
+    # the per-part revenue feeds the cut and the chunk assignment
     per = lineitem.groupBy("l_partkey").agg(F.sum(_rev()).alias("__r"))
     per = per.select(
         "l_partkey", F.col("__r").cast("double").alias("__rd"), "__r"
-    ).localCheckpoint(eager=False)
+    ).transform(reuse)
     chunked = range_chunk(per, "__rd", n_chunks, descending=True)
     w_in = (
         Window.partitionBy("__chunk")
@@ -747,10 +746,8 @@ def abc_classification(
         "__rd",
         "__chunk",
         F.sum("__r").over(w_in).alias("__cum_in"),
-    ).localCheckpoint(eager=False)
-    totals = within.groupBy("__chunk").agg(
-        F.max("__cum_in").alias("__ct")
-    ).localCheckpoint(eager=False)
+    )
+    totals = within.groupBy("__chunk").agg(F.max("__cum_in").alias("__ct"))
     offsets = chunk_offsets(totals, ["__ct"])
     tot = totals.agg(F.sum("__ct").alias("__tot"))
     cum = (

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import exprs as E
+from ..functions.lineage import reuse
 from ..operators import relational, windows
 
 
@@ -338,12 +339,8 @@ def engineer_features_split_compat(
     tagged = relational.time_split(
         df, cfg.ts_col, fracs, tiebreak=cfg.id_col, split_col="split"
     )
-    # every downstream window family AND the train-rates branch re-reads
-    # the tagged frame; without a lineage break Catalyst recomputes the
-    # whole global-order split machinery (~5 exchanges) once per branch
-    # (~8x at sf0.1). One executor-side materialization beats eight
-    # recomputes; at 100 TB persist the tagged table instead.
-    tagged = tagged.localCheckpoint(eager=False)
+    # every window family and the train-rates branch share one split pass
+    tagged = reuse(tagged)
     cfg2 = replace(cfg, split_col="split")
     train = tagged.filter(F.col("split") == "train")
     return engineer_features(tagged, cfg2, train=train)

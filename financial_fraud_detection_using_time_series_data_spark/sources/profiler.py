@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.lineage import reuse
 from ..functions.local import local_frame
 
 
@@ -382,11 +383,8 @@ def freshness_lag(
         F.max(ts).alias("__last"),
         F.count(F.lit(1)).cast("long").alias("__n"),
     )
-    # the rollup fans out into three consumers (per-series stats, the
-    # watermark fold, the watermark-day counts); checkpointing the tiny
-    # |series|·|days| frame keeps the corpus scan single instead of
-    # letting Catalyst inline the subtree per branch
-    rolled = rolled.localCheckpoint()
+    # per-series stats, the watermark fold and its day counts share one scan
+    rolled = reuse(rolled)
     per = rolled.groupBy("__s").agg(
         F.max("__last").alias("last_ts"),
         F.sum("__n").cast("long").alias("n_total"),

@@ -210,30 +210,6 @@ def test_pagerank_symmetric_pair_equal_ranks(spark):
     assert out[0].rank == pytest.approx(1.0, rel=1e-9)  # regular graph fixpoint
 
 
-def test_pagerank_checkpoint_cadence_invariant(spark):
-    # lineage checkpoints are a pure execution concern: ranks with the
-    # default 3-round cadence and with checkpointing disabled must be
-    # bit-identical (same plan arithmetic, same fold shapes)
-    rows = []
-    for i, leaf in enumerate([2, 3, 4, 5]):
-        rows.append((1, i, f"v{i}", float(i)))
-        rows.append((leaf, 100 + i, f"v{i}", float(i)))
-    df = _ev(spark, rows)
-    with_ckpt = {
-        r.user_id: r.rank
-        for r in events.pagerank(
-            df, F.col("event_type"), n_iter=7, checkpoint_every=3
-        ).collect()
-    }
-    no_ckpt = {
-        r.user_id: r.rank
-        for r in events.pagerank(
-            df, F.col("event_type"), n_iter=7, checkpoint_every=0
-        ).collect()
-    }
-    assert with_ckpt == no_ckpt
-
-
 # --- gini ------------------------------------------------------------------
 
 

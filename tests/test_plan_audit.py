@@ -1,6 +1,6 @@
 """Registry-wide physical-plan audit: EVERY queries() entry is held to
-the engine's two non-negotiable scale invariants, without executing any
-of them.
+the engine's two non-negotiable scale invariants, without running an
+action on any of them.
 
 - No ``BatchEvalPython``: row-at-a-time Python UDFs are banned from the
   whole surface — Python is allowed only behind Arrow batches
@@ -12,9 +12,11 @@ of them.
   cartesian node anywhere is a 100 TB death sentence even if the local
   test data happens to survive it.
 
-Plans are built (analyzed + physical-planned) but never run, so the
-audit covers all ~160 entries in seconds and every future entry is
-covered automatically the moment it is registered.
+Each entry's plan is built (analyzed + physical-planned), not run by an
+action, and every future entry is covered automatically the moment it
+is registered. Building is not free: every lineage break
+(`functions.lineage.reuse`) plans its frame and runs that frame's
+upstream stages at build time, so an entry with breaks runs jobs here.
 """
 
 import pytest

@@ -83,9 +83,8 @@ def test_sliding_distinct_exact_single_pass_plan(spark, sf_dir):
     captured = []
     orig = DataFrame.localCheckpoint
 
-    # signature-agnostic spy (r12 ADVICE): Spark 4's classic
-    # localCheckpoint also accepts storageLevel, and call sites may go
-    # positional — pass everything through untouched
+    # signature-agnostic spy: Spark 4's classic localCheckpoint also
+    # accepts storageLevel — pass everything through untouched
     def spy(self, *args, **kwargs):
         captured.append(self)
         return orig(self, *args, **kwargs)
@@ -94,11 +93,10 @@ def test_sliding_distinct_exact_single_pass_plan(spark, sf_dir):
         df = sketches.sliding_distinct_exact(ev, "ts", "user_id")
         plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Union" not in plan
-    # first checkpoint inside the operator is the delta frame (assert
-    # it, r12 ADVICE: a reordering against range_chunk's internal
-    # checkpoints would otherwise silently pin the wrong frame); an
-    # executed AdaptiveSparkPlan prints Final + Initial sections, so
-    # count scans in the final section only
+    # the first (and only) break inside the operator is the delta frame;
+    # assert it, so a new break ahead of it cannot silently pin the wrong
+    # frame. An executed AdaptiveSparkPlan prints Final + Initial
+    # sections, so count scans in the final section only
     assert "__delta" in captured[0].columns, captured[0].columns
     dplan = captured[0]._jdf.queryExecution().executedPlan().toString()
     final = dplan.split("== Initial Plan ==")[0]
