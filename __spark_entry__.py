@@ -7712,7 +7712,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank centrality over the shared-exact-amount user graph
     (degree-capped 2..10, C(10,2)-bounded pair emission): 10 fixed
     power-iteration rounds of the unnormalized teleport form, no driver
-    actions, 1-row-agg normalization. Oracle-backed since round 9: each
+    actions, 1-row-agg normalization. Oracle-backed: each
     round's in-contributions fold as 1e-9-grid integer micro-units, so
     every iterate is bit-identical across partitionings and engines and
     the fit replays as a recursive CTE (same contract as `em_weights` /

@@ -30,20 +30,39 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ByteType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+)
 
 from ..functions import exprs as E
 from ..functions.lineage import reuse
 from ..functions.local import fetch_bounded, local_frame
 
 
-# Hybrid small-graph cutoff for the iterative graph operators
-# (pagerank / label_propagation / kcore): graphs whose symmetrized edge
-# list has at most this many rows are solved driver-side — the same
-# production hybrid (and the same 2M default) as
-# `dedup.connected_components`. Module-level so tests can force either
-# path (-1 always takes the distributed rounds).
+# One cutoff T routes the iterative graph operators (pagerank /
+# label_propagation / kcore), the same production hybrid (and the same
+# 2M default) as `dedup.connected_components`:
+# - small input: pagerank and label_propagation fetch the non-NULL
+#   (attr, entity) rows once, bounded at T // 2 rows, and build the
+#   capped edge list on the driver (`_driver_graph`);
+# - larger input whose graph fits (2·|edges| ≤ T symmetric edges):
+#   Spark builds the edge list (`_capped_edges`), one bounded fetch
+#   reads it (`_driver_edges`) and the rounds run on the driver;
+# - otherwise: the distributed rounds.
+# The driver never iterates over more than T symmetric edges, whichever
+# route built them. Module-level so tests can force a route (-1 always
+# takes the distributed rounds).
 _GRAPH_DRIVER_THRESHOLD = 2_000_000
 
 # rounds between lineage breaks in the distributed iterations: a break
@@ -52,18 +71,136 @@ _GRAPH_DRIVER_THRESHOLD = 2_000_000
 _PAGERANK_BREAK_EVERY = 3
 _LABEL_PROP_BREAK_EVERY = 2
 
+# attr types whose driver-side grouping equals Spark's exactly (floats
+# after NaN / -0.0 normalization), plus the default-collation string
+# (grouped by its UTF-8 bytes); any other attr, or a non-integral
+# entity, takes the Spark-built route
+_DRIVER_ATTR_TYPES = (
+    ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType
+)
+_DRIVER_ENTITY_TYPES = (ByteType, ShortType, IntegerType, LongType)
 
-def _driver_edges(edges: DataFrame) -> list | None:
-    """The symmetrized edge list of ``edges`` as (u, v) tuples when it
-    has at most `_GRAPH_DRIVER_THRESHOLD` rows, else None. The list holds
-    every edge in both directions (2·|edges| rows), so the one-direction
-    list is fetched bounded at half the threshold (2·n ≤ T ⟺ n ≤ T // 2)
-    and mirrored here: one Spark job, half the rows."""
+
+def _driver_edges(edges: DataFrame) -> tuple | None:
+    """The undirected edge list ``edges`` (u, v) as two numpy arrays
+    when its symmetrized form (2·|edges| rows) has at most
+    `_GRAPH_DRIVER_THRESHOLD` rows, else None: one Spark job fetches at
+    most T // 2 + 1 rows (2·n ≤ T ⟺ n ≤ T // 2)."""
     table = fetch_bounded(edges, _GRAPH_DRIVER_THRESHOLD // 2)
     if table is None:
         return None
-    us, vs = table.column("u").to_pylist(), table.column("v").to_pylist()
-    return list(zip(us, vs)) + list(zip(vs, us))
+    return table.column("u").to_numpy(), table.column("v").to_numpy()
+
+
+def _group_codes(col: pa.ChunkedArray) -> np.ndarray:
+    """Dense codes of a non-NULL attr column, equal exactly where
+    Spark's grouping keys are equal: every NaN is one group and -0.0
+    groups with 0.0, as `NormalizeFloatingNumbers` makes them."""
+    if pa.types.is_floating(col.type):
+        x = col.to_numpy().astype(np.float64) + 0.0  # -0.0 + 0.0 is 0.0
+        x[np.isnan(x)] = np.nan
+        values = x.view(np.int64)
+    elif pa.types.is_string(col.type):
+        values = np.asarray(col.to_pylist(), dtype=object)
+    else:
+        values = col.to_numpy().astype(np.int64)
+    return np.unique(values, return_inverse=True)[1].astype(np.int64)
+
+
+def _driver_graph(
+    df: DataFrame,
+    attr,
+    entity_col: str,
+    min_degree: int,
+    max_degree: int,
+) -> tuple | None:
+    """`_capped_edges`' exact edge set as numpy arrays (u, v), u < v,
+    built on the driver from one bounded fetch of the non-NULL
+    (attr, entity) rows. None — take the Spark-built route — when there
+    are more than T // 2 rows, when the graph has more than T symmetric
+    edges (or its per-attr pair emission more than T rows), or when the
+    attr / entity types are not grouped here exactly as Spark does.
+
+    The fetch reads the rows through one partition, so ONE job reads at
+    most T // 2 + 1 rows whatever the input's partitioning. Degrees
+    follow `_capped_members`: a NULL entity is one distinct member and
+    counts toward its attr's degree, yet emits no pair (`collect_list`
+    skips NULLs)."""
+    rows = df.select(
+        attr.alias("attr"), F.col(entity_col).alias("u")
+    ).where(F.col("attr").isNotNull())
+    at, ut = rows.schema["attr"].dataType, rows.schema["u"].dataType
+    if not (
+        isinstance(at, _DRIVER_ATTR_TYPES) or at == StringType()
+    ) or not isinstance(ut, _DRIVER_ENTITY_TYPES):
+        return None
+    table = fetch_bounded(rows.coalesce(1), _GRAPH_DRIVER_THRESHOLD // 2)
+    if table is None:
+        return None
+    a = _group_codes(table.column("attr"))
+    null_u = pc.is_null(table.column("u")).to_numpy(zero_copy_only=False)
+    uval = pc.fill_null(table.column("u"), 0).to_numpy().astype(np.int64)
+    # node codes ascend with the entity values, so a pair's smaller code
+    # is `least(x, y)`; the NULL entity takes the code after every node
+    nodes, ucode = np.unique(uval[~null_u], return_inverse=True)
+    n = len(nodes)
+    code = np.full(len(a), n, dtype=np.int64)
+    code[~null_u] = ucode
+    # the distinct (attr, entity) rows, attr-major, entity ascending
+    member = np.unique(a * (n + 1) + code)
+    ga, gu = np.divmod(member, n + 1)
+    _, deg = np.unique(ga, return_counts=True)
+    capped = (deg >= min_degree) & (deg <= max_degree)
+    keep = np.repeat(capped, deg) & (gu < n)
+    ga, gu = ga[keep], gu[keep]
+    _, size = np.unique(ga, return_counts=True)
+    if int((size * (size - 1) // 2).sum()) > _GRAPH_DRIVER_THRESHOLD:
+        return None
+    # every in-group pair: members d apart in the attr-major order
+    lo = [gu[:0]]
+    hi = [gu[:0]]
+    for d in range(1, int(size.max(initial=0))):
+        same = ga[d:] == ga[:-d]
+        lo.append(gu[:-d][same])
+        hi.append(gu[d:][same])
+    edge = np.unique(np.concatenate(lo) * n + np.concatenate(hi))
+    if 2 * len(edge) > _GRAPH_DRIVER_THRESHOLD:
+        return None
+    lo_code, hi_code = np.divmod(edge, max(n, 1))
+    return nodes[lo_code], nodes[hi_code]
+
+
+def _graph_route(
+    df: DataFrame,
+    attr,
+    entity_col: str,
+    min_degree: int,
+    max_degree: int,
+) -> tuple:
+    """``(pairs, edges)`` for the capped shared-attribute graph:
+    ``pairs`` is the (u, v) numpy edge list when the rounds run on the
+    driver, else None; ``edges`` is the Spark-built edge list (None when
+    the driver built the graph). Routes as `_GRAPH_DRIVER_THRESHOLD`
+    says."""
+    pairs = _driver_graph(df, attr, entity_col, min_degree, max_degree)
+    if pairs is not None:
+        return pairs, None
+    # a graph above the threshold reuses what the fetch materialized
+    edges = reuse(_capped_edges(df, attr, entity_col, min_degree, max_degree))
+    return _driver_edges(edges), edges
+
+
+def _symmetric(u: np.ndarray, v: np.ndarray) -> tuple:
+    """(nodes, src, dst): the undirected edge list (u, v) in both
+    directions over dense node indices; ``nodes`` ascends, so index
+    order is value order."""
+    nodes, idx = np.unique(np.concatenate([u, v]), return_inverse=True)
+    idx_u, idx_v = idx[: len(u)], idx[len(u):]
+    return (
+        nodes,
+        np.concatenate([idx_u, idx_v]),
+        np.concatenate([idx_v, idx_u]),
+    )
 
 
 def _capped_members(
@@ -76,17 +213,15 @@ def _capped_members(
     """Shared graph prologue: distinct (attr, entity) pairs restricted
     to attr values held by ``min_degree``..``max_degree`` entities.
 
-    Round-13 shape (guide §2.5 skew): the round-12 window count
-    (`count(*) OVER (PARTITION BY attr)`) had no partial aggregation —
-    a pathological hub attr (a default device ID shared by millions of
-    entities) would funnel ALL its distinct rows through ONE window
-    task before the cap discards it. Degree now comes from a map-side-
-    combined groupBy (the hub key reaches the reducer as ≤ #map-tasks
-    partial counts) semi-joined back onto the SAME distinct frame: the
-    two references share exprIds, so AQE's ReuseExchange executes the
-    corpus distinct once, and the join side is AQE-skew-splittable
-    (windows are not). Membership is the count-in-[min,max] filter
-    either way — bit-identical. Output columns: (attr, u).
+    Degree comes from a map-side-combined groupBy, not a window count
+    (`count(*) OVER (PARTITION BY attr)` has no partial aggregation, so
+    a hub attr — a default device ID shared by millions of entities —
+    would funnel ALL its distinct rows through ONE window task before
+    the cap discards it; here the hub key reaches the reducer as
+    ≤ #map-tasks partial counts). The degree frame is joined back onto
+    the SAME distinct frame: the two references share exprIds, so AQE's
+    ReuseExchange executes the corpus distinct once, and the join side
+    is AQE-skew-splittable (windows are not). Output columns: (attr, u).
     """
     a = df.select(
         attr.alias("attr"), F.col(entity_col).alias("u")
@@ -669,9 +804,9 @@ def pagerank(
     rank frame + one map-side-combined groupBy; the rank frame's lineage
     is broken every `_PAGERANK_BREAK_EVERY` rounds to bound plan depth.
 
-    Graphs whose symmetrized edge list has at most
-    `_GRAPH_DRIVER_THRESHOLD` rows run the same rounds driver-side over
-    one bounded fetch and return a local relation.
+    Small inputs and graphs of at most `_GRAPH_DRIVER_THRESHOLD`
+    symmetric edges run the same rounds on the driver and return a
+    local relation (routes as that constant's comment says).
 
     ORDER-INVARIANT iterates: each round's in-contributions
     fold as 1e-9-grid integer micro-units (floor(rank/outdeg·1e9 + 0.5)
@@ -684,41 +819,34 @@ def pagerank(
     Returns (entity, rank, rank_norm, out_degree) for every node in the
     capped graph.
     """
-    # a graph above the threshold reuses what the fetch materialized
-    edges = reuse(_capped_edges(df, attr, entity_col, min_degree, max_degree))
-
-    # HYBRID driver-iterate path: the capped graph's edge list is
-    # bounded far below the corpus; when it fits the same
-    # driver_threshold contract as `dedup.connected_components`
-    # (~2M symmetrized edges), fetch it once and run the fixed power
-    # iteration in Python — the per-edge contribution floor, the
-    # integer Σ fold, and the rank/normalization float assembly are the
-    # SAME IEEE ops as the distributed aggregates, so the trajectory is
-    # bit-identical (path parity test-pinned). 10×(2 joins + 1 groupBy)
-    # Spark jobs collapse to the one bounded fetch, and the result is a
-    # local relation; graphs above the threshold take the distributed
-    # rounds unchanged.
-    erows = _driver_edges(edges)
-    if erows is not None:
-        odeg: dict = {}
-        for u, _ in erows:
-            odeg[u] = odeg.get(u, 0) + 1
-        rk = {u: 1.0 for u in odeg}
-        for _ in range(n_iter):
-            acc: dict = {}
-            for u, v in erows:
-                cu = math.floor(rk[u] / odeg[u] * 1e9 + 0.5)
-                acc[v] = acc.get(v, 0) + cu
-            base = 1.0 - damping
-            rk = {v: base + damping * (float(s) / 1e9) for v, s in acc.items()}
-        tot = float(sum(math.floor(r * 1e9 + 0.5) for r in rk.values())) / 1e9
+    # HYBRID driver-iterate path (routes at `_GRAPH_DRIVER_THRESHOLD`):
+    # the per-edge contribution floor, the integer Σ fold and the
+    # rank/normalization float assembly are the SAME IEEE and integer
+    # ops as the distributed aggregates, so every iterate is
+    # bit-identical (path parity test-pinned); 10×(2 joins + 1 groupBy)
+    # rounds collapse to numpy arrays and a local relation.
+    pairs, edges = _graph_route(df, attr, entity_col, min_degree, max_degree)
+    if pairs is not None:
+        nodes, src, dst = _symmetric(*pairs)
+        odeg = np.bincount(src, minlength=len(nodes))
+        # in-edges grouped by destination: one integer fold per node
+        # (every node has in-edges in an undirected graph)
+        order = np.argsort(dst, kind="stable")
+        starts = np.flatnonzero(np.diff(dst[order], prepend=-1))
+        src_in = src[order]
+        odeg_in = odeg[src_in]
+        rk = np.ones(len(nodes))
+        for _ in range(n_iter if len(nodes) else 0):
+            cu = np.floor(rk[src_in] / odeg_in * 1e9 + 0.5).astype(np.int64)
+            s_in = np.add.reduceat(cu, starts)
+            rk = (1.0 - damping) + damping * (s_in.astype(np.float64) / 1e9)
+        tot = float(np.floor(rk * 1e9 + 0.5).astype(np.int64).sum()) / 1e9
         ddl = df.schema[entity_col].dataType.simpleString()
-        out_rows = [
-            (u, rk[u], rk[u] / tot, odeg[u]) for u in rk
-        ]
         return local_frame(
             df.sparkSession,
-            out_rows,
+            list(zip(
+                nodes.tolist(), rk.tolist(), (rk / tot).tolist(), odeg.tolist()
+            )),
             f"{entity_col} {ddl}, rank double, rank_norm double, "
             "out_degree long",
         )
@@ -1041,41 +1169,35 @@ def label_propagation(
     against the |nodes| label frame + one (node, label) count + one
     integer-struct argmax — all exact integer arithmetic, no float
     nondeterminism anywhere. The label frame's lineage is broken every
-    `_LABEL_PROP_BREAK_EVERY` rounds to bound plan depth. Graphs
-    whose symmetrized edge list has at most `_GRAPH_DRIVER_THRESHOLD`
-    rows run the same rounds driver-side over one bounded fetch.
+    `_LABEL_PROP_BREAK_EVERY` rounds to bound plan depth. Small inputs
+    and graphs of at most `_GRAPH_DRIVER_THRESHOLD` symmetric edges run
+    the same rounds on the driver and return a local relation (routes
+    as that constant's comment says).
 
     Returns (entity, community, community_size).
     """
-    # a graph above the threshold reuses what the fetch materialized
-    edges = reuse(_capped_edges(df, attr, entity_col, min_degree, max_degree))
-
-    # HYBRID driver-iterate path: same contract as `pagerank` —
+    # HYBRID driver-iterate path (routes at `_GRAPH_DRIVER_THRESHOLD`):
     # synchronous label updates with the (count, smallest-label) argmax
-    # are pure integer ops, identical in Python, so a small graph's
-    # trajectory is bit-identical (path parity test-pinned) while
-    # 5×(join + 2 groupBys) collapse to the one bounded fetch.
-    erows = _driver_edges(edges)
-    if erows is not None:
-        lab = {u: u for u, _ in erows}
-        for _ in range(n_iter):
-            cnt: dict = {}
-            for u, v in erows:
-                key = (u, lab[v])
-                cnt[key] = cnt.get(key, 0) + 1
-            best: dict = {}
-            for (u, label), c in cnt.items():
-                cur = best.get(u)
-                if cur is None or (c, -label) > (cur[0], -cur[1]):
-                    best[u] = (c, label)
-            lab = {u: cl[1] for u, cl in best.items()}
-        sizes: dict = {}
-        for label in lab.values():
-            sizes[label] = sizes.get(label, 0) + 1
+    # are pure integer ops, so a small graph's trajectory is
+    # bit-identical on numpy arrays (path parity test-pinned) while
+    # 5×(join + 2 groupBys) collapse to a local relation. Labels are
+    # node indices, whose order is the entity order.
+    pairs, edges = _graph_route(df, attr, entity_col, min_degree, max_degree)
+    if pairs is not None:
+        nodes, src, dst = _symmetric(*pairs)
+        n = len(nodes)
+        lab = np.arange(n)
+        for _ in range(n_iter if n else 0):
+            key, cnt = np.unique(src * n + lab[dst], return_counts=True)
+            node, label = np.divmod(key, n)
+            # per node, the first of (count desc, label asc)
+            best = np.lexsort((label, -cnt, node))
+            lab = label[best[np.flatnonzero(np.diff(node[best], prepend=-1))]]
+        size = np.bincount(lab, minlength=n)[lab]
         ddl = df.schema[entity_col].dataType.simpleString()
         return local_frame(
             df.sparkSession,
-            [(u, label, sizes[label]) for u, label in lab.items()],
+            list(zip(nodes.tolist(), nodes[lab].tolist(), size.tolist())),
             f"{entity_col} {ddl}, community {ddl}, community_size long",
         )
 
@@ -1209,33 +1331,32 @@ def kcore(
 
     # HYBRID driver peel (same contract as `pagerank` /
     # `connected_components`): the peel is pure integer counting, so a
-    # small graph's fixpoint is identical computed driver-side — one
-    # bounded fetch replaces up-to-max_iter (agg + count + 2 semi-joins)
-    # rounds. Exact loop-state semantics replicated, incl. the
-    # n_alive==prev_n early return and the max_iter fallthrough.
+    # small graph's fixpoint is identical on numpy arrays — one bounded
+    # fetch replaces up-to-max_iter (agg + count + 2 semi-joins) rounds.
+    # Exact loop-state semantics replicated, incl. the n_alive==prev_n
+    # early return and the max_iter fallthrough; a node counts only
+    # while it keeps an edge, as in the grouped degree frame.
     pairs = _driver_edges(edges)
     if pairs is not None:
+        nodes, src, dst = _symmetric(*pairs)
+        k_live = max(k, 1)
         prev_n = None
         for _ in range(max_iter):
-            deg: dict = {}
-            for u, _v in pairs:
-                deg[u] = deg.get(u, 0) + 1
-            alive = {u for u, d in deg.items() if d >= k}
-            n_alive = len(alive)
+            deg = np.bincount(src, minlength=len(nodes))
+            alive = deg >= k_live
+            n_alive = int(alive.sum())
             if n_alive == 0 or n_alive == prev_n:
                 break
             prev_n = n_alive
-            pairs = [
-                (u, v) for u, v in pairs if u in alive and v in alive
-            ]
+            keep = alive[src] & alive[dst]
+            src, dst = src[keep], dst[keep]
         else:
-            deg = {}
-            for u, _v in pairs:
-                deg[u] = deg.get(u, 0) + 1
+            deg = np.bincount(src, minlength=len(nodes))
+        core = np.flatnonzero(deg >= k_live)
         ddl = edges.schema["u"].dataType.simpleString()
         return local_frame(
             edges.sparkSession,
-            [(u, d) for u, d in deg.items() if d >= k],
+            list(zip(nodes[core].tolist(), deg[core].tolist())),
             f"u {ddl}, core_degree long",
         )
 

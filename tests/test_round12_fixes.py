@@ -286,12 +286,11 @@ def test_esd_driver_and_distributed_paths_identical(spark):
 
 
 def test_graph_driver_and_distributed_paths_identical(spark, sf_dir):
-    """Round-12 optimization: `pagerank` / `label_propagation` / `kcore`
-    collect the bounded capped-graph edge list once and iterate
-    driver-side when it fits `_GRAPH_DRIVER_THRESHOLD` (same contract as
-    `dedup.connected_components`). The driver loops replicate the exact
-    integer-grid / argmax / peel arithmetic of the distributed rounds,
-    so both paths must produce bit-identical rows."""
+    """`pagerank` / `label_propagation` / `kcore` iterate driver-side
+    when the capped graph fits `_GRAPH_DRIVER_THRESHOLD` (same contract
+    as `dedup.connected_components`). The driver solves replicate the
+    exact integer-grid / argmax / peel arithmetic of the distributed
+    rounds, so both paths must produce bit-identical rows."""
     import __spark_entry__ as entrymod
     from financial_fraud_detection_using_time_series_data_spark.operators import (
         events as events_ops,

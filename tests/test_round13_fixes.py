@@ -147,3 +147,15 @@ def test_text_checkpoints_stay_bounded(spark, sf_dir):
     for qname in ("tfidf_top_terms", "token_pmi"):
         plan = _plan(spark_entry.queries()[qname](spark, sf_dir))
         assert "ExistingRDD" not in plan, (qname, plan[:2000])
+
+
+def test_tfidf_shuffles_the_corpus_once(spark, sf_dir):
+    """tfidf_top_terms scans documents twice (the corpus, and the doc
+    count) and runs its doc-keyed exchange once: the doc-frequency
+    branch reads the term counts through a reused exchange."""
+    df = spark_entry.queries()["tfidf_top_terms"](spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    assert plan.count("FileScan parquet") == 2, plan
+    assert plan.count("ReusedExchange") == 1, plan
