@@ -55,7 +55,8 @@ from ..functions.local import fetch_bounded, local_frame
 # 2M default) as `dedup.connected_components`:
 # - small input: pagerank and label_propagation fetch the non-NULL
 #   (attr, entity) rows once, bounded at T // 2 rows, and build the
-#   capped edge list on the driver (`_driver_graph`);
+#   capped edge list on the driver (`_driver_graph`); a larger input
+#   pays that read (one task, at most T // 2 + 1 rows) and drops it;
 # - larger input whose graph fits (2·|edges| ≤ T symmetric edges):
 #   Spark builds the edge list (`_capped_edges`), one bounded fetch
 #   reads it (`_driver_edges`) and the rounds run on the driver;
