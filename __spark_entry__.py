@@ -8672,8 +8672,8 @@ UNION ALL SELECT 'snm', 'snm', (SELECT count(*) FROM sn)::BIGINT
 def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dense-backbone extraction: the 3-core of the shared-amount user
     graph (iterative peel until every survivor keeps >= 3 in-core
-    neighbors). Oracle-backed since round 8: the k-core is a CANONICAL
-    fixpoint (peeling order never changes the survivor set — Batagelj &
+    neighbors). Oracle-backed: the k-core is a CANONICAL fixpoint
+    (peeling order never changes the survivor set — Batagelj &
     Zaversnik), so a recursive-CTE peel in DuckDB lands on the identical
     integer (node, degree) rows; exact semantics are additionally pinned
     against brute-force peeling in test_events.py."""

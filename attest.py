@@ -12,9 +12,10 @@ Modes:
   python attest.py sf_dir N|name,name,...
       the first N entries (the driver window is 50), or the named entries
   python attest.py --forced [sf_dir] [name,name,...]
-      the driver-iterate entries with their driver-path thresholds patched
-      to -1, so they run their distributed rounds (default: .scale/sf1.0,
-      built by tools_scale_gen.py, and the eight entries with a driver path)
+      the driver-iterate entries with the driver bound
+      (functions.local.DRIVER_ROWS) set to -1, so they run their
+      distributed rounds (default: .scale/sf1.0, built by
+      tools_scale_gen.py, and the eight entries with a driver path)
 
 Ledgers, written next to this file: a full sweep writes ATTESTATION.md at
 sf0.01 and ATTESTATION_<sf>.md elsewhere; a first-N or named run writes
@@ -38,11 +39,7 @@ import numpy as np
 import pandas as pd
 
 import __spark_entry__ as entrymod
-from financial_fraud_detection_using_time_series_data_spark.operators import (
-    dedup,
-    drift,
-    events,
-)
+from financial_fraud_detection_using_time_series_data_spark.functions import local
 from financial_fraud_detection_using_time_series_data_spark.session import get_spark
 
 TABLES = (
@@ -117,21 +114,9 @@ def attest(
             yield name, status, detail, time.perf_counter() - t0
 
 
-def _patch_default(fn, param: str, value) -> None:
-    """Rewrite one keyword default in-place (module-level gate params)."""
-    code = fn.__code__
-    names = code.co_varnames[: code.co_argcount]
-    defaults = list(fn.__defaults__)
-    idx = names.index(param) - (code.co_argcount - len(defaults))
-    defaults[idx] = value
-    fn.__defaults__ = tuple(defaults)
-
-
 def _force_distributed() -> None:
     """Make every driver-iterate hybrid take its distributed rounds."""
-    events._GRAPH_DRIVER_THRESHOLD = -1
-    _patch_default(drift._esd_iterate, "driver_threshold", -1)
-    _patch_default(dedup.connected_components, "driver_threshold", -1)
+    local.DRIVER_ROWS = -1
 
 
 def main() -> None:
@@ -182,8 +167,9 @@ def main() -> None:
         out_name = f"ATTESTATION_{sf_base}.md"
     summary = " / ".join(f"{n} {s}" for s, n in counts.items())
     forced_note = (
-        "Driver-iterate thresholds were patched to -1 (driver path\n"
-        "unreachable), so every entry below ran its distributed rounds.\n\n"
+        "The driver bound (`functions.local.DRIVER_ROWS`) was set to -1\n"
+        "(driver path unreachable), so every entry below ran its\n"
+        "distributed rounds.\n\n"
         if args.forced
         else ""
     )

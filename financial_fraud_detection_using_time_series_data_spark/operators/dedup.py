@@ -20,6 +20,7 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import local
 from ..functions.exprs import r6
 from ..functions.lineage import reuse
 from ..functions.local import fetch_bounded, local_frame
@@ -718,88 +719,11 @@ def _cc_driver(spark, edges: pa.Table, id_type: str) -> DataFrame:
     )
 
 
-def _cc_star(edges: DataFrame, max_iter: int) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al. 2014,
-    "Connected Components in MapReduce and Beyond", Algorithm 2): the
-    published answer for EXTREME-diameter or giant-component graphs,
-    where min-label propagation's per-round edge×label join keeps the
-    full edge set alive every round. Each alternation REWRITES the edge
-    set toward a star per component, so the working set shrinks as it
-    converges and no per-node label frame is carried at all.
-
-    large-star(u): every strictly-larger neighbor v>u re-attaches to
-    m = min(Γ(u) ∪ {u}). small-star(u): all strictly-smaller neighbors
-    (and u itself) re-attach to m = min of the smaller neighborhood.
-    Both are one groupBy + one join over the current edge set. O(log²)
-    rounds; convergence via an ORDER-INVARIANT strong digest of the
-    canonicalized edge set — (count, Σ xxhash64(src, dst)) — one scalar
-    agg per round. A plain (count, Σsrc, Σdst) triple is NOT a sound
-    fixpoint test (two different edge sets can share endpoint sums,
-    e.g. {(3,1),(5,2)} vs {(5,1),(3,2)}); summing a 64-bit hash of the
-    (src, dst) PAIR makes digest collision between distinct sets
-    astronomically unlikely, so an unchanged digest is a fixpoint.
-
-    Takes the SYMMETRIC deduped edge list (src, dst); returns
-    (node, component) with component = min reachable id, identical to
-    the pointer-jump and driver paths (equivalence test-pinned).
-    """
-    e = edges  # symmetric, distinct, lineage-broken by the caller
-    prev = None
-    for _ in range(max_iter):
-        # ---- large-star: (v, m(u)) for v ∈ Γ(u), v > u ----
-        nbmin = e.groupBy("src").agg(F.min("dst").alias("__mn"))
-        m = F.least(F.col("__mn"), F.col("src"))
-        large = (
-            e.join(nbmin, "src")
-            .where(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("src"), m.alias("dst"))
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-        # re-symmetrize for the small-star pass
-        sym = large.unionAll(
-            large.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct()
-        # ---- small-star: over Γ⁻(u) = {v < u}: (v, m) ∪ {(u, m)} ----
-        smaller = sym.where(F.col("dst") < F.col("src"))
-        nbmin2 = smaller.groupBy("src").agg(F.min("dst").alias("__m2"))
-        attach = (
-            smaller.join(nbmin2, "src")
-            .where(F.col("dst") != F.col("__m2"))
-            .select(F.col("dst").alias("src"), F.col("__m2").alias("dst"))
-        )
-        selfe = nbmin2.select("src", F.col("__m2").alias("dst"))
-        canon = attach.unionAll(selfe).distinct().transform(reuse)
-        stats = canon.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        cur = (stats["n"], stats["h"])
-        e = canon.unionAll(
-            canon.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct().transform(reuse)
-        if prev is not None and cur == prev:
-            break
-        prev = cur
-    # converged edge set is a star per component: each node's component
-    # is the min of itself and its neighbors
-    return (
-        e.groupBy("src")
-        .agg(F.min("dst").alias("__mn"))
-        .select(
-            F.col("src").alias("node"),
-            F.least(F.col("src"), F.col("__mn")).alias("component"),
-        )
-    )
-
-
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    driver_threshold: int = 2_000_000,
-    algorithm: str = "pointer-jump",
 ) -> DataFrame:
     """Collapse near-dup PAIRS into duplicate CLUSTERS: (node, component)
     where component = min node id reachable through the pair graph — the
@@ -812,31 +736,26 @@ def connected_components(
     step squares the propagation distance, so rounds are O(log diameter)
     instead of O(diameter). Pure joins + groupBy, no graph library.
     The label frame's lineage is broken each round (`reuse`; the plan
-    would otherwise double per iteration). At extreme scale the
-    large-star/small-star edge rewriting (Kiveris et al. 2014) also
-    shrinks the EDGE set per round; dedup graphs rarely need it — pass
-    ``algorithm="star"`` to opt in for extreme-diameter /
-    giant-component graphs (the published 100 TB answer; equivalence to
-    this path is test-pinned on a planted-cluster corpus).
+    would otherwise double per iteration).
 
     Convergence detection exploits monotonicity: every node's label is
     non-increasing across rounds (least of own/neighbors, then the jump
     target's label ≤ the label itself), so Σ labels strictly decreases
     until the fixpoint — one tiny sum-aggregate per round on the
     already-broken frame (decimal(38,0): no int64 overflow at any
-    node count) replaces the join+count convergence job the earlier
-    version paid, which cost as much as the propagation it guarded.
+    node count) replaces a join+count convergence job, which would cost
+    as much as the propagation it guards.
 
     HYBRID small-graph path: upstream pair emission (LSH bucket caps,
     ring degree caps) bounds the edge list far below the corpus size; if
-    the deduped symmetric edge list has ≤ ``driver_threshold`` rows (~2M
+    the deduped symmetric edge list has ≤ `local.DRIVER_ROWS` rows (~2M
     edges ≈ tens of MB), a driver union-find with path halving replaces
     the whole iterative phase — ~10 Spark jobs become the one bounded
     fetch that also decides the path, and the result is a local
-    relation. Graphs above the threshold take the distributed rounds
-    unchanged, over the edge blocks the fetch filled. This is the
-    standard production hybrid (small-graph solve-local, big-graph
-    iterate) — not a local[32]-only shortcut.
+    relation. Larger graphs take the distributed rounds unchanged, over
+    the edge blocks the fetch filled. This is the standard production
+    hybrid (small-graph solve-local, big-graph iterate) — not a
+    local[32]-only shortcut.
     """
     # the fetch fills it; every distributed round reuses it, not the pair generation
     edges = (
@@ -845,14 +764,7 @@ def connected_components(
         .distinct()
         .transform(reuse)
     )
-    if algorithm == "star":
-        return _cc_star(edges, max_iter)
-    if algorithm != "pointer-jump":
-        raise ValueError(
-            f"connected_components: unknown algorithm {algorithm!r} "
-            "(expected 'pointer-jump' or 'star')"
-        )
-    table = fetch_bounded(edges, driver_threshold)
+    table = fetch_bounded(edges, local.DRIVER_ROWS)
     if table is not None:
         id_type = edges.schema["src"].dataType.simpleString()
         return _cc_driver(pairs.sparkSession, table, id_type)

@@ -21,6 +21,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import local
 from ..functions.lineage import reuse
 from ..functions.local import fetch_bounded, local_frame
 
@@ -1858,12 +1859,11 @@ def gesd_outliers(
 
     Scale shape: ONE corpus-sized groupBy collapses to the per-(series,
     bucket) rollup (bounded by series × time span, the hour-grid
-    family contract). A rollup of at most ~2M rows (`_esd_iterate`'s
-    ``driver_threshold``) is fetched once and every round runs
-    driver-side; a larger one runs each round as one map-side-combined
-    aggregate over the lineage-broken rollup, collected at
-    |series| rows, with the removals applied as one broadcast anti-join
-    — no window, no growing plan.
+    family contract). A rollup of at most `local.DRIVER_ROWS` rows is
+    fetched once and every round runs driver-side; a larger one runs
+    each round as one map-side-combined aggregate over the
+    lineage-broken rollup, collected at |series| rows, with the removals
+    applied as one broadcast anti-join — no window, no growing plan.
     """
     if not 1 <= int(k) <= 20:
         raise ValueError(f"gesd_outliers: k={k} outside 1..20")
@@ -1894,7 +1894,6 @@ def _esd_iterate(
     value_name: str,
     k: int,
     z_crit: float,
-    driver_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Shared k-round ESD engine over a prepared (__s, __us, __q)
     nano-unit rollup (see `gesd_outliers` for the contract; reused by
@@ -1911,16 +1910,15 @@ def _esd_iterate(
     # aggregate JOB per round over the broken rollup — k Spark jobs for
     # what is, after the one corpus groupBy, pure bounded-frame
     # arithmetic. When the rollup
-    # is small (|series|·|buckets| ≤ ~2M rows, the same driver_threshold
-    # contract as `dedup.connected_components`), fetch it ONCE and run
-    # every round in Python with exact integers: the per-round per-series
-    # stats (n, Σq, Σq², max/min with bucket tie-breaks) are integer
-    # folds, identical to the Spark aggregates, and the μ/σ/R float
-    # assembly is the SAME code in both paths — the trajectory is
-    # bit-identical (oracle-hash attested at sf0.01/sf0.1 and pinned by
-    # tests/test_round12_fixes.py). Rollups above the threshold take the
+    # is small (|series|·|buckets| ≤ `local.DRIVER_ROWS` rows), fetch it
+    # ONCE and run every round in Python with exact integers: the
+    # per-round per-series stats (n, Σq, Σq², max/min with bucket
+    # tie-breaks) are integer folds, identical to the Spark aggregates,
+    # and the μ/σ/R float assembly is the SAME code in both paths — the
+    # trajectory is bit-identical (oracle-hash attested at sf0.01/sf0.1
+    # and pinned by tests/test_round12_fixes.py). Larger rollups take the
     # distributed per-round loop over the blocks the fetch filled.
-    table = fetch_bounded(rolled, driver_threshold)
+    table = fetch_bounded(rolled, local.DRIVER_ROWS)
     if table is not None:
         per_series: dict = {}
         for s, us, q in zip(

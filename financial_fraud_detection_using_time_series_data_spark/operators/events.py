@@ -46,25 +46,10 @@ from pyspark.sql.types import (
 )
 
 from ..functions import exprs as E
+from ..functions import local
 from ..functions.lineage import reuse
 from ..functions.local import fetch_bounded, local_frame
 
-
-# One cutoff T routes the iterative graph operators (pagerank /
-# label_propagation / kcore), the same production hybrid (and the same
-# 2M default) as `dedup.connected_components`:
-# - small input: pagerank and label_propagation fetch the non-NULL
-#   (attr, entity) rows once, bounded at T // 2 rows, and build the
-#   capped edge list on the driver (`_driver_graph`); a larger input
-#   pays that read (one task, at most T // 2 + 1 rows) and drops it;
-# - larger input whose graph fits (2·|edges| ≤ T symmetric edges):
-#   Spark builds the edge list (`_capped_edges`), one bounded fetch
-#   reads it (`_driver_edges`) and the rounds run on the driver;
-# - otherwise: the distributed rounds.
-# The driver never iterates over more than T symmetric edges, whichever
-# route built them. Module-level so tests can force a route (-1 always
-# takes the distributed rounds).
-_GRAPH_DRIVER_THRESHOLD = 2_000_000
 
 # rounds between lineage breaks in the distributed iterations: a break
 # bounds the plan depth of the next round and costs one job for the
@@ -85,9 +70,9 @@ _DRIVER_ENTITY_TYPES = (ByteType, ShortType, IntegerType, LongType)
 def _driver_edges(edges: DataFrame) -> tuple | None:
     """The undirected edge list ``edges`` (u, v) as two numpy arrays
     when its symmetrized form (2·|edges| rows) has at most
-    `_GRAPH_DRIVER_THRESHOLD` rows, else None: one Spark job fetches at
+    T = `local.DRIVER_ROWS` rows, else None: one Spark job fetches at
     most T // 2 + 1 rows (2·n ≤ T ⟺ n ≤ T // 2)."""
-    table = fetch_bounded(edges, _GRAPH_DRIVER_THRESHOLD // 2)
+    table = fetch_bounded(edges, local.DRIVER_ROWS // 2)
     if table is None:
         return None
     return table.column("u").to_numpy(), table.column("v").to_numpy()
@@ -117,10 +102,11 @@ def _driver_graph(
 ) -> tuple | None:
     """`_capped_edges`' exact edge set as numpy arrays (u, v), u < v,
     built on the driver from one bounded fetch of the non-NULL
-    (attr, entity) rows. None — take the Spark-built route — when there
-    are more than T // 2 rows, when the graph has more than T symmetric
-    edges (or its per-attr pair emission more than T rows), or when the
-    attr / entity types are not grouped here exactly as Spark does.
+    (attr, entity) rows. With T = `local.DRIVER_ROWS`: None — take the
+    Spark-built route — when there are more than T // 2 rows, when the
+    graph has more than T symmetric edges (or its per-attr pair emission
+    more than T rows), or when the attr / entity types are not grouped
+    here exactly as Spark does.
 
     The fetch reads the rows through one partition, so ONE job reads at
     most T // 2 + 1 rows whatever the input's partitioning. Degrees
@@ -135,7 +121,7 @@ def _driver_graph(
         isinstance(at, _DRIVER_ATTR_TYPES) or at == StringType()
     ) or not isinstance(ut, _DRIVER_ENTITY_TYPES):
         return None
-    table = fetch_bounded(rows.coalesce(1), _GRAPH_DRIVER_THRESHOLD // 2)
+    table = fetch_bounded(rows.coalesce(1), local.DRIVER_ROWS // 2)
     if table is None:
         return None
     a = _group_codes(table.column("attr"))
@@ -155,7 +141,7 @@ def _driver_graph(
     keep = np.repeat(capped, deg) & (gu < n)
     ga, gu = ga[keep], gu[keep]
     _, size = np.unique(ga, return_counts=True)
-    if int((size * (size - 1) // 2).sum()) > _GRAPH_DRIVER_THRESHOLD:
+    if int((size * (size - 1) // 2).sum()) > local.DRIVER_ROWS:
         return None
     # every in-group pair: members d apart in the attr-major order
     lo = [gu[:0]]
@@ -165,7 +151,7 @@ def _driver_graph(
         lo.append(gu[:-d][same])
         hi.append(gu[d:][same])
     edge = np.unique(np.concatenate(lo) * n + np.concatenate(hi))
-    if 2 * len(edge) > _GRAPH_DRIVER_THRESHOLD:
+    if 2 * len(edge) > local.DRIVER_ROWS:
         return None
     lo_code, hi_code = np.divmod(edge, max(n, 1))
     return nodes[lo_code], nodes[hi_code]
@@ -181,12 +167,12 @@ def _graph_route(
     """``(pairs, edges)`` for the capped shared-attribute graph:
     ``pairs`` is the (u, v) numpy edge list when the rounds run on the
     driver, else None; ``edges`` is the Spark-built edge list (None when
-    the driver built the graph). Routes as `_GRAPH_DRIVER_THRESHOLD`
-    says."""
+    the driver built the graph). Routes as the comment on
+    `local.DRIVER_ROWS` says."""
     pairs = _driver_graph(df, attr, entity_col, min_degree, max_degree)
     if pairs is not None:
         return pairs, None
-    # a graph above the threshold reuses what the fetch materialized
+    # a graph above the bound reuses what the fetch materialized
     edges = reuse(_capped_edges(df, attr, entity_col, min_degree, max_degree))
     return _driver_edges(edges), edges
 
@@ -805,9 +791,9 @@ def pagerank(
     rank frame + one map-side-combined groupBy; the rank frame's lineage
     is broken every `_PAGERANK_BREAK_EVERY` rounds to bound plan depth.
 
-    Small inputs and graphs of at most `_GRAPH_DRIVER_THRESHOLD`
-    symmetric edges run the same rounds on the driver and return a
-    local relation (routes as that constant's comment says).
+    Small inputs and graphs of at most `local.DRIVER_ROWS` symmetric
+    edges run the same rounds on the driver and return a local relation
+    (routes as that constant's comment says).
 
     ORDER-INVARIANT iterates: each round's in-contributions
     fold as 1e-9-grid integer micro-units (floor(rank/outdeg·1e9 + 0.5)
@@ -820,7 +806,7 @@ def pagerank(
     Returns (entity, rank, rank_norm, out_degree) for every node in the
     capped graph.
     """
-    # HYBRID driver-iterate path (routes at `_GRAPH_DRIVER_THRESHOLD`):
+    # HYBRID driver-iterate path (routes at `local.DRIVER_ROWS`):
     # the per-edge contribution floor, the integer Σ fold and the
     # rank/normalization float assembly are the SAME IEEE and integer
     # ops as the distributed aggregates, so every iterate is
@@ -1171,13 +1157,13 @@ def label_propagation(
     integer-struct argmax — all exact integer arithmetic, no float
     nondeterminism anywhere. The label frame's lineage is broken every
     `_LABEL_PROP_BREAK_EVERY` rounds to bound plan depth. Small inputs
-    and graphs of at most `_GRAPH_DRIVER_THRESHOLD` symmetric edges run
-    the same rounds on the driver and return a local relation (routes
-    as that constant's comment says).
+    and graphs of at most `local.DRIVER_ROWS` symmetric edges run the
+    same rounds on the driver and return a local relation (routes as
+    that constant's comment says).
 
     Returns (entity, community, community_size).
     """
-    # HYBRID driver-iterate path (routes at `_GRAPH_DRIVER_THRESHOLD`):
+    # HYBRID driver-iterate path (routes at `local.DRIVER_ROWS`):
     # synchronous label updates with the (count, smallest-label) argmax
     # are pure integer ops, so a small graph's trajectory is
     # bit-identical on numpy arrays (path parity test-pinned) while
@@ -1322,14 +1308,13 @@ def kcore(
     degeneracy ordering depth — tiny for capped fraud graphs; at
     extreme scale each round is shuffle-bounded by the CURRENT core,
     which only shrinks. Graphs whose symmetrized edge list has at most
-    `_GRAPH_DRIVER_THRESHOLD` rows peel driver-side over one bounded
-    fetch and return a local relation.
+    `local.DRIVER_ROWS` rows peel driver-side over one bounded fetch and
+    return a local relation. ``edges`` should be lineage-broken, as
+    `shared_attr_edges` returns it: the fetch and the distributed rounds
+    both read it.
 
     Returns surviving nodes with their within-core degree.
     """
-    # a graph above the threshold reuses what the fetch materialized
-    edges = reuse(edges)
-
     # HYBRID driver peel (same contract as `pagerank` /
     # `connected_components`): the peel is pure integer counting, so a
     # small graph's fixpoint is identical on numpy arrays — one bounded

@@ -3,6 +3,7 @@
 
 from pyspark.sql import functions as F
 
+from financial_fraud_detection_using_time_series_data_spark.functions import local
 from financial_fraud_detection_using_time_series_data_spark.operators import dedup
 from financial_fraud_detection_using_time_series_data_spark.sources import load_table
 
@@ -29,7 +30,7 @@ def test_lsh_dedup_recall_and_exactness(spark, sf_dir):
     assert recall >= 0.6, f"recall {recall:.2f} below floor ({len(lsh)}/{len(exact)})"
 
 
-def test_connected_components_chain_and_islands(spark):
+def test_connected_components_chain_and_islands(spark, monkeypatch):
     """A 6-node chain (diameter 5 — forces multiple propagation rounds)
     plus a separate 2-node island must collapse to min-id components."""
     pairs = spark.createDataFrame(
@@ -44,11 +45,9 @@ def test_connected_components_chain_and_islands(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 6: 1, 10: 10, 11: 10}
     # both engine paths must agree: driver union-find (default here, the
     # edge list is tiny) and the distributed min-label iterations
-    # (forced via driver_threshold=0)
-    dist = {
-        r.node: r.component
-        for r in connected_components(pairs, driver_threshold=0).collect()
-    }
+    # (forced via DRIVER_ROWS = -1)
+    monkeypatch.setattr(local, "DRIVER_ROWS", -1)
+    dist = {r.node: r.component for r in connected_components(pairs).collect()}
     assert dist == got
 
 
@@ -174,41 +173,32 @@ def test_simhash_near_dup_identical_docs_and_no_dup_pairs(spark):
     assert all(r.hamming == 0 for r in pairs)
 
 
-def test_connected_components_star_matches_pointer_jump(spark):
-    """Round-8 flag (VERDICT r07 #8): the large-star/small-star edge
-    rewriting (Kiveris et al.) must produce identical (node, component)
-    labels to the pointer-jump and driver union-find paths on a planted
-    corpus mixing a long chain (diameter stress), a dense clique, a star,
-    and 2-node islands."""
-    from financial_fraud_detection_using_time_series_data_spark.operators.dedup import (
-        connected_components,
-    )
-
-    pairs = []
-    # 40-node chain: 100..139
-    pairs += [(100 + i, 101 + i) for i in range(39)]
-    # 12-node clique: 200..211
-    pairs += [(200 + i, 200 + j) for i in range(12) for j in range(i + 1, 12)]
-    # star: hub 300, leaves 301..320
-    pairs += [(300, 300 + i) for i in range(1, 21)]
-    # islands
-    pairs += [(400, 401), (500, 501)]
+def _components(spark, pairs: list) -> dict:
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    return {r.node: r.component for r in dedup.connected_components(df).collect()}
 
-    star = {
-        r.node: r.component
-        for r in connected_components(df, algorithm="star").collect()
-    }
-    jump = {
-        r.node: r.component
-        for r in connected_components(df, driver_threshold=0).collect()
-    }
-    drv = {r.node: r.component for r in connected_components(df).collect()}
-    assert star == jump == drv
-    assert star[139] == 100 and star[211] == 200 and star[320] == 300
 
-    # unknown algorithm name is a clear error, not silent fallback
-    import pytest as _pytest
+def test_connected_components_pointer_jump_matches_driver_union_find(
+    spark, monkeypatch
+):
+    """The distributed pointer-jump rounds and the driver union-find give
+    identical (node, component) labels on two planted corpora: a long
+    chain (diameter stress), a dense clique, a star and 2-node islands;
+    and a 0-9 path plus a 100-101 pair."""
+    planted = []
+    # 40-node chain: 100..139
+    planted += [(100 + i, 101 + i) for i in range(39)]
+    # 12-node clique: 200..211
+    planted += [(200 + i, 200 + j) for i in range(12) for j in range(i + 1, 12)]
+    # star: hub 300, leaves 301..320
+    planted += [(300, 300 + i) for i in range(1, 21)]
+    # islands
+    planted += [(400, 401), (500, 501)]
+    path = [(i, i + 1) for i in range(9)] + [(100, 101)]
 
-    with _pytest.raises(ValueError, match="algorithm"):
-        connected_components(df, algorithm="banana")
+    drv = [_components(spark, planted), _components(spark, path)]
+    monkeypatch.setattr(local, "DRIVER_ROWS", -1)
+    jump = [_components(spark, planted), _components(spark, path)]
+    assert jump == drv
+    assert drv[0][139] == 100 and drv[0][211] == 200 and drv[0][320] == 300
+    assert drv[1] == {i: 0 for i in range(10)} | {100: 100, 101: 100}

@@ -4,8 +4,9 @@
 from one bounded fetch of the (attr, entity) rows. These tests pin its
 edge-set parity with the Spark construction on adversarial rows, the
 types it leaves to Spark, its two bounds (T // 2 raw rows, T symmetric
-edges), that the fetch is one job reading one partition, and that the
-driver-build and Spark-build routes return bit-identical rows.
+edges, with T = `local.DRIVER_ROWS`), that the fetch is one job reading
+one partition, and that the driver-build and Spark-build routes return
+bit-identical rows.
 """
 
 from __future__ import annotations
@@ -16,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
+from financial_fraud_detection_using_time_series_data_spark.functions import local
 from financial_fraud_detection_using_time_series_data_spark.operators import (
     events as events_ops,
 )
@@ -102,7 +104,7 @@ def _pair_rows(n_rows: int) -> list:
 def test_driver_graph_raw_row_bound(spark, monkeypatch):
     """The fetch takes at most T // 2 rows: T // 2 rows build, one more
     takes the Spark route."""
-    monkeypatch.setattr(events_ops, "_GRAPH_DRIVER_THRESHOLD", 12)
+    monkeypatch.setattr(local, "DRIVER_ROWS", 12)
     fits = spark.createDataFrame(_pair_rows(6), "attr double, u long")
     over = spark.createDataFrame(_pair_rows(7), "attr double, u long")
     assert _edge_set(
@@ -117,9 +119,9 @@ def test_driver_graph_symmetric_edge_bound(spark, monkeypatch):
     df = spark.createDataFrame(
         [(1.0, u) for u in range(4)], "attr double, u long"
     )
-    monkeypatch.setattr(events_ops, "_GRAPH_DRIVER_THRESHOLD", 12)
+    monkeypatch.setattr(local, "DRIVER_ROWS", 12)
     assert len(events_ops._driver_graph(df, F.col("attr"), "u", 2, 4)[0]) == 6
-    monkeypatch.setattr(events_ops, "_GRAPH_DRIVER_THRESHOLD", 11)
+    monkeypatch.setattr(local, "DRIVER_ROWS", 11)
     assert events_ops._driver_graph(df, F.col("attr"), "u", 2, 4) is None
 
 
@@ -135,7 +137,7 @@ def test_driver_graph_probe_is_one_job_on_one_partition(
     ).repartition(4).write.parquet(path)
     df = spark.read.parquet(path)
     assert df.rdd.getNumPartitions() == 4
-    monkeypatch.setattr(events_ops, "_GRAPH_DRIVER_THRESHOLD", 20)
+    monkeypatch.setattr(local, "DRIVER_ROWS", 20)
     sc = spark.sparkContext
     group = "graph-probe-bound"
     spark.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
@@ -184,7 +186,7 @@ def test_graph_driver_build_and_spark_build_identical(
         fn = entrymod.queries()[name]
         rows = []
         for cutoff, spark_built in ((2_000_000, False), (middle, True)):
-            monkeypatch.setattr(events_ops, "_GRAPH_DRIVER_THRESHOLD", cutoff)
+            monkeypatch.setattr(local, "DRIVER_ROWS", cutoff)
             spark_builds.clear()
             rows.append(sorted(tuple(r) for r in fn(spark, sf_dir).collect()))
             assert bool(spark_builds) == spark_built, (name, cutoff)

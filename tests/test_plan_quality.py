@@ -502,16 +502,16 @@ def test_plan_metrics_census_and_gate(spark, sf_dir):
     assert mm["pushed_filters"] == 1
 
 
-def test_pagerank_normalization_has_no_window(spark, sf_dir):
-    """Round-8 fix (VERDICT r07 #2): pagerank's rank_norm is a 1-row agg
-    broadcast back onto the |nodes| rank frame, NOT a partitionless
-    window — the rank frame is corpus-scale for a near-unique entity
-    column, so any Window node in this plan is a 100 TB funnel."""
-    from financial_fraud_detection_using_time_series_data_spark.operators import (
-        events as events_ops,
+def test_pagerank_normalization_has_no_window(spark, sf_dir, monkeypatch):
+    """pagerank's rank_norm is a 1-row agg broadcast back onto the
+    |nodes| rank frame, NOT a partitionless window — the rank frame is
+    corpus-scale for a near-unique entity column, so any Window node in
+    this plan is a 100 TB funnel."""
+    from financial_fraud_detection_using_time_series_data_spark.functions import (
+        local,
     )
 
-    # default path at test scale is the round-12 driver-iterate hybrid:
+    # default path at test scale is the driver-iterate hybrid:
     # a local relation — trivially no Window, no shuffle at all
     df = spark_entry.q_pagerank(spark, sf_dir)
     plan = _plan(df)
@@ -519,12 +519,8 @@ def test_pagerank_normalization_has_no_window(spark, sf_dir):
 
     # force the DISTRIBUTED rounds (the 100 TB path) and pin its shape:
     # rank_norm via 1-row broadcast agg, never a partitionless window
-    saved = events_ops._GRAPH_DRIVER_THRESHOLD
-    events_ops._GRAPH_DRIVER_THRESHOLD = -1
-    try:
-        dplan = _plan(spark_entry.q_pagerank(spark, sf_dir))
-    finally:
-        events_ops._GRAPH_DRIVER_THRESHOLD = saved
+    monkeypatch.setattr(local, "DRIVER_ROWS", -1)
+    dplan = _plan(spark_entry.q_pagerank(spark, sf_dir))
     assert "Window" not in dplan, dplan
     assert "BroadcastNestedLoopJoin" in dplan or "BroadcastExchange" in dplan
 

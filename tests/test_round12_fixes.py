@@ -22,6 +22,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
+from financial_fraud_detection_using_time_series_data_spark.functions import local
 from financial_fraud_detection_using_time_series_data_spark.operators import (
     behavior,
     drift,
@@ -247,19 +248,20 @@ def test_esd_decimal_sum_headroom(spark):
     assert out[0]["flagged"]
 
 
-def test_esd_driver_and_distributed_paths_identical(spark):
-    """Round-12 optimization: `_esd_iterate` collects the bounded
-    rollup once and iterates driver-side when it fits (k+1 Spark jobs
-    -> 2). The two paths must produce bit-identical trajectories —
-    including negative totals, exact extreme-value tie-breaks, and a
-    series that shrinks to n <= 3 mid-run."""
+def test_esd_driver_and_distributed_paths_identical(spark, monkeypatch):
+    """`_esd_iterate` collects the bounded rollup once and iterates
+    driver-side when it fits (k+1 Spark jobs -> 2). The two paths must
+    produce bit-identical trajectories — including negative totals,
+    exact extreme-value tie-breaks, and a series that shrinks to n <= 3
+    mid-run."""
     vals = [10.0, -50.0, 10.5, 400.0, 10.0, 10.25, -3.0, 10.0, 399.0, 10.0]
     ev = _hourly_events(spark, vals, series="a")
     ev2 = _hourly_events(spark, [5.0, 5.0, 80.0, 5.0, 5.5], series="b",
                          start_id=100)
     both = ev.unionByName(ev2)
 
-    def run(threshold):
+    def run(bound):
+        monkeypatch.setattr(local, "DRIVER_ROWS", bound)
         rolled = (
             both.groupBy(
                 F.col("event_type").alias("__s"),
@@ -273,37 +275,30 @@ def test_esd_driver_and_distributed_paths_identical(spark):
             )
         )
         out = drift._esd_iterate(
-            spark, rolled, "event_type", "string", "x", 5, 3.0,
-            driver_threshold=threshold,
+            spark, rolled, "event_type", "string", "x", 5, 3.0
         )
         return sorted(
             tuple(r) for r in out.collect()
         )
 
     driver_rows = run(2_000_000)     # driver path (rollup is tiny)
-    dist_rows = run(0)               # force the distributed per-round loop
+    dist_rows = run(-1)              # force the distributed per-round loop
     assert driver_rows == dist_rows
 
 
-def test_graph_driver_and_distributed_paths_identical(spark, sf_dir):
+def test_graph_driver_and_distributed_paths_identical(
+    spark, sf_dir, monkeypatch
+):
     """`pagerank` / `label_propagation` / `kcore` iterate driver-side
-    when the capped graph fits `_GRAPH_DRIVER_THRESHOLD` (same contract
-    as `dedup.connected_components`). The driver solves replicate the
-    exact integer-grid / argmax / peel arithmetic of the distributed
-    rounds, so both paths must produce bit-identical rows."""
-    import __spark_entry__ as entrymod
-    from financial_fraud_detection_using_time_series_data_spark.operators import (
-        events as events_ops,
-    )
-
+    when the capped graph fits `local.DRIVER_ROWS` (the bound every
+    hybrid reads). The driver solves replicate the exact integer-grid /
+    argmax / peel arithmetic of the distributed rounds, so both paths
+    must produce bit-identical rows."""
     for qname in ("pagerank", "label_propagation", "kcore"):
         fn = entrymod.queries()[qname]
         driver_rows = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
-        saved = events_ops._GRAPH_DRIVER_THRESHOLD
-        events_ops._GRAPH_DRIVER_THRESHOLD = -1
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(local, "DRIVER_ROWS", -1)
             dist_rows = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
-        finally:
-            events_ops._GRAPH_DRIVER_THRESHOLD = saved
         assert driver_rows == dist_rows, qname
         assert len(driver_rows) > 0, qname

@@ -1,7 +1,6 @@
-"""Round-9 fixes: grain-derived forecast baselines, sound star-CC
-convergence digest, retrieval-metrics k guard, grain-derived seasonal
-phase, near-singular Markov-attribution fallback, MMR pool cap, and the
-scale-refining linkage blocking key."""
+"""Pinned fixes: grain-derived forecast baselines, retrieval-metrics k
+guard, grain-derived seasonal phase, near-singular Markov-attribution
+fallback, MMR pool cap, and the scale-refining linkage blocking key."""
 
 import datetime as dt
 
@@ -9,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from financial_fraud_detection_using_time_series_data_spark.operators import (
-    dedup,
     drift,
     events,
     forecast,
@@ -55,22 +53,6 @@ def test_forecast_accuracy_rejects_unknown_bucket(spark):
     df = _hourly_events(spark)
     with pytest.raises(ValueError, match="unsupported bucket"):
         forecast.forecast_accuracy(df, bucket="fortnight")
-
-
-def test_cc_star_endpoint_sum_collision_converges_correctly(spark):
-    """The round-8 certificate (count, sum src, sum dst) could not tell
-    {(3,1),(5,2)} from {(5,1),(3,2)} — build a path graph whose star
-    rewrites pass through endpoint-sum-preserving states and assert the
-    star path still lands on the exact min-label components."""
-    # long path 0-1-2-...-9 plus a second component 100-101
-    edges = [(i, i + 1) for i in range(9)] + [(100, 101)]
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    out = dedup.connected_components(
-        pairs, "id_a", "id_b", algorithm="star", driver_threshold=0
-    )
-    got = {(r["node"], r["component"]) for r in out.collect()}
-    want = {(i, 0) for i in range(10)} | {(100, 100), (101, 100)}
-    assert got == want
 
 
 def test_retrieval_metrics_rejects_k_beyond_discount_table(spark):
